@@ -36,6 +36,11 @@ def _norm(textcol: Column) -> Column:
     return F.trim(F.regexp_replace(F.lower(textcol), r"\s+", " "))
 
 
+def _q(name: str) -> str:
+    """Backtick-quote a column name for SQL expression text."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 _MERSENNE_P = (1 << 31) - 1
 
 
@@ -103,14 +108,22 @@ def shingle_sets(
     so the ``transform`` lambda slices a BOUND token array instead of
     re-running the tokenizer per shingle (CollapseProject keeps the
     split because it is expensive and multiply-referenced). Measured
-    at sf0.1: 7.3s -> 0.97s single-task for the same 260k shingles."""
-    norm = _norm(F.col(textcol))
-    toked = df.select(
-        F.col(idcol), norm.alias("__norm__"), _tokens(norm).alias("__toks__")
+    at sf0.1: 7.3s -> 0.97s single-task for the same 260k shingles.
+
+    Both projections are built from SQL text (``selectExpr``), the
+    same expressions as :func:`_norm` / :func:`_shingles_from_toks`:
+    one py4j round trip per projection instead of one per ``Column``
+    node — the micro-batch gates build this plan every trigger."""
+    idq = _q(idcol)
+    norm = rf"trim(regexp_replace(lower({_q(textcol)}), '\\s+', ' '))"
+    toked = df.selectExpr(
+        idq, f"{norm} AS __norm__", rf"split(trim({norm}), '\\s+') AS __toks__"
     )
-    return toked.select(
-        F.col(idcol),
-        _shingles_from_toks(F.col("__norm__"), F.col("__toks__"), k).alias(out),
+    return toked.selectExpr(
+        idq,
+        f"array_distinct(CASE WHEN size(__toks__) >= {k} THEN transform("
+        f"sequence(1, size(__toks__) - {k - 1}), __i -> concat_ws(' ', "
+        f"slice(__toks__, __i, {k}))) ELSE array(__norm__) END) AS {_q(out)}",
     )
 
 
@@ -465,27 +478,28 @@ def _minhash_sig_table(
     shcol: str = "shingles",
 ) -> DataFrame:
     """(``__mh_id__``, signature array) from a ``shingle_sets`` frame —
-    the explode + one-partial-agg core of ``minhash_signature``."""
-    base = F.conv(F.substring(F.md5("__s__"), 1, 15), 16, 10).cast("bigint").bitwiseAND(
-        F.lit((1 << 31) - 1)
+    the explode + one-partial-agg core of ``minhash_signature``.
+
+    The ``num_hashes`` mins are ONE SQL-text aggregate expression
+    (``array(min(..), ..)``), so building the plan costs a fixed number
+    of py4j round trips whatever ``num_hashes`` is; a ``Column`` per
+    hash would cost about 7 round trips each, every micro-batch of the
+    streaming gate."""
+    mins = ", ".join(
+        f"min(({a} * __b__ + {c}) % {_MERSENNE_P})"
+        for a, c in _minhash_coeffs(num_hashes)
     )
-    sh = shingles.select(
-        F.col(idcol).alias("__mh_id__"),
-        F.explode(F.col(shcol)).alias("__s__"),
-    ).withColumn("__b__", base)
-    aggs = [
-        F.min(
-            (F.lit(a) * F.col("__b__") + F.lit(c)) % F.lit(_MERSENNE_P)
-        ).alias(f"__m{i}__")
-        for i, (a, c) in enumerate(_minhash_coeffs(num_hashes))
-    ]
     return (
-        sh.groupBy("__mh_id__")
-        .agg(*aggs)
-        .select(
-            "__mh_id__",
-            F.array(*[F.col(f"__m{i}__") for i in range(num_hashes)]).alias(out),
+        shingles.selectExpr(
+            f"{_q(idcol)} AS __mh_id__", f"explode({_q(shcol)}) AS __s__"
         )
+        .selectExpr(
+            "__mh_id__",
+            "CAST(conv(substring(md5(__s__), 1, 15), 16, 10) AS BIGINT)"
+            " & 2147483647 AS __b__",
+        )
+        .groupBy("__mh_id__")
+        .agg(F.expr(f"array({mins}) AS {_q(out)}"))
     )
 
 
@@ -798,24 +812,19 @@ def lsh_band_keys(
 ) -> DataFrame:
     """Explode each signature into ``bands`` (band index, band key)
     rows; the band key is md5 of the concatenated signature slice.
-    Docs sharing any (band, key) are near-dup candidates."""
-    sig = F.col(sigcol)
-    rows_per_band = F.size(sig) / bands  # validated by caller
-    banded = F.transform(
-        F.sequence(F.lit(0), F.lit(bands - 1)),
-        lambda b: F.struct(
-            b.alias("band"),
-            F.md5(
-                F.concat_ws(
-                    "|", F.slice(sig, (b * rows_per_band.cast("int")) + 1, rows_per_band.cast("int"))
-                )
-            ).alias("key"),
-        ),
+    Docs sharing any (band, key) are near-dup candidates.
+
+    One ``selectExpr`` over SQL text (an ``inline`` of the per-band
+    structs): one py4j round trip builds the plan, whatever
+    ``bands`` is."""
+    sig = _q(sigcol)
+    rows_per_band = f"CAST(size({sig}) / {bands} AS INT)"  # validated by caller
+    banded = (
+        f"transform(sequence(0, {bands - 1}), __bi -> named_struct('band', __bi, "
+        f"'key', md5(concat_ws('|', slice({sig}, __bi * {rows_per_band} + 1, "
+        f"{rows_per_band})))))"
     )
-    ex = df.withColumn("__b__", F.explode(banded))
-    return ex.withColumn(out_band, F.col("__b__.band")).withColumn(
-        out_key, F.col("__b__.key")
-    ).drop("__b__")
+    return df.selectExpr("*", f"inline({banded}) AS ({_q(out_band)}, {_q(out_key)})")
 
 
 _CAP_COUNT = [0]
@@ -856,9 +865,11 @@ def _cap_buckets(
     fingerprints: one row per doc-fingerprint, bytes proportional to
     the join work) gets correct parallelism from AQE already, and the
     r11 driver bench measured the unconditional pin costing that
-    caller ~10% for nothing."""
-    from pyspark.sql import Window
+    caller ~10% for nothing.
 
+    The window, the observed sum and the filter are SQL text: a fixed
+    handful of py4j round trips per call (the streaming gates cap
+    three key tables every micro-batch)."""
     # 0 (or negative) would silently drop EVERY bucket — an explicit
     # None is the only "uncapped" spelling (ADVICE r11: a stamped-0
     # artifact or a max_bucket=0 override must fail loudly, not wipe
@@ -873,12 +884,14 @@ def _cap_buckets(
             nparts = spark.sparkContext.defaultParallelism
         frame = frame.repartition(nparts, *key_cols)
     _CAP_COUNT[0] += 1
-    w = Window.partitionBy(*key_cols)
-    counted = frame.withColumn("__n__", F.count("*").over(w)).observe(
+    keys = ", ".join(_q(c) for c in key_cols)
+    counted = frame.withColumn(
+        "__n__", F.expr(f"count(1) OVER (PARTITION BY {keys})")
+    ).observe(
         f"{metric}_{_CAP_COUNT[0]}",
-        F.sum((F.col("__n__") > max_bucket).cast("long")).alias("dropped_rows"),
+        F.expr(f"sum(CAST(__n__ > {max_bucket} AS BIGINT)) AS dropped_rows"),
     )
-    return counted.filter(F.col("__n__") <= max_bucket).drop("__n__")
+    return counted.where(f"__n__ <= {max_bucket}").drop("__n__")
 
 
 def lsh_candidate_pairs(
@@ -907,7 +920,9 @@ def lsh_candidate_pairs(
     ``exact_dedup`` first). Dropped-row counts are observable via the
     ``lsh_bucket_cap*`` observe metric.
     ``shingles``: optional precomputed ``shingle_sets`` frame to share
-    shingle construction with other stages.
+    shingle construction with other stages. Every frame this persists
+    (its own shingle sets, the capped key table) is registered under
+    ``"lsh_candidate_pairs"`` for ``release_registered``.
     """
     if num_hashes % bands != 0:
         raise ValueError(f"num_hashes={num_hashes} not divisible by bands={bands}")
@@ -918,10 +933,31 @@ def lsh_candidate_pairs(
             StorageLevel.MEMORY_AND_DISK
         )
         register_persisted("lsh_candidate_pairs", [shingles])
-    sigs = _minhash_sig_table(shingles, idcol, num_hashes).withColumnRenamed(
-        "__mh_id__", idcol
+    keyed = _band_key_table(shingles, idcol, num_hashes, bands)
+    return _lsh_pairs(keyed, idcol, max_bucket, "lsh_candidate_pairs")
+
+
+def _band_key_table(
+    shingles: DataFrame, idcol: str, num_hashes: int, bands: int
+) -> DataFrame:
+    """Uncapped ``(idcol, band, band_key)`` LSH key table of a
+    ``shingle_sets`` frame: signature aggregation plus banding, one row
+    per (doc, band). A pure per-doc function of the shingle set, so a
+    slice of it by id equals the table built from the same slice of
+    shingles."""
+    sigs = _minhash_sig_table(shingles, idcol, num_hashes)
+    return lsh_band_keys(sigs, bands=bands).selectExpr(
+        f"__mh_id__ AS {_q(idcol)}", "band", "band_key"
     )
-    keyed = lsh_band_keys(sigs, bands=bands).select(idcol, "band", "band_key")
+
+
+def _lsh_pairs(
+    keyed: DataFrame, idcol: str, max_bucket: int | None, label: str
+) -> DataFrame:
+    """Candidate pairs ``(id_a < id_b)`` sharing a (band, band_key)
+    bucket of the key table ``keyed``, after the flood cap. The capped
+    table is materialized and registered under the caller's ``label``
+    so ``release_registered(label)`` frees it."""
     if max_bucket is not None:
         keyed = _cap_buckets(keyed, ["band", "band_key"], max_bucket, "lsh_bucket_cap")
     # Materialize before the self-join: the sides are separate subtrees
@@ -933,16 +969,17 @@ def lsh_candidate_pairs(
     # eager localCheckpoint ran a full job at plan-construction time
     # and its truncated lineage was unrecoverable on executor loss.
     keyed = materialize(keyed)
-    a = keyed.alias("a")
-    b = keyed.alias("b")
+    register_persisted(label, [keyed])
+    idq = _q(idcol)
     return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col(f"a.{idcol}") < F.col(f"b.{idcol}")),
+        keyed.alias("a")
+        .join(
+            keyed.alias("b"),
+            F.expr(
+                f"a.band = b.band AND a.band_key = b.band_key AND a.{idq} < b.{idq}"
+            ),
         )
-        .select(F.col(f"a.{idcol}").alias("id_a"), F.col(f"b.{idcol}").alias("id_b"))
+        .selectExpr(f"a.{idq} AS id_a", f"b.{idq} AS id_b")
         .distinct()
     )
 
@@ -963,18 +1000,18 @@ def jaccard_pairs(
     ``shingle_sets`` frame to share shingle construction."""
     if shingles is None:
         shingles = shingle_sets(df, textcol, idcol, k)
-    sh = shingles.select(F.col(idcol), F.col("shingles").alias("__sh__"))
-    out_df = (
-        pairs.join(sh.withColumnRenamed(idcol, "id_a").withColumnRenamed("__sh__", "__sa__"), "id_a")
-        .join(sh.withColumnRenamed(idcol, "id_b").withColumnRenamed("__sh__", "__sb__"), "id_b")
+    idq = _q(idcol)
+    return (
+        pairs.join(shingles.selectExpr(f"{idq} AS id_a", "shingles AS __sa__"), "id_a")
+        .join(shingles.selectExpr(f"{idq} AS id_b", "shingles AS __sb__"), "id_b")
         .withColumn(
             out,
-            F.size(F.array_intersect("__sa__", "__sb__"))
-            / F.size(F.array_union("__sa__", "__sb__")),
+            F.expr(
+                "size(array_intersect(__sa__, __sb__)) / size(array_union(__sa__, __sb__))"
+            ),
         )
         .drop("__sa__", "__sb__")
     )
-    return out_df
 
 
 def jaccard_topk(
@@ -1039,10 +1076,9 @@ def dedup_minhash_lsh(
     it (per-job scratch; at 100 TB it spills to local disk, which is
     still far cheaper than a second tokenize+hash pass).
     """
-    result, _sh, _losers = _dedup_minhash_lsh_parts(
+    return _dedup_minhash_lsh_parts(
         df, textcol, idcol, k, num_hashes, bands, threshold, max_bucket
-    )
-    return result
+    )[0]
 
 
 def _dedup_minhash_lsh_parts(
@@ -1054,22 +1090,28 @@ def _dedup_minhash_lsh_parts(
     bands: int = 4,
     threshold: float = 0.8,
     max_bucket: int | None = 100_000,
-) -> tuple[DataFrame, DataFrame, DataFrame]:
+) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
     """:func:`dedup_minhash_lsh` plus its PERSISTED internal frames
-    ``(survivors, shingles, losers)`` so a pipeline running several
-    MinHash stages over the same batch (the streaming gate:
+    ``(survivors, shingles, band_keys, losers)`` so a pipeline running
+    several MinHash stages over the same batch (the streaming gate:
     within-batch dedup -> history probe -> artifact build) can derive
-    each stage's shingle frame from ONE tokenize pass instead of
-    re-shingling the batch text per stage (guide §1.2). ``shingles``
-    covers ALL of ``df``; ``losers`` is the dropped-id frame.
-    Persist/registry contract identical to the public form."""
+    each stage's shingle and band-key frames from ONE tokenize pass and
+    ONE signature aggregation instead of recomputing them per stage.
+    ``shingles`` and ``band_keys`` (the UNCAPPED
+    ``(idcol, band, band_key)`` table) cover ALL of ``df``; ``losers``
+    is the dropped-id frame. Everything persisted here, the capped
+    candidate key table included, is registered under
+    ``"dedup_minhash_lsh"``."""
+    if num_hashes % bands != 0:
+        raise ValueError(f"num_hashes={num_hashes} not divisible by bands={bands}")
     from pyspark import StorageLevel
 
     sh = shingle_sets(df, textcol, idcol, k).persist(StorageLevel.MEMORY_AND_DISK)
-    register_persisted("dedup_minhash_lsh", [sh])
-    cands = lsh_candidate_pairs(
-        df, textcol, idcol, k, num_hashes, bands, max_bucket, shingles=sh
+    keys = _band_key_table(sh, idcol, num_hashes, bands).persist(
+        StorageLevel.MEMORY_AND_DISK
     )
+    register_persisted("dedup_minhash_lsh", [sh, keys])
+    cands = _lsh_pairs(keys, idcol, max_bucket, "dedup_minhash_lsh")
     sim = jaccard_pairs(df, cands, textcol, idcol, k, shingles=sh).filter(
         F.col("jaccard") >= threshold
     )
@@ -1077,12 +1119,12 @@ def _dedup_minhash_lsh_parts(
     # join is pushed through it and each branch re-runs the whole
     # LSH-candidate + Jaccard-verify pipeline; the id frame is tiny
     losers = (
-        sim.select(F.col("id_b").alias(idcol))
+        sim.selectExpr(f"id_b AS {_q(idcol)}")
         .distinct()
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     register_persisted("dedup_minhash_lsh", [losers])
-    return df.join(losers, idcol, "left_anti"), sh, losers
+    return df.join(losers, idcol, "left_anti"), sh, keys, losers
 
 
 def _check_artifact_params(
@@ -1123,6 +1165,7 @@ def minhash_history_frames(
     bands: int = 4,
     max_bucket: int | None = 100_000,
     shingles: DataFrame | None = None,
+    band_keys: DataFrame | None = None,
 ) -> dict[str, DataFrame]:
     """Build the PRECOMPUTABLE history-side artifacts of the MinHash
     ingest gate as two frames, ready to persist and probe with
@@ -1144,9 +1187,26 @@ def minhash_history_frames(
     ``keys`` table and the candidate join. The probe caps only its
     batch side.
 
+    Shared intermediates (the streaming gate passes both, sliced by id
+    from its within-batch dedup, so a micro-batch tokenizes and
+    minhashes its text once):
+
+    - ``shingles``: optional precomputed :func:`shingle_sets` frame
+      ``(idcol, shingles)`` covering exactly ``history``'s rows with
+      the same ``k``;
+    - ``band_keys``: optional precomputed UNCAPPED ``(idcol, band,
+      band_key)`` table covering exactly ``history``'s rows with the
+      same ``(k, num_hashes, bands)``.
+
+    Both are pure per-row functions of (id, text), so a slice of a
+    superset's frame equals what this builder computes itself. The
+    flood cap still applies here, to ``history``'s own rows, and the
+    metadata stamp is the same either way.
+
     Same write-once-probe-many contract as
-    :func:`containment_index_frames` (its containment sibling); the
-    shared shingle frame is persisted and registered under
+    :func:`containment_index_frames` (its containment sibling). When
+    this builder computes the band keys itself, the shingle frame
+    feeds both outputs and is persisted and registered under
     ``"minhash_history_frames"`` — release after materializing.
     Bit-compatibility pinned by pytest: probing these frames returns
     exactly the survivors :func:`dedup_minhash_against` computes from
@@ -1155,22 +1215,14 @@ def minhash_history_frames(
         raise ValueError(
             f"num_hashes={num_hashes} not divisible by bands={bands}"
         )
-    from pyspark import StorageLevel
-
-    # ``shingles``: optional precomputed :func:`shingle_sets` frame
-    # covering exactly ``history``'s rows with the same (k,) —
-    # shingle_sets is a pure per-row function of (id, text), so a
-    # caller that already shingled a superset batch can pass the
-    # semi-joined slice and skip this builder's full tokenize pass
-    # (guide §1.2; the streaming gate builds its artifacts from the
-    # within-batch dedup's shingle frame this way).
     if shingles is None:
         shingles = shingle_sets(history, textcol, idcol, k)
-    hsh = shingles.persist(StorageLevel.MEMORY_AND_DISK)
-    register_persisted("minhash_history_frames", [hsh])
-    hsig = _minhash_sig_table(hsh, idcol, num_hashes).withColumnRenamed(
-        "__mh_id__", idcol
-    )
+    if band_keys is None:
+        from pyspark import StorageLevel
+
+        shingles = shingles.persist(StorageLevel.MEMORY_AND_DISK)
+        register_persisted("minhash_history_frames", [shingles])
+        band_keys = _band_key_table(shingles, idcol, num_hashes, bands)
     # band keys are a function of (k, num_hashes, bands); stamp them as
     # column metadata (parquet-persistent) so the probe can fail fast
     # on a mismatched configuration instead of silently matching
@@ -1180,7 +1232,7 @@ def minhash_history_frames(
     meta = {"k": k, "num_hashes": num_hashes, "bands": bands}
     if max_bucket is not None:
         meta["max_bucket"] = int(max_bucket)
-    keys = lsh_band_keys(hsig, bands=bands).select(
+    keys = band_keys.select(
         F.col(idcol).alias("__hid__"),
         "band",
         F.col("band_key").alias("band_key", metadata=meta),
@@ -1189,8 +1241,10 @@ def minhash_history_frames(
         keys = _cap_buckets(
             keys, ["band", "band_key"], max_bucket, "lsh_bucket_cap"
         )
-    shingles = hsh.select(F.col(idcol).alias("__hid__"), "shingles")
-    return {"keys": keys, "shingles": shingles}
+    return {
+        "keys": keys,
+        "shingles": shingles.selectExpr(f"{_q(idcol)} AS __hid__", "shingles"),
+    }
 
 
 def dedup_minhash_against_index(
@@ -1205,6 +1259,7 @@ def dedup_minhash_against_index(
     threshold: float = 0.8,
     max_bucket: int | None = 100_000,
     batch_shingles: DataFrame | None = None,
+    batch_keys: DataFrame | None = None,
 ) -> DataFrame:
     """Probe-side of the incremental MinHash gate: drop rows of ``df``
     whose n-gram Jaccard with any history document reaches
@@ -1223,8 +1278,18 @@ def dedup_minhash_against_index(
     once at build time by :func:`minhash_history_frames` — re-capping
     it here would re-run a window over the full history key table
     every batch (O(history) per batch) and break the shuffle-free
-    bucketed-table join. Batch-side shingles are persisted under
-    ``"dedup_minhash_against_index"``."""
+    bucketed-table join.
+
+    Shared batch intermediates, with the same contract as
+    :func:`minhash_history_frames`' ``shingles``/``band_keys``:
+    ``batch_shingles`` is an optional :func:`shingle_sets` frame and
+    ``batch_keys`` an optional UNCAPPED ``(idcol, band, band_key)``
+    table, each covering exactly ``df``'s rows with the same
+    parameters. ``max_bucket`` caps ``batch_keys`` over those rows,
+    exactly as it caps self-computed keys. When the probe computes the
+    batch keys itself, the batch shingles feed both the keys and the
+    Jaccard verify and are persisted; the hit-id frame always is. Both
+    are registered under ``"dedup_minhash_against_index"``."""
     if num_hashes % bands != 0:
         raise ValueError(
             f"num_hashes={num_hashes} not divisible by bands={bands}"
@@ -1237,48 +1302,34 @@ def dedup_minhash_against_index(
     )
     from pyspark import StorageLevel
 
-    # ``batch_shingles``: optional precomputed :func:`shingle_sets`
-    # frame covering exactly ``df``'s rows (same contract as
-    # minhash_history_frames(shingles=...)) — skips the probe's own
-    # batch tokenize pass when the caller already shingled the batch.
+    idq = _q(idcol)
     if batch_shingles is None:
         batch_shingles = shingle_sets(df, textcol, idcol, k)
-    bsh = batch_shingles.persist(StorageLevel.MEMORY_AND_DISK)
-    register_persisted("dedup_minhash_against_index", [bsh])
-    bsig = _minhash_sig_table(bsh, idcol, num_hashes).withColumnRenamed(
-        "__mh_id__", idcol
-    )
-    bkeys = lsh_band_keys(bsig, bands=bands).select(
-        F.col(idcol).alias("__bid__"), "band", "band_key"
-    )
-    hkeys = keys
+    if batch_keys is None:
+        batch_shingles = batch_shingles.persist(StorageLevel.MEMORY_AND_DISK)
+        register_persisted("dedup_minhash_against_index", [batch_shingles])
+        batch_keys = _band_key_table(batch_shingles, idcol, num_hashes, bands)
+    bkeys = batch_keys.selectExpr(f"{idq} AS __bid__", "band", "band_key")
     if max_bucket is not None:
         bkeys = _cap_buckets(
             bkeys, ["band", "band_key"], max_bucket, "lsh_bucket_cap"
         )
     cand = (
-        bkeys.join(hkeys, ["band", "band_key"])
+        bkeys.join(keys, ["band", "band_key"])
         .select("__bid__", "__hid__")
         .distinct()
     )
     j = (
         cand.join(
-            bsh.select(
-                F.col(idcol).alias("__bid__"),
-                F.col("shingles").alias("__sa__"),
-            ),
+            batch_shingles.selectExpr(f"{idq} AS __bid__", "shingles AS __sa__"),
             "__bid__",
         )
-        .join(
-            shingles.select(
-                "__hid__", F.col("shingles").alias("__sb__")
-            ),
-            "__hid__",
-        )
+        .join(shingles.selectExpr("__hid__", "shingles AS __sb__"), "__hid__")
         .withColumn(
             "__j__",
-            F.size(F.array_intersect("__sa__", "__sb__"))
-            / F.size(F.array_union("__sa__", "__sb__")),
+            F.expr(
+                "size(array_intersect(__sa__, __sb__)) / size(array_union(__sa__, __sb__))"
+            ),
         )
     )
     # persisted for the same reason as dedup_containment's dropped
@@ -1287,7 +1338,7 @@ def dedup_minhash_against_index(
     # (guide §7.2)
     hits = (
         j.filter(F.col("__j__") >= threshold)
-        .select(F.col("__bid__").alias(idcol))
+        .selectExpr(f"__bid__ AS {idq}")
         .distinct()
         .persist(StorageLevel.MEMORY_AND_DISK)
     )

@@ -1340,6 +1340,18 @@ def streaming_minhash_dedup(
     ``exact_dedup`` on id when exactly-once matters) while the
     artifact state is exactly-once.
 
+    Shared band keys: a micro-batch is shingled and minhashed ONCE.
+    The within-batch dedup persists the batch's shingle sets and its
+    uncapped ``(id, band, band_key)`` table; the history probe gets
+    their slices for the within-batch survivors (``batch_shingles``/
+    ``batch_keys`` of
+    :func:`~pd_utils_spark.extensions.dedup.dedup_minhash_against_index`)
+    and the artifact build gets their slices for the final survivors
+    (``shingles``/``band_keys`` of
+    :func:`~pd_utils_spark.extensions.dedup.minhash_history_frames`).
+    Every stage still applies ``max_bucket`` to its own rows, and all
+    per-batch persists are released when the batch ends.
+
     Returns the started ``StreamingQuery``.
     """
     from pd_utils_spark.extensions.dedup import (
@@ -1353,15 +1365,17 @@ def streaming_minhash_dedup(
         spark = batch_df.sparkSession
         batch_df = _spread_batch(batch_df)
         try:
-            # ONE tokenize pass per micro-batch (r12, guide §1.2):
-            # the within-batch dedup exposes its persisted shingle
-            # frame, and both the history probe and the artifact
-            # build derive their shingle frames from it by (anti/
-            # semi) id joins instead of re-shingling the batch text —
-            # shingle_sets is a pure per-row function of (id, text),
-            # so the derived slices are row-identical to what each
-            # stage would have computed itself.
-            survivors, bsh, losers = _dedup_minhash_lsh_parts(
+            # ONE tokenize pass and ONE signature aggregation per
+            # micro-batch: the within-batch dedup exposes
+            # its persisted shingle frame and its uncapped band-key
+            # table, and both the history probe and the artifact build
+            # derive their slices of them by (anti/semi) id joins
+            # instead of re-shingling and re-minhashing the batch —
+            # both are pure per-row functions of (id, text), so the
+            # derived slices are row-identical to what each stage
+            # would have computed itself. Each stage still applies the
+            # flood cap to its own rows.
+            survivors, bsh, bkeys, losers = _dedup_minhash_lsh_parts(
                 batch_df, textcol, idcol, k, num_hashes, bands, threshold,
                 max_bucket,
             )
@@ -1381,22 +1395,23 @@ def streaming_minhash_dedup(
                     threshold=threshold,
                     max_bucket=max_bucket,
                     batch_shingles=surv_sh,
+                    batch_keys=bkeys.join(losers, idcol, "left_anti"),
                 )
             survivors = survivors.localCheckpoint(eager=True)  # 4 writes
             # band-bucket flood cap applied per delta at build time
             # (write-once); the probe caps only its batch side
+            kept = survivors.select(idcol)
             frames = minhash_history_frames(
                 survivors, textcol=textcol, idcol=idcol, k=k,
                 num_hashes=num_hashes, bands=bands, max_bucket=max_bucket,
-                shingles=surv_sh.join(
-                    survivors.select(idcol), idcol, "left_semi"
-                ),
+                shingles=surv_sh.join(kept, idcol, "left_semi"),
+                band_keys=bkeys.join(kept, idcol, "left_semi"),
             )
             # Independent writes overlap (guide §2.6, r11) — same
             # schedule as the containment gate: docs reads only the
-            # checkpointed survivors, so it runs concurrently with the
-            # shingles write (which materializes the shared shingle
-            # cache the keys build then reads); keys still commits
+            # checkpointed survivors and shingles only the persisted
+            # batch shingles, so the two run concurrently; keys (read
+            # from the persisted band-key table) still commits
             # LAST among the state artifacts and the output append
             # starts only after every state write returned. Callables
             # are wrapped with inheritable_thread_target (r12) so job-

@@ -106,6 +106,139 @@ class TestMinhashLSH:
         assert [(r.id_a, r.id_b) for r in got] == [(100_001, 100_002)]
 
 
+class TestStringBuiltLshPlans:
+    """The signature table and the band keys are built from SQL text.
+    Pin them against the Column-built streaming key expressions
+    (``minhash_band_key``/``attach_minhash_band_keys``) and a pure
+    Python reference of the documented hash family."""
+
+    TEXTS = [
+        "the quick brown fox jumps over the lazy dog",
+        "The Quick  brown fox jumps over the lazy dog today",
+        "a completely different document about spark engines here",
+        "short",
+        "two words",
+        "",
+        "  padded   whitespace\tand   tabs everywhere in this text  ",
+    ]
+    CONFIGS = [(12, 6), (12, 4), (128, 16), (20, 5)]
+
+    @pytest.fixture()
+    def corpus(self, spark):
+        return spark.createDataFrame(
+            list(enumerate(self.TEXTS)), "doc_id long, text string"
+        )
+
+    @staticmethod
+    def _reference_sig(text: str, k: int, num_hashes: int) -> list[int]:
+        import hashlib
+        import re
+
+        norm = re.sub(r"\s+", " ", text.lower()).strip()
+        toks = re.split(r"\s+", norm.strip())
+        sets = (
+            {" ".join(toks[i : i + k]) for i in range(len(toks) - k + 1)}
+            if len(toks) >= k
+            else {norm}
+        )
+        base = [
+            int(hashlib.md5(s.encode()).hexdigest()[:15], 16) & ((1 << 31) - 1)
+            for s in sets
+        ]
+        return [
+            min((a * b + c) % D._MERSENNE_P for b in base)
+            for a, c in D._minhash_coeffs(num_hashes)
+        ]
+
+    @pytest.mark.parametrize("num_hashes,bands", CONFIGS)
+    def test_keys_match_column_built_expressions(
+        self, spark, corpus, num_hashes, bands
+    ):
+        rows = num_hashes // bands
+        sig = D._minhash_sig_table(D.shingle_sets(corpus), "doc_id", num_hashes)
+        got = {}
+        for r in D.lsh_band_keys(sig, bands=bands).collect():
+            got.setdefault(r["__mh_id__"], {})[r.band] = r.band_key
+        want = {
+            r.doc_id: (r.keys, r.key0)
+            for r in D.attach_minhash_band_keys(
+                corpus, k=3, rows_per_band=rows, bands=bands, out="keys"
+            )
+            .withColumn("key0", D.minhash_band_key(F.col("text"), 3, rows))
+            .collect()
+        }
+        assert set(got) == set(want) == set(range(len(self.TEXTS)))
+        for doc, (keys, key0) in want.items():
+            assert [got[doc][b] for b in range(bands)] == keys
+            assert got[doc][0] == key0
+
+    @pytest.mark.parametrize("num_hashes,bands", CONFIGS)
+    def test_signature_and_keys_match_python_reference(
+        self, corpus, num_hashes, bands
+    ):
+        import hashlib
+
+        rows = num_hashes // bands
+        sigs = {
+            r["__mh_id__"]: r.minhash_sig
+            for r in D._minhash_sig_table(
+                D.shingle_sets(corpus), "doc_id", num_hashes
+            ).collect()
+        }
+        for doc, text in enumerate(self.TEXTS):
+            ref = self._reference_sig(text, 3, num_hashes)
+            assert sigs[doc] == ref
+        keyed = D.lsh_band_keys(
+            D._minhash_sig_table(D.shingle_sets(corpus), "doc_id", num_hashes),
+            bands=bands,
+        )
+        for r in keyed.collect():
+            part = sigs[r["__mh_id__"]][r.band * rows : (r.band + 1) * rows]
+            want = hashlib.md5("|".join(map(str, part)).encode()).hexdigest()
+            assert r.band_key == want
+
+    def test_bands_must_divide_everywhere(self, corpus):
+        hist = D.minhash_history_frames(corpus, num_hashes=12, bands=6)
+        for call in (
+            lambda: D.lsh_candidate_pairs(corpus, num_hashes=20, bands=6),
+            lambda: D.dedup_minhash_lsh(corpus, num_hashes=128, bands=12),
+            lambda: D.minhash_history_frames(corpus, num_hashes=12, bands=5),
+            lambda: D.dedup_minhash_against_index(
+                corpus, hist["keys"], hist["shingles"], num_hashes=20, bands=6
+            ),
+        ):
+            with pytest.raises(ValueError, match="divisible"):
+                call()
+        from pd_utils_spark.utils import release_registered
+
+        release_registered("minhash_history_frames")
+
+    def test_signature_plan_round_trips_do_not_grow_with_hashes(
+        self, corpus, monkeypatch
+    ):
+        """Building the signature plan costs the same number of py4j
+        commands for 12 and 128 hashes: no per-hash round trips."""
+        import py4j.java_gateway as jg
+
+        sh = D.shingle_sets(corpus)
+        D._minhash_sig_table(sh, "doc_id", 12)  # warm any one-off lookups
+        sent = [0]
+        orig = jg.GatewayClient.send_command
+
+        def counted(self, *a, **kw):
+            sent[0] += 1
+            return orig(self, *a, **kw)
+
+        monkeypatch.setattr(jg.GatewayClient, "send_command", counted)
+        cost = {}
+        for n in (12, 128, 12):
+            before = sent[0]
+            D._minhash_sig_table(sh, "doc_id", n)
+            cost.setdefault(n, []).append(sent[0] - before)
+        assert cost[12][0] > 0
+        assert cost[12][0] == cost[12][1] == cost[128][0], cost
+
+
 class TestSimhash:
     def test_identical_normalized_docs_equal(self, docs):
         sh = {r.doc_id: r.simhash for r in D.simhash(docs).collect()}

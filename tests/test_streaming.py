@@ -729,6 +729,121 @@ class TestStreamingMinhashDedup:
         finally:
             shutil.rmtree(base, ignore_errors=True)
 
+    def test_no_cached_relation_survives_finished_batches(
+        self, spark, tmp_path
+    ):
+        """Every per-batch persist is released: after a 3-batch run no
+        new InMemoryRelation buffer is left in the persistent-RDD map
+        (cached Datasets name their RDD after the cached plan; the
+        gate's unnamed local checkpoint is the ContextCleaner's)."""
+        src = tmp_path / "src"
+        src.mkdir()
+        hot = "the quick brown fox jumps over the lazy dog today"
+        for b in range(3):
+            pd.DataFrame(
+                {
+                    "doc_id": [b * 10 + i for i in (0, 1, 2, 5)],
+                    "text": [f"{hot} {'x' * i}" for i in range(3)]
+                    + [f"unique payload number {b} for this batch"],
+                }
+            ).to_parquet(src / f"b{b}.parquet")
+
+        def cached_rdds():
+            rdds = spark.sparkContext._jsc.getPersistentRDDs()
+            return {i for i, r in rdds.items() if r.name() is not None}
+
+        before = cached_rdds()
+        stream = (
+            spark.readStream.schema("doc_id long, text string")
+            .option("maxFilesPerTrigger", 1)
+            .parquet(str(src))
+        )
+        q = W.streaming_minhash_dedup(
+            stream, str(tmp_path / "out"), str(tmp_path / "hist"),
+            str(tmp_path / "ckpt"), k=3, num_hashes=12, bands=6,
+            threshold=0.5, available_now=True,
+        )
+        try:
+            q.awaitTermination(180)
+        finally:
+            q.stop()
+        assert len([p for p in q.recentProgress if p["numInputRows"]]) == 3
+        assert cached_rdds() - before == set()
+
+    def test_shared_band_keys_match_self_computed(self, spark):
+        """The gate hands the probe and the artifact build id-slices of
+        the within-batch band-key table. Each stage must still cap its
+        own rows, so the shared-key results equal the self-computed
+        ones (stamped metadata included) both for a slice whose hot
+        bucket overflows ``max_bucket`` only in the whole batch (its
+        keys survive) and for the whole batch (they are dropped)."""
+        from pd_utils_spark.extensions.dedup import (
+            _dedup_minhash_lsh_parts,
+            dedup_minhash_against_index,
+            minhash_history_frames,
+        )
+        from pd_utils_spark.utils import release_registered
+
+        hot = "the quick brown fox jumps over the lazy dog today"
+        batch = spark.createDataFrame(
+            [(1, hot), (2, hot), (3, hot)]
+            + [(10 + i, f"novel document {i} with its own words") for i in range(3)],
+            "doc_id long, text string",
+        )
+        hist = spark.createDataFrame(
+            [(100, hot + " again")], "doc_id long, text string"
+        )
+        kw = dict(k=3, num_hashes=12, bands=6, max_bucket=2)
+        probe = dict(threshold=0.5, **kw)
+        try:
+            _, sh, keys, _ = _dedup_minhash_lsh_parts(batch, threshold=0.5, **kw)
+            # the whole batch's hot buckets (3 docs) overflow the cap
+            assert keys.groupBy("band", "band_key").count().agg(
+                F.max("count")
+            ).first()[0] == 3
+            art = minhash_history_frames(hist, **kw)
+            # (slice, hot docs whose keys survive the slice's own cap,
+            # probe survivors: a surviving hot key meets the history)
+            cases = [
+                (batch.filter("doc_id <> 3"), {1, 2}, [10, 11, 12]),
+                (batch, set(), [1, 2, 3, 10, 11, 12]),
+            ]
+            for part, hot_kept, survivors in cases:
+                ids = part.select("doc_id")
+                part_sh = sh.join(ids, "doc_id", "left_semi")
+                part_keys = keys.join(ids, "doc_id", "left_semi")
+                shared = minhash_history_frames(
+                    part, shingles=part_sh, band_keys=part_keys, **kw
+                )
+                own = minhash_history_frames(part, **kw)
+                for name in ("keys", "shingles"):
+                    assert shared[name].schema == own[name].schema
+                    got = sorted(map(tuple, shared[name].collect()))
+                    assert got == sorted(map(tuple, own[name].collect()))
+                assert shared["keys"].schema["band_key"].metadata == {
+                    "k": 3, "num_hashes": 12, "bands": 6, "max_bucket": 2,
+                }
+                hids = {r["__hid__"] for r in shared["keys"].collect()}
+                assert hids & {1, 2, 3} == hot_kept
+
+                got = dedup_minhash_against_index(
+                    part, art["keys"], art["shingles"], batch_shingles=part_sh,
+                    batch_keys=part_keys, **probe,
+                )
+                want = dedup_minhash_against_index(
+                    part, art["keys"], art["shingles"], **probe
+                )
+                got_ids = sorted(r.doc_id for r in got.collect())
+                assert got_ids == sorted(r.doc_id for r in want.collect())
+                assert got_ids == survivors
+        finally:
+            for label in (
+                "dedup_minhash_lsh",
+                "minhash_history_frames",
+                "dedup_minhash_against_index",
+            ):
+                release_registered(label)
+
 
 class TestWatermarkLateData:
     def test_late_event_beyond_watermark_dropped(self, spark):
