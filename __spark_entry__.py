@@ -95,6 +95,55 @@ def _stream_state_partitions(spark: SparkSession, n: int = 8):
     return _cm()
 
 
+def _file_stream(spark: SparkSession, src: str, *frames: DataFrame):
+    """Write each frame as ONE parquet file under ``src``, in order,
+    and return a file stream over ``src`` that takes one file per
+    micro-batch (the file source takes files in modification order;
+    the writes are sequential actions), so ``len(frames)`` ordered
+    AvailableNow micro-batches."""
+    for frame in frames:
+        frame.coalesce(1).write.mode("append").parquet(src)
+    return (
+        spark.readStream.schema(spark.read.parquet(src).schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+    )
+
+
+def _run_stream(spark, prefix, source, start, batches, error, cols):
+    """The one harness of the foreachBatch streaming rows: in a fresh
+    temp dir ``base``, ``source(base)`` builds the streaming
+    DataFrame, ``start(sdf, base)`` starts the operator with its
+    output at ``base/out`` and its state and checkpoint under
+    ``base``, and the run must take exactly ``batches`` data
+    micro-batches — each row's oracle assumes that count, so any
+    other count raises ``AssertionError(error.format(n=<count>))``.
+    Returns the collected ``base/out`` rows projected to ``cols``
+    (the dirs are deleted before return, so rows are collected)."""
+    import shutil
+    import tempfile
+
+    base = tempfile.mkdtemp(prefix=prefix)
+    try:
+        sdf = source(base)
+        with _stream_state_partitions(spark):
+            q = start(sdf, base)
+            q.awaitTermination()
+            n = sum(1 for p in q.recentProgress if p["numInputRows"] > 0)
+            if n != batches:
+                raise AssertionError(error.format(n=n))
+        return spark.read.parquet(f"{base}/out").select(*cols).collect()
+    finally:
+        shutil.rmtree(base, ignore_errors=True)
+
+
+def _event_halves(ev: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """Even and odd ``event_id`` halves: two micro-batch files."""
+    return ev.filter(F.col("event_id") % 2 == 0), ev.filter(
+        F.col("event_id") % 2 == 1
+    )
+
+
 # ---------------------------------------------------------------- queries
 
 def q_averages(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2244,43 +2293,31 @@ def q_streaming_bloom_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     path — the oracle replays plain exact_dedup; cross-batch
     semantics (member drops + ~fpp false drops) are pinned by
     pytest."""
-    import shutil
-    import tempfile
-
     from pd_utils_spark.streaming.stateful import streaming_bloom_dedup
 
-    base = tempfile.mkdtemp(prefix="pus_bloomdedup_")
-    try:
+    rows = _run_stream(
+        spark,
+        "pus_bloomdedup_",
         # documents has no exact text dups; stream the copies corpus
         # (one coalesced file -> one AvailableNow batch) so the row
         # actually drops half its input
-        src = f"{base}/src"
-        _docs_with_copies(spark, sf_dir).coalesce(1).write.parquet(src)
-        raw_schema = spark.read.parquet(src).schema
-        sdf = spark.readStream.schema(raw_schema).parquet(src)
-        with _stream_state_partitions(spark):
-            q = streaming_bloom_dedup(
-                sdf,
-                output_dir=f"{base}/out",
-                bloom_dir=f"{base}/bloom",
-                checkpoint_dir=f"{base}/ckpt",
-                m_bits=1 << 16,
-                k=5,
-                available_now=True,
-            )
-            q.awaitTermination()
-            data_batches = sum(
-                1 for p in q.recentProgress if p["numInputRows"] > 0
-            )
-            if data_batches != 1:
-                raise AssertionError(
-                    "streaming_bloom_dedup oracle assumes ONE "
-                    f"micro-batch; the stream ran {data_batches}"
-                )
-        out = spark.read.parquet(f"{base}/out").select("doc_id")
-        rows = out.collect()
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+        lambda base: _file_stream(
+            spark, f"{base}/src", _docs_with_copies(spark, sf_dir)
+        ),
+        lambda sdf, base: streaming_bloom_dedup(
+            sdf,
+            output_dir=f"{base}/out",
+            bloom_dir=f"{base}/bloom",
+            checkpoint_dir=f"{base}/ckpt",
+            m_bits=1 << 16,
+            k=5,
+            available_now=True,
+        ),
+        1,
+        "streaming_bloom_dedup oracle assumes ONE micro-batch; the "
+        "stream ran {n}",
+        ["doc_id"],
+    )
     return spark.createDataFrame(rows, "doc_id bigint")
 
 
@@ -2304,47 +2341,32 @@ def q_streaming_multiband_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     assertion below pins that assumption so a future source change
     (multi-file dir, maxFilesPerTrigger) fails loudly instead of
     flaking."""
-    import shutil
-    import tempfile
-
     from pd_utils_spark.streaming.stateful import streaming_greedy_band_dedup
 
     raw_schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-    sdf = (
-        spark.readStream.schema(raw_schema)
+    rows = _run_stream(
+        spark,
+        "pus_mbdedup_",
+        lambda base: spark.readStream.schema(raw_schema)
         .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
+        .parquet(sf_dir),
+        lambda sdf, base: streaming_greedy_band_dedup(
+            sdf,
+            output_dir=f"{base}/out",
+            history_dir=f"{base}/claims",
+            checkpoint_dir=f"{base}/ckpt",
+            k=3,
+            rows_per_band=3,
+            bands=2,
+            available_now=True,
+        ),
+        1,
+        "streaming_multiband_dedup oracle assumes ONE micro-batch; the "
+        "stream ran {n} data batches — the single-batch global greedy "
+        "oracle no longer matches the cross-batch first-claim-wins rule "
+        "(see operator docstring)",
+        ["doc_id"],
     )
-    base = tempfile.mkdtemp(prefix="pus_mbdedup_")
-    try:
-        with _stream_state_partitions(spark):
-            q = streaming_greedy_band_dedup(
-                sdf,
-                output_dir=f"{base}/out",
-                history_dir=f"{base}/claims",
-                checkpoint_dir=f"{base}/ckpt",
-                k=3,
-                rows_per_band=3,
-                bands=2,
-                available_now=True,
-            )
-            q.awaitTermination()
-            data_batches = sum(
-                1 for p in q.recentProgress if p["numInputRows"] > 0
-            )
-            if data_batches != 1:
-                raise AssertionError(
-                    "streaming_multiband_dedup oracle assumes ONE "
-                    f"micro-batch; the stream ran {data_batches} "
-                    "data batches — the single-batch global greedy "
-                    "oracle no longer matches the cross-batch "
-                    "first-claim-wins rule (see operator docstring)"
-                )
-        out = spark.read.parquet(f"{base}/out").select("doc_id")
-        # the sink dirs are deleted before return: collect now
-        rows = out.collect()
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
     return spark.createDataFrame(rows, "doc_id bigint")
 
 
@@ -6931,54 +6953,29 @@ def q_streaming_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     single-batch streaming rows, this one is also INSENSITIVE to
     batch boundaries (union is commutative over values), so the pin
     is belt-and-braces, not load-bearing."""
-    import shutil
-    import tempfile
-
     from pd_utils_spark.streaming.stateful import streaming_distinct_hll
 
-    base = tempfile.mkdtemp(prefix="pus_hllstream_")
-    try:
-        ev = _t(spark, sf_dir, "events").select("event_id", "event_type", "user_id")
-        src = f"{base}/src"
+    ev = _t(spark, sf_dir, "events").select("event_id", "event_type", "user_id")
+    rows = _run_stream(
+        spark,
+        "pus_hllstream_",
         # two appends -> two files -> two AvailableNow micro-batches
-        ev.filter(F.col("event_id") % 2 == 0).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-        ev.filter(F.col("event_id") % 2 == 1).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-        raw_schema = spark.read.parquet(src).schema
-        sdf = (
-            spark.readStream.schema(raw_schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        with _stream_state_partitions(spark):
-            q = streaming_distinct_hll(
-                sdf,
-                output_dir=f"{base}/out",
-                sketch_dir=f"{base}/sk",
-                checkpoint_dir=f"{base}/ckpt",
-                byvars="event_type",
-                col="user_id",
-                lgk=12,
-                available_now=True,
-            )
-            q.awaitTermination()
-            data_batches = sum(
-                1 for p in q.recentProgress if p["numInputRows"] > 0
-            )
-            if data_batches != 2:
-                raise AssertionError(
-                    "streaming_hll_distinct expects TWO micro-batches "
-                    f"(cross-batch union exercised); the stream ran {data_batches}"
-                )
-        out = spark.read.parquet(f"{base}/out").select(
-            "event_type", "distinct_estimate", "as_of_batch"
-        )
-        rows = out.collect()
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+        lambda base: _file_stream(spark, f"{base}/src", *_event_halves(ev)),
+        lambda sdf, base: streaming_distinct_hll(
+            sdf,
+            output_dir=f"{base}/out",
+            sketch_dir=f"{base}/sk",
+            checkpoint_dir=f"{base}/ckpt",
+            byvars="event_type",
+            col="user_id",
+            lgk=12,
+            available_now=True,
+        ),
+        2,
+        "streaming_hll_distinct expects TWO micro-batches (cross-batch "
+        "union exercised); the stream ran {n}",
+        ["event_type", "distinct_estimate", "as_of_batch"],
+    )
     return spark.createDataFrame(
         rows, "event_type string, distinct_estimate bigint, as_of_batch bigint"
     )
@@ -6997,59 +6994,36 @@ def q_streaming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     max_items 64, k=all), so cross-batch counts are exact group
     counts — the oracle states them directly and the hash match
     certifies the accumulate->combine arithmetic across batches."""
-    import shutil
-    import tempfile
-
     from pd_utils_spark.streaming.stateful import streaming_topk
 
-    base = tempfile.mkdtemp(prefix="pus_topkstream_")
-    try:
-        ev = _t(spark, sf_dir, "events").select(
-            "event_id", "event_type", (F.col("user_id") % 16).alias("item")
-        )
-        src = f"{base}/src"
-        ev.filter(F.col("event_id") % 2 == 0).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-        ev.filter(F.col("event_id") % 2 == 1).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-        raw_schema = spark.read.parquet(src).schema
-        sdf = (
-            spark.readStream.schema(raw_schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        with _stream_state_partitions(spark):
-            q = streaming_topk(
-                sdf,
-                output_dir=f"{base}/out",
-                sketch_dir=f"{base}/sk",
-                checkpoint_dir=f"{base}/ckpt",
-                byvars="event_type",
-                col="item",
-                max_items=64,
-                k=16,
-                available_now=True,
-            )
-            q.awaitTermination()
-            data_batches = sum(
-                1 for p in q.recentProgress if p["numInputRows"] > 0
-            )
-            if data_batches != 2:
-                raise AssertionError(
-                    "streaming_topk expects TWO micro-batches "
-                    f"(cross-batch combine exercised); ran {data_batches}"
-                )
-        out = spark.read.parquet(f"{base}/out").select(
+    ev = _t(spark, sf_dir, "events").select(
+        "event_id", "event_type", (F.col("user_id") % 16).alias("item")
+    )
+    rows = _run_stream(
+        spark,
+        "pus_topkstream_",
+        lambda base: _file_stream(spark, f"{base}/src", *_event_halves(ev)),
+        lambda sdf, base: streaming_topk(
+            sdf,
+            output_dir=f"{base}/out",
+            sketch_dir=f"{base}/sk",
+            checkpoint_dir=f"{base}/ckpt",
+            byvars="event_type",
+            col="item",
+            max_items=64,
+            k=16,
+            available_now=True,
+        ),
+        2,
+        "streaming_topk expects TWO micro-batches (cross-batch combine "
+        "exercised); ran {n}",
+        [
             "event_type",
             F.col("item").cast("bigint").alias("item"),
             F.col("count").cast("bigint").alias("n"),
             "as_of_batch",
-        )
-        rows = out.collect()
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+        ],
+    )
     return spark.createDataFrame(
         rows, "event_type string, item bigint, n bigint, as_of_batch bigint"
     )
@@ -7069,55 +7043,30 @@ def q_streaming_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     statistics — the oracle states them from first principles
     (row_number = ceil(q*n)); the hash match certifies the
     cross-batch merge arithmetic exactly."""
-    import shutil
-    import tempfile
-
     from pd_utils_spark.streaming.stateful import streaming_sample_quantiles
 
-    base = tempfile.mkdtemp(prefix="pus_qstream_")
-    try:
-        ev = _t(spark, sf_dir, "events").select("event_id", "event_type", "value")
-        src = f"{base}/src"
-        ev.filter(F.col("event_id") % 2 == 0).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-        ev.filter(F.col("event_id") % 2 == 1).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-        raw_schema = spark.read.parquet(src).schema
-        sdf = (
-            spark.readStream.schema(raw_schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        with _stream_state_partitions(spark):
-            q = streaming_sample_quantiles(
-                sdf,
-                output_dir=f"{base}/out",
-                sample_dir=f"{base}/sm",
-                checkpoint_dir=f"{base}/ckpt",
-                byvars="event_type",
-                col="value",
-                id_cols="event_id",
-                k=4096,
-                qs=(0.25, 0.5, 0.75),
-                available_now=True,
-            )
-            q.awaitTermination()
-            data_batches = sum(
-                1 for p in q.recentProgress if p["numInputRows"] > 0
-            )
-            if data_batches != 2:
-                raise AssertionError(
-                    "streaming_quantiles expects TWO micro-batches "
-                    f"(cross-batch merge exercised); ran {data_batches}"
-                )
-        out = spark.read.parquet(f"{base}/out").select(
-            "event_type", "q25", "q50", "q75", "n_sampled", "as_of_batch"
-        )
-        rows = out.collect()
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+    ev = _t(spark, sf_dir, "events").select("event_id", "event_type", "value")
+    rows = _run_stream(
+        spark,
+        "pus_qstream_",
+        lambda base: _file_stream(spark, f"{base}/src", *_event_halves(ev)),
+        lambda sdf, base: streaming_sample_quantiles(
+            sdf,
+            output_dir=f"{base}/out",
+            sample_dir=f"{base}/sm",
+            checkpoint_dir=f"{base}/ckpt",
+            byvars="event_type",
+            col="value",
+            id_cols="event_id",
+            k=4096,
+            qs=(0.25, 0.5, 0.75),
+            available_now=True,
+        ),
+        2,
+        "streaming_quantiles expects TWO micro-batches (cross-batch merge "
+        "exercised); ran {n}",
+        ["event_type", "q25", "q50", "q75", "n_sampled", "as_of_batch"],
+    )
     return spark.createDataFrame(
         rows,
         "event_type string, q25 double, q50 double, q75 double, "
@@ -7140,63 +7089,41 @@ def q_streaming_containment_dedup(
     the full two-stage pipeline (within-batch one-pass rule, then
     the against-history rule over batch 1's SURVIVORS) in SQL.
     Returns every accepted doc_id across both batches."""
-    import shutil
-    import tempfile
-
     from pd_utils_spark.streaming.stateful import streaming_containment_dedup
 
-    base = tempfile.mkdtemp(prefix="pus_cstream_")
-    try:
-        d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-        toks = F.split(F.col("text"), " ")
-        m = F.greatest(F.lit(5), F.floor(F.size(toks) * 0.5).cast("int"))
-        trunc = d.filter(F.col("doc_id") % 3 == 0).select(
-            (F.col("doc_id") + 100000).alias("doc_id"),
-            F.concat_ws(" ", F.slice(toks, F.lit(1), m)).alias("text"),
-        )
-        salted = d.filter(F.col("doc_id") % 3 == 1).select(
-            (F.col("doc_id") + 200000).alias("doc_id"),
-            F.concat(
-                F.col("text"), F.lit(" zq1 zq2 zq3 zq4 zq5 zq6 zq7")
-            ).alias("text"),
-        )
-        src = f"{base}/src"
-        # ordered appends -> ordered AvailableNow micro-batches (file
-        # source takes files in modification order; the writes are
-        # sequential actions)
-        d.coalesce(1).write.mode("append").parquet(src)
-        trunc.unionByName(salted).coalesce(1).write.mode("append").parquet(
-            src
-        )
-        raw_schema = spark.read.parquet(src).schema
-        sdf = (
-            spark.readStream.schema(raw_schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        with _stream_state_partitions(spark):
-            q = streaming_containment_dedup(
-                sdf,
-                output_dir=f"{base}/out",
-                history_dir=f"{base}/hist",
-                checkpoint_dir=f"{base}/ckpt",
-                threshold=0.9,
-                k=3,
-                available_now=True,
-            )
-            q.awaitTermination()
-            data_batches = sum(
-                1 for p in q.recentProgress if p["numInputRows"] > 0
-            )
-            if data_batches != 2:
-                raise AssertionError(
-                    "streaming_containment_dedup expects TWO ordered "
-                    f"micro-batches; ran {data_batches}"
-                )
-        out = spark.read.parquet(f"{base}/out").select("doc_id")
-        rows = out.collect()
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
+    toks = F.split(F.col("text"), " ")
+    m = F.greatest(F.lit(5), F.floor(F.size(toks) * 0.5).cast("int"))
+    trunc = d.filter(F.col("doc_id") % 3 == 0).select(
+        (F.col("doc_id") + 100000).alias("doc_id"),
+        F.concat_ws(" ", F.slice(toks, F.lit(1), m)).alias("text"),
+    )
+    salted = d.filter(F.col("doc_id") % 3 == 1).select(
+        (F.col("doc_id") + 200000).alias("doc_id"),
+        F.concat(
+            F.col("text"), F.lit(" zq1 zq2 zq3 zq4 zq5 zq6 zq7")
+        ).alias("text"),
+    )
+    rows = _run_stream(
+        spark,
+        "pus_cstream_",
+        lambda base: _file_stream(
+            spark, f"{base}/src", d, trunc.unionByName(salted)
+        ),
+        lambda sdf, base: streaming_containment_dedup(
+            sdf,
+            output_dir=f"{base}/out",
+            history_dir=f"{base}/hist",
+            checkpoint_dir=f"{base}/ckpt",
+            threshold=0.9,
+            k=3,
+            available_now=True,
+        ),
+        2,
+        "streaming_containment_dedup expects TWO ordered micro-batches; "
+        "ran {n}",
+        ["doc_id"],
+    )
     return spark.createDataFrame(rows, "doc_id bigint")
 
 
@@ -7216,60 +7143,39 @@ def q_streaming_minhash_dedup(
     two-stage pipeline (within-batch min-id LSH dedup, then the
     banded candidate join + Jaccard verify against batch 1's
     SURVIVORS) in SQL. Returns every accepted doc_id."""
-    import shutil
-    import tempfile
-
     from pd_utils_spark.streaming.stateful import streaming_minhash_dedup
 
-    base = tempfile.mkdtemp(prefix="pus_mstream_")
-    try:
-        d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-        near = d.filter(F.col("doc_id") % 3 == 0).select(
-            (F.col("doc_id") + 100000).alias("doc_id"),
-            F.concat(F.col("text"), F.lit(" nv1 nv2")).alias("text"),
-        )
-        novel = d.filter(F.col("doc_id") % 3 == 1).select(
-            (F.col("doc_id") + 200000).alias("doc_id"),
-            F.regexp_replace(F.col("text"), r"(\S+)", r"$1zz").alias(
-                "text"
-            ),
-        )
-        src = f"{base}/src"
-        d.coalesce(1).write.mode("append").parquet(src)
-        near.unionByName(novel).coalesce(1).write.mode("append").parquet(
-            src
-        )
-        raw_schema = spark.read.parquet(src).schema
-        sdf = (
-            spark.readStream.schema(raw_schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        with _stream_state_partitions(spark):
-            q = streaming_minhash_dedup(
-                sdf,
-                output_dir=f"{base}/out",
-                history_dir=f"{base}/hist",
-                checkpoint_dir=f"{base}/ckpt",
-                k=3,
-                num_hashes=12,
-                bands=4,
-                threshold=0.5,
-                available_now=True,
-            )
-            q.awaitTermination()
-            data_batches = sum(
-                1 for p in q.recentProgress if p["numInputRows"] > 0
-            )
-            if data_batches != 2:
-                raise AssertionError(
-                    "streaming_minhash_dedup expects TWO ordered "
-                    f"micro-batches; ran {data_batches}"
-                )
-        out = spark.read.parquet(f"{base}/out").select("doc_id")
-        rows = out.collect()
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
+    near = d.filter(F.col("doc_id") % 3 == 0).select(
+        (F.col("doc_id") + 100000).alias("doc_id"),
+        F.concat(F.col("text"), F.lit(" nv1 nv2")).alias("text"),
+    )
+    novel = d.filter(F.col("doc_id") % 3 == 1).select(
+        (F.col("doc_id") + 200000).alias("doc_id"),
+        F.regexp_replace(F.col("text"), r"(\S+)", r"$1zz").alias("text"),
+    )
+    rows = _run_stream(
+        spark,
+        "pus_mstream_",
+        lambda base: _file_stream(
+            spark, f"{base}/src", d, near.unionByName(novel)
+        ),
+        lambda sdf, base: streaming_minhash_dedup(
+            sdf,
+            output_dir=f"{base}/out",
+            history_dir=f"{base}/hist",
+            checkpoint_dir=f"{base}/ckpt",
+            k=3,
+            num_hashes=12,
+            bands=4,
+            threshold=0.5,
+            available_now=True,
+        ),
+        2,
+        "streaming_minhash_dedup expects TWO ordered micro-batches; "
+        "ran {n}",
+        ["doc_id"],
+    )
     return spark.createDataFrame(rows, "doc_id bigint")
 
 
@@ -7288,60 +7194,35 @@ def q_streaming_weighted_sample(
     arithmetic exactly (the weighted SELECTION behavior under k < n
     is certified separately by weighted_pick_audit's measured softmax
     property)."""
-    import shutil
-    import tempfile
-
     from pd_utils_spark.streaming.stateful import streaming_weighted_sample
 
-    base = tempfile.mkdtemp(prefix="pus_wstream_")
-    try:
-        ev = _t(spark, sf_dir, "events").select(
-            "event_id",
-            "event_type",
-            "value",
-            ((F.col("user_id") % 5) + 1.0).alias("weight"),
-        )
-        src = f"{base}/src"
-        ev.filter(F.col("event_id") % 2 == 0).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-        ev.filter(F.col("event_id") % 2 == 1).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-        raw_schema = spark.read.parquet(src).schema
-        sdf = (
-            spark.readStream.schema(raw_schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        with _stream_state_partitions(spark):
-            q = streaming_weighted_sample(
-                sdf,
-                output_dir=f"{base}/out",
-                sample_dir=f"{base}/sm",
-                checkpoint_dir=f"{base}/ckpt",
-                byvars="event_type",
-                col="value",
-                weight_col="weight",
-                id_cols="event_id",
-                k=4096,
-                available_now=True,
-            )
-            q.awaitTermination()
-            data_batches = sum(
-                1 for p in q.recentProgress if p["numInputRows"] > 0
-            )
-            if data_batches != 2:
-                raise AssertionError(
-                    "streaming_weighted_sample expects TWO micro-batches "
-                    f"(cross-batch merge exercised); ran {data_batches}"
-                )
-        out = spark.read.parquet(f"{base}/out").select(
-            "event_type", "n_sampled", "sum_sampled", "as_of_batch"
-        )
-        rows = out.collect()
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+    ev = _t(spark, sf_dir, "events").select(
+        "event_id",
+        "event_type",
+        "value",
+        ((F.col("user_id") % 5) + 1.0).alias("weight"),
+    )
+    rows = _run_stream(
+        spark,
+        "pus_wstream_",
+        lambda base: _file_stream(spark, f"{base}/src", *_event_halves(ev)),
+        lambda sdf, base: streaming_weighted_sample(
+            sdf,
+            output_dir=f"{base}/out",
+            sample_dir=f"{base}/sm",
+            checkpoint_dir=f"{base}/ckpt",
+            byvars="event_type",
+            col="value",
+            weight_col="weight",
+            id_cols="event_id",
+            k=4096,
+            available_now=True,
+        ),
+        2,
+        "streaming_weighted_sample expects TWO micro-batches (cross-batch "
+        "merge exercised); ran {n}",
+        ["event_type", "n_sampled", "sum_sampled", "as_of_batch"],
+    )
     return spark.createDataFrame(
         rows,
         "event_type string, n_sampled bigint, sum_sampled double, "

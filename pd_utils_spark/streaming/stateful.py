@@ -7,15 +7,24 @@ State design for scale: state lives in the executor state store,
 partitioned by the grouping keys — per-key state must stay O(1)
 (scalars/counters, never row buffers) or the store becomes the
 bottleneck; set a timeout so abandoned keys are evicted.
+
+The ``foreachBatch`` operators keep their state in versioned parquet
+dirs instead, through one protocol: :class:`_VersionedState` for the
+ingest gates (its docstring states the crash algebra) and
+:func:`_fold_stream` for the constant-state sketch operators.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator, Sequence
+from collections.abc import Callable, Iterator, Mapping, Sequence
+from concurrent.futures import ThreadPoolExecutor
+from dataclasses import dataclass, field
+from functools import partial
 
 import pandas as pd
 
-from pyspark.sql import DataFrame
+from pyspark import inheritable_thread_target
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
@@ -32,8 +41,7 @@ from pd_utils_spark.utils import release_registered, to_list
 #: single-file micro-batch fans out. The driver's r11 scaling run
 #: showed the same batches ~2x FASTER at 8-way than at the blanket
 #: 32-way spread, which this grain reproduces (~600 KB batch -> ~10
-#: tasks). Env-parameterised for cluster tuning
-#: (SPARK_GRAFT_SPREAD_TARGET_BYTES).
+#: tasks).
 _SPREAD_TARGET_BYTES = 64 * 1024
 
 
@@ -51,21 +59,21 @@ def _spread_batch(batch_df: DataFrame) -> DataFrame:
     driver's bench showed both big gates anti-scaling with cores: a
     KB-scale batch paid a 32-way exchange plus 32-task stages per
     downstream stage, pure scheduling latency). The target partition
-    count is ``ceil(estimated input bytes / target_bytes)`` capped at
-    ``defaultParallelism`` — proportional to the work, per guide §2.5
-    "spread proportional to input, not blindly to core count". The
-    estimate comes from the optimized logical plan's stats (file sizes
-    for a file-source micro-batch — no job, no collect). When the
+    count is ``ceil(estimated input bytes / _SPREAD_TARGET_BYTES)``
+    capped at ``defaultParallelism`` — proportional to the work, per
+    guide §2.5 "spread proportional to input, not blindly to core
+    count". The estimate comes from the optimized logical plan's
+    stats (file sizes for a file-source micro-batch — no job, no
+    collect). When the
     estimate is unavailable or absurd (relations without stats default
     to Long.MaxValue) the cap keeps the old conservative behavior.
     At scale this stays a structural no-op: batches bigger than
-    ``target_bytes x defaultParallelism`` already arrive in many
-    splits and hit the ``n >= want`` early exit. Round-robin
+    ``_SPREAD_TARGET_BYTES x defaultParallelism`` already arrive in
+    many splits and hit the ``n >= want`` early exit. Round-robin
     repartition is retry-safe (Spark sorts before round-robin by
     default) and every gate result is partitioning-independent by
     construction."""
     import math
-    import os
 
     sc = batch_df.sparkSession.sparkContext
     try:
@@ -76,11 +84,6 @@ def _spread_batch(batch_df: DataFrame) -> DataFrame:
     if n >= p:
         return batch_df
     try:
-        target = int(
-            os.environ.get(
-                "SPARK_GRAFT_SPREAD_TARGET_BYTES", _SPREAD_TARGET_BYTES
-            )
-        )
         est = int(
             str(
                 batch_df._jdf.queryExecution()
@@ -89,12 +92,307 @@ def _spread_batch(batch_df: DataFrame) -> DataFrame:
                 .sizeInBytes()
             )
         )
-        want = min(p, max(1, math.ceil(est / max(target, 1))))
+        want = min(p, max(1, math.ceil(est / _SPREAD_TARGET_BYTES)))
     except Exception:  # pragma: no cover — stats unavailable: be
         want = p  # conservative (the r11 behavior)
     if n < want:
         return batch_df.repartition(want)
     return batch_df
+
+
+def _hadoop_fs(spark, path: str):
+    """``(FileSystem, Path)`` for ``path``: the Hadoop FileSystem that
+    owns it and the JVM ``Path`` class to address its children."""
+    Path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
+    conf = spark.sparkContext._jsc.hadoopConfiguration()
+    return Path(path).getFileSystem(conf), Path
+
+
+def _versions(
+    spark, state_dir: str, prefix: str = "b=", committed_only: bool = True
+) -> list[int]:
+    """Sorted version ids under a versioned state dir. ``committed_only``
+    keeps only versions whose ``_SUCCESS`` marker exists — a version
+    directory APPEARS as soon as the writer mkdirs it, before any
+    parquet file commits, so a crash mid-write (or a concurrent reader
+    racing the write) must never mistake the partial directory for
+    state. ``prefix`` selects the namespace (``b=`` per-batch
+    versions, ``c=`` the gates' compacted generations). An explicit
+    listing, not try/except around the read: a transient storage
+    error must fail (and retry) the batch — treating it as "no
+    history" would admit duplicates permanently."""
+    fs, Path = _hadoop_fs(spark, state_dir)
+    if not fs.exists(Path(state_dir)):
+        return []
+    out = []
+    for st in fs.listStatus(Path(state_dir)):
+        name = st.getPath().getName()
+        v = name[len(prefix):]
+        if name.startswith(prefix) and v.isdigit() and (
+            not committed_only
+            or fs.exists(Path(f"{state_dir}/{name}/_SUCCESS"))
+        ):
+            out.append(int(v))
+    return sorted(out)
+
+
+def _delete_quietly(spark, state_dir: str, names: list[str]) -> None:
+    """Best-effort removal of superseded version dirs: pruning is
+    cosmetic (readers already resolve the newest committed state), so
+    it never fails a batch or a compaction."""
+    fs, Path = _hadoop_fs(spark, state_dir)
+    for name in names:
+        try:
+            fs.delete(Path(f"{state_dir}/{name}"), True)
+        except Exception:
+            pass
+
+
+def _start(sdf: DataFrame, process, checkpoint_dir: str, available_now: bool):
+    """Start ``process`` as the ``foreachBatch`` sink of ``sdf``;
+    ``available_now=True`` drains everything currently available and
+    terminates (Trigger.AvailableNow — the batch-backfill mode).
+    Returns the started ``StreamingQuery``."""
+    writer = sdf.writeStream.foreachBatch(process).option(
+        "checkpointLocation", checkpoint_dir
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
+def _validate_recap(max_bucket) -> None:
+    """Fail loudly on cap values that would wipe the folded state
+    (``_cap_buckets`` drops EVERY bucket at <= 0); ``None`` means
+    "use the stamped build-time cap" and ``recap=False`` on the
+    compactors is the explicit no-recap override."""
+    if max_bucket is not None and int(max_bucket) <= 0:
+        raise ValueError(f"max_bucket must be >= 1: {max_bucket}")
+
+
+@dataclass(frozen=True)
+class _VersionedState:
+    """The ingest gates' delta-versioned artifact state under ``root``:
+    ``<root>/<artifact>/b=<batch_id>`` per-batch deltas and
+    ``<root>/<artifact>/c=<id>`` compacted generations, for each of
+    ``artifacts``; ``last`` is the artifact that commits LAST, and
+    versions are listed from it, so a listed version implies its
+    siblings committed. ``on_read`` post-processes an artifact's
+    merged read (the containment ``dfreq`` deltas are summed — a
+    compacted table is already a sum, so re-summing with newer deltas
+    stays exact).
+
+    Crash algebra (stated once for both gates and both compactors). A
+    batch writes its state BEFORE its output: every frame except
+    ``last`` in one overlapped wave, ``last`` after the wave returned,
+    the output append only after every state write returned (a failed
+    write raises and fails the batch before any output row lands). A
+    batch reads only committed versions STRICTLY BELOW its own id, so
+    a retried batch ignores its own crashed half-write, re-derives
+    identical survivors (the gates' dedup stages are deterministic),
+    idempotently overwrites its own version dirs and re-appends its
+    output. The output is therefore AT-LEAST-ONCE (the standard
+    foreachBatch caveat — finish downstream with ``exact_dedup`` on
+    id when exactly-once matters) while the artifact state is
+    exactly-once; no crash window loses accepted documents or admits
+    a duplicate past the gate. The wave runs on
+    ``inheritable_thread_target`` threads so the batch's JVM local
+    properties (job group, scheduler pool) reach the in-flight writes
+    and ``query.stop()`` cancels them; concurrent materialization of a
+    shared cached block is safe (the BlockManager computes it once
+    under the block lock).
+
+    Compaction (:meth:`compact`, stream STOPPED — a concurrent batch
+    could commit a new delta mid-fold; nothing corrupts, but that
+    delta could be read twice by a reader racing the prune, which is
+    harmless: pinned in ``tests/test_streaming.py``) folds the deltas
+    into ``c=<top>`` so a read opens O(1) directories. **The NEWEST
+    committed delta is never folded**: state is written before the
+    streaming checkpoint commits, so the newest delta can belong to a
+    batch the engine replays on restart, and that replay reads
+    strictly below its own id — a ``c=`` covering its own delta, with
+    the covered deltas pruned, would leave it probing EMPTY history.
+    The fold writes NEW paths with the same commit-last schedule,
+    readers prefer the newest committed ``c=`` and ignore deltas at or
+    below it, and pruning is best-effort cosmetic — a crash at any
+    point leaves a state the reader resolves identically.
+
+    Recap: per-delta flood caps bound each delta independently, so a
+    hot bucket of ``last`` can grow to ``num_deltas x max_bucket``;
+    the fold re-applies the cap on ``cap_cols`` (same recall trade and
+    ``cap_label`` observe metric as the build-time cap). The cap is
+    the explicit ``max_bucket`` or else the MINIMUM stamp the builders
+    wrote into the ``cap_cols[-1]`` metadata, read PER PIECE (a merged
+    multi-path read surfaces whichever footer Spark samples); ``None``
+    when no piece is stamped, i.e. an uncapped build folds losslessly,
+    and ``recap=False`` folds a capped build losslessly. Replay
+    caveat: recapping weakens replay identity to AT-LEAST-ONCE on
+    admissions — a crash -> compact -> restart sequence can have the
+    replayed newest batch probe a smaller (recapped) history than its
+    original run and admit docs the original dropped (never the
+    reverse: removing index rows only removes drop reasons). Compact
+    only after the newest delta's batch is committed in the streaming
+    checkpoint when exact replay identity matters, or pass
+    ``recap=False``."""
+
+    spark: SparkSession
+    root: str
+    artifacts: tuple[str, ...]
+    last: str
+    cap_cols: tuple[str, ...]
+    cap_label: str
+    on_read: Mapping[str, Callable[[DataFrame], DataFrame]] = field(
+        default_factory=dict
+    )
+
+    def _listed(self, prefix: str) -> list[int]:
+        return _versions(self.spark, f"{self.root}/{self.last}", prefix)
+
+    def pieces(self, below: int) -> list[str]:
+        """The newest committed ``c=`` generation plus every committed
+        ``b=`` delta newer than it, all strictly below ``below``."""
+        cs = [v for v in self._listed("c=") if v < below][-1:]
+        c0 = max(cs, default=-1)
+        bs = [v for v in self._listed("b=") if c0 < v < below]
+        return [f"c={v}" for v in cs] + [f"b={v}" for v in bs]
+
+    def read(self, below: int) -> tuple[DataFrame, ...] | None:
+        """One frame per artifact (in ``artifacts`` order) over
+        :meth:`pieces`, or ``None`` when no committed state qualifies."""
+        pieces = self.pieces(below)
+        if not pieces:
+            return None
+        return tuple(
+            self.on_read.get(a, lambda df: df)(self.spark.read.parquet(
+                *[f"{self.root}/{a}/{p}" for p in pieces]
+            ))
+            for a in self.artifacts
+        )
+
+    def _commit(self, version: str, frames: dict[str, DataFrame]) -> None:
+        def write(a: str) -> None:
+            frames[a].write.mode("overwrite").parquet(
+                f"{self.root}/{a}/{version}"
+            )
+
+        wave = [a for a in frames if a != self.last]
+        with ThreadPoolExecutor(max_workers=len(wave)) as pool:
+            list(pool.map(inheritable_thread_target(self.spark)(write), wave))
+        write(self.last)
+
+    def write_batch(self, batch_id: int, frames: dict[str, DataFrame],
+                    output: DataFrame, output_dir: str) -> None:
+        """Commit ``frames`` as version ``b=<batch_id>`` (the wave,
+        then ``last``), then append ``output`` to ``output_dir``.
+        ``frames`` may carry write-only artifacts (the gates' survivor
+        ``docs``) that are never read back or compacted."""
+        self._commit(f"b={batch_id}", frames)
+        output.write.mode("append").parquet(output_dir)
+
+    def stamped_cap(self, below: int) -> int | None:
+        """Minimum build-time cap stamped on the ``last`` pieces below
+        ``below``, each piece's own footer read; ``None`` if none."""
+        stamps = [
+            self.spark.read.parquet(f"{self.root}/{self.last}/{p}")
+            .schema[self.cap_cols[-1]].metadata.get("max_bucket")
+            for p in self.pieces(below)
+        ]
+        return min((int(s) for s in stamps if s is not None), default=None)
+
+    def compact(self, prune: bool = True, max_bucket: int | None = None,
+                recap: bool = True) -> int | None:
+        """Fold every committed delta except the newest into
+        ``c=<top>``; returns ``top``, or the existing generation id
+        (``None`` if none) when there is nothing to fold."""
+        _validate_recap(max_bucket)
+        cs = self._listed("c=")[-1:]
+        fold = [v for v in self._listed("b=") if v > max(cs, default=-1)]
+        fold = fold[:-1]  # the newest delta stays unfolded (docstring)
+        if not fold:
+            return cs[0] if cs else None
+        top = fold[-1]
+        frames = dict(zip(self.artifacts, self.read(below=top + 1)))
+        cap = max_bucket
+        if cap is None and recap:
+            cap = self.stamped_cap(below=top + 1)
+        if cap is not None and recap:
+            from pd_utils_spark.extensions.dedup import _cap_buckets
+
+            frames[self.last] = _cap_buckets(
+                frames[self.last], list(self.cap_cols), cap, self.cap_label
+            )
+        self._commit(f"c={top}", frames)
+        if prune:
+            stale = [f"b={v}" for v in fold] + [f"c={v}" for v in cs]
+            for a in self.artifacts:
+                _delete_quietly(self.spark, f"{self.root}/{a}", stale)
+        return top
+
+
+def _sum_dfreq(dfreq: DataFrame) -> DataFrame:
+    return dfreq.groupBy("__tok__").agg(F.sum("__df__").alias("__df__"))
+
+
+#: The containment gate's state: ``(index, sets, dfreq)``, index last.
+_containment_state = partial(
+    _VersionedState, artifacts=("index", "sets", "dfreq"), last="index",
+    cap_cols=("__tok__",), cap_label="containment_against_bucket",
+    on_read={"dfreq": _sum_dfreq},
+)
+
+#: The MinHash gate's state: ``(keys, shingles)``, keys last.
+_minhash_state = partial(
+    _VersionedState, artifacts=("keys", "shingles"), last="keys",
+    cap_cols=("band", "band_key"), cap_label="lsh_bucket_cap",
+)
+
+
+def _fold_stream(
+    sdf: DataFrame, state_dir: str, checkpoint_dir: str, available_now: bool,
+    sketch: Callable[[DataFrame, DataFrame | None], DataFrame],
+    merge: Callable[[DataFrame, DataFrame], DataFrame],
+    snapshot: Callable[[DataFrame], DataFrame] | None = None,
+    output_dir: str | None = None,
+):
+    """The one constant-state fold of the five sketch operators (each
+    folds a mergeable summary — Bloom, HLL, bottom-k, frequent items,
+    A-ES sample). Per micro-batch: read the newest committed
+    ``<state_dir>/b=<v>`` with ``v`` STRICTLY BELOW the batch id
+    (``old``), ``sketch(batch_df, old)`` the batch, ``merge(old,
+    fresh)``, ``localCheckpoint`` (consumed twice), write
+    ``b=<batch_id>``, overwrite ``snapshot(merged)`` plus an
+    ``as_of_batch`` column at ``output_dir``, and prune versions older
+    than ``old``.
+
+    The read rule is the gates' (see :class:`_VersionedState`): a
+    retried batch ignores its own crashed or committed version and
+    rebuilds it from the same predecessor, so replay is safe for every
+    merge, idempotent (HLL union, bottom-k distinct-merge, Bloom OR)
+    or not (frequent-items combine double-counts a re-merge). Versions
+    are whole-state overwrites under ``_SUCCESS``-only readers, so
+    there is no delete-then-rewrite window in which a crash (or a
+    concurrent reader) sees missing state; the snapshot is a full
+    overwrite, so downstream readers never see partial state."""
+
+    def process(batch_df: DataFrame, batch_id: int) -> None:
+        spark = batch_df.sparkSession
+        prev = [v for v in _versions(spark, state_dir) if v < batch_id]
+        old = spark.read.parquet(f"{state_dir}/b={prev[-1]}") if prev else None
+        fresh = sketch(batch_df, old)
+        merged = fresh if old is None else merge(old, fresh)
+        merged = merged.localCheckpoint(eager=True)
+        merged.write.mode("overwrite").parquet(f"{state_dir}/b={batch_id}")
+        if snapshot is not None:
+            snapshot(merged).withColumn(
+                "as_of_batch", F.lit(batch_id).cast("bigint")
+            ).write.mode("overwrite").parquet(output_dir)
+        if prev:  # keep the predecessor; prune partial versions too
+            stale = _versions(spark, state_dir, committed_only=False)
+            _delete_quietly(
+                spark, state_dir, [f"b={v}" for v in stale if v < prev[-1]]
+            )
+
+    return _start(sdf, process, checkpoint_dir, available_now)
 
 
 def streaming_exact_dedup(
@@ -273,11 +571,8 @@ def streaming_greedy_band_dedup(
         # explicit existence check, not try/except: a transient
         # storage error must fail (and retry) the batch — treating it
         # as "no history" would admit duplicates permanently
-        jvm = spark.sparkContext._jvm
-        jsc = spark.sparkContext._jsc
-        path = jvm.org.apache.hadoop.fs.Path(history_dir)
-        fs = path.getFileSystem(jsc.hadoopConfiguration())
-        if fs.exists(path):
+        fs, Path = _hadoop_fs(spark, history_dir)
+        if fs.exists(Path(history_dir)):
             claims = spark.read.parquet(history_dir)
             keyed = work.select(
                 F.col(idcol),
@@ -302,12 +597,7 @@ def streaming_greedy_band_dedup(
             F.posexplode("__bks__").alias("band", "key")
         ).write.mode("append").parquet(history_dir)
 
-    writer = sdf.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(sdf, process, checkpoint_dir, available_now)
 
 
 def streaming_bloom_dedup(
@@ -349,16 +639,14 @@ def streaming_bloom_dedup(
     :func:`streaming_greedy_band_dedup`), and false drops depend on
     the filter's accumulated fill.
 
-    Replay safety: survivors append BEFORE the filter is written. The
-    filter state is VERSIONED — each batch writes
-    ``bloom_dir/b=<batch_id>`` and readers take the latest version —
-    so there is no delete-then-rewrite window in which a crash (or a
-    concurrent reader) sees a missing filter; a retried batch
-    overwrites only its own version directory (idempotent: OR of the
-    same fingerprints is a no-op) and the output re-append is the
-    standard at-least-once caveat — finish downstream with
-    ``exact_dedup`` on id. Versions older than the previous one are
-    best-effort pruned.
+    Replay safety: survivors append BEFORE the filter is written, and
+    the filter state is VERSIONED (``bloom_dir/b=<batch_id>``) under
+    the sketch fold's read rule (:func:`_fold_stream`): a retried
+    batch probes the same predecessor filter, re-derives the same
+    survivors, overwrites only its own version and re-appends its
+    output — the standard at-least-once caveat; finish downstream
+    with ``exact_dedup`` on id. Versions older than the previous one
+    are best-effort pruned.
 
     Returns the started ``StreamingQuery``.
     """
@@ -369,35 +657,19 @@ def streaming_bloom_dedup(
         merge_blooms,
     )
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
+    def sketch(batch_df: DataFrame, old: DataFrame | None) -> DataFrame:
         batch = exact_dedup(batch_df, textcol, idcol)
-        # explicit listing (not try/except around the read): a
-        # transient storage error must fail and retry the batch —
-        # treating it as "no history" would admit duplicates
-        latest = _latest_bloom_version(spark, bloom_dir)
-        old = None
-        if latest is not None:
-            old = spark.read.parquet(f"{bloom_dir}/b={latest}")
+        if old is not None:
             batch = exact_dedup_against_bloom(
                 batch, old, textcol=textcol, idcol=idcol, verify=False
             )
         survivors = batch.localCheckpoint(eager=True)  # consumed twice
         survivors.write.mode("append").parquet(output_dir)
-        fresh = bloom_fingerprints(survivors, textcol, m_bits, k)
-        merged = merge_blooms(old, fresh) if old is not None else fresh
-        rows = merged.collect()  # one row by construction
-        spark.createDataFrame(
-            rows, "bloom array<bigint>, m_bits int, k int"
-        ).write.mode("overwrite").parquet(f"{bloom_dir}/b={batch_id}")
-        _prune_bloom_versions(spark, bloom_dir, keep_from=latest)
+        return bloom_fingerprints(survivors, textcol, m_bits, k)
 
-    writer = sdf.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir
+    return _fold_stream(
+        sdf, bloom_dir, checkpoint_dir, available_now, sketch, merge_blooms
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def streaming_distinct_hll(
@@ -427,45 +699,29 @@ def streaming_distinct_hll(
     batching-sensitive WITHIN that bound (see the sketches module
     docstring) — consumers size against the bound, not byte identity.
 
-    Replay safety mirrors :func:`streaming_bloom_dedup`: the sketch
-    table is VERSIONED (``sketch_dir/b=<batch_id>``, readers take the
-    latest committed version), a retried batch overwrites only its
-    own version (HLL union is idempotent — re-unioning the same
-    values is a register no-op), and the estimates snapshot is a full
-    overwrite, so downstream readers never see partial state.
+    Replay safety is the sketch fold's (:func:`_fold_stream`): the
+    sketch table is VERSIONED (``sketch_dir/b=<batch_id>``), a
+    retried batch rebuilds only its own version from its predecessor,
+    and the estimates snapshot is a full overwrite, so downstream
+    readers never see partial state.
 
     Returns the started ``StreamingQuery``.
     """
     from pd_utils_spark.extensions.sketches import hll_rollup, hll_sketch_by
 
     byvars_l = to_list(byvars)
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        fresh = hll_sketch_by(batch_df, byvars_l, col, lgk=lgk, out="sk")
-        latest = _latest_bloom_version(spark, sketch_dir)
-        if latest is not None:
-            old = spark.read.parquet(f"{sketch_dir}/b={latest}")
-            fresh = hll_rollup(old.unionByName(fresh), byvars_l, "sk")
-        merged = fresh.localCheckpoint(eager=True)  # consumed twice
-        merged.write.mode("overwrite").parquet(f"{sketch_dir}/b={batch_id}")
-        (
-            merged.select(
-                *byvars_l,
-                F.hll_sketch_estimate("sk").cast("bigint").alias("distinct_estimate"),
-                F.lit(batch_id).cast("bigint").alias("as_of_batch"),
-            )
-            .write.mode("overwrite")
-            .parquet(output_dir)
-        )
-        _prune_bloom_versions(spark, sketch_dir, keep_from=latest)
-
-    writer = sdf.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir
+    estimate = F.hll_sketch_estimate("sk").cast("bigint")
+    return _fold_stream(
+        sdf, sketch_dir, checkpoint_dir, available_now,
+        sketch=lambda b, _: hll_sketch_by(b, byvars_l, col, lgk=lgk, out="sk"),
+        merge=lambda old, new: hll_rollup(
+            old.unionByName(new), byvars_l, "sk"
+        ),
+        snapshot=lambda m: m.select(
+            *byvars_l, estimate.alias("distinct_estimate")
+        ),
+        output_dir=output_dir,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def streaming_containment_dedup(
@@ -513,25 +769,13 @@ def streaming_containment_dedup(
     recall — so total STORED state is corpus-token-sized; this
     operator's job is keeping the per-batch COMPUTE off that term.
 
-    Replay safety: state versions are keyed by ``batch_id`` and
-    written BEFORE the output append, and a batch reads only
-    committed versions STRICTLY BELOW its own id — so a retried
-    batch ignores its own crashed half-write, re-derives identical
-    survivors (both dedup stages are deterministic), idempotently
-    overwrites its own version dirs, and re-appends to
-    ``output_dir``. ``output_dir`` is therefore AT-LEAST-ONCE
-    (the standard foreachBatch caveat — finish downstream with
-    ``exact_dedup`` on id when exactly-once matters) while the
-    artifact state is exactly-once; no crash window loses accepted
-    documents or admits a duplicate past the gate. Within the state
-    write, ``index`` commits LAST, so an index-committed version
-    implies its ``dfreq``/``sets`` committed too (readers enumerate
-    versions from ``index``). ``max_bucket`` trades exact recall for
-    flood protection on the history index (observe metric). One
-    qualifier: a RECAPPING compaction run between the crash and the
-    restart can shrink what the replayed batch probes, making the
-    replay at-least-once on admissions — see
-    :func:`compact_containment_state`'s replay caveat.
+    Replay safety: ``index`` commits last and the output appends
+    after every state write; ``output_dir`` is AT-LEAST-ONCE, the
+    artifact state exactly-once — the crash algebra, and the replay
+    caveat of a recapping :func:`compact_containment_state`, are
+    stated on :class:`_VersionedState`. ``max_bucket`` trades exact
+    recall for flood protection on the history index (observe
+    metric).
 
     Returns the started ``StreamingQuery``.
     """
@@ -540,10 +784,9 @@ def streaming_containment_dedup(
         containment_index_frames,
         dedup_containment_against_index,
     )
-    from pd_utils_spark.utils import release_registered
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
+        state = _containment_state(batch_df.sparkSession, history_dir)
         batch_df = _spread_batch(batch_df)
         try:
             # ONE shingle pass per micro-batch (r12, guide §1.2): the
@@ -555,98 +798,41 @@ def streaming_containment_dedup(
             # (id, text), so the derived slices are row-identical to
             # what each stage would have computed itself.
             survivors, btoks, dropped = _dedup_containment_parts(
-                batch_df,
-                textcol=textcol,
-                idcol=idcol,
-                threshold=threshold,
-                k=k,
-                max_bucket=max_bucket,
+                batch_df, textcol=textcol, idcol=idcol, threshold=threshold,
+                k=k, max_bucket=max_bucket,
             )
-            surv_toks = btoks.join(
-                dropped.select(F.col(idcol).alias("__id__")),
-                "__id__",
-                "left_anti",
-            )
-            # committed versions strictly below this batch: a retried
-            # batch must not probe its own crashed half-state
-            state = _containment_state_frames(
-                spark, history_dir, below=batch_id
-            )
-            if state is not None:
-                index, sets, dfreq = state
+            ids = F.col(idcol).alias("__id__")
+            surv_toks = btoks.join(dropped.select(ids), "__id__", "left_anti")
+            history = state.read(below=batch_id)
+            if history is not None:
                 # history side was flood-capped at build time (below)
                 # — a per-probe cap would re-window the full history
                 # index every batch
                 survivors = dedup_containment_against_index(
-                    survivors,
-                    index,
-                    sets,
-                    dfreq,
-                    textcol=textcol,
-                    idcol=idcol,
-                    threshold=threshold,
-                    k=k,
-                    max_bucket=None,
+                    survivors, *history, textcol=textcol, idcol=idcol,
+                    threshold=threshold, k=k, max_bucket=None,
                     toks=surv_toks,
                 )
             survivors = survivors.localCheckpoint(eager=True)  # 5 writes
-            # state BEFORE output (see docstring); index commits LAST
-            # (flood cap applied per delta at build — write-once; a
-            # bucket spanning deltas is capped per delta, never
-            # dropping more than the r9 union-cap did)
+            # flood cap applied per delta at build — write-once; a
+            # bucket spanning deltas is capped per delta until a
+            # compaction re-bounds it
             frames = containment_index_frames(
                 survivors, textcol=textcol, idcol=idcol, k=k,
                 max_bucket=max_bucket,
                 toks=surv_toks.join(
-                    survivors.select(F.col(idcol).alias("__id__")),
-                    "__id__",
-                    "left_semi",
+                    survivors.select(ids), "__id__", "left_semi"
                 ),
             )
-            # Independent writes overlap (guide §2.6; widened r11 -> r12
-            # from 2 to 3 concurrent artifacts): docs reads only the
-            # checkpointed survivors, dfreq only the shared htoks
-            # cache, and the sets write materializes the htoks+sets
-            # caches — all three are commit-order-independent, so one
-            # wave replaces three serialized job round-trips
-            # (concurrent materialization of a shared cached block is
-            # safe: the BlockManager computes it once under the block
-            # lock). The commit-order invariants hold: index still
-            # commits LAST among the state artifacts, and the output
-            # append starts only after every state write returned (a
-            # failed write raises via .result() and fails the batch
-            # before any output row lands). Callables are wrapped with
-            # inheritable_thread_target so the batch's JVM local
-            # properties (job group/description, scheduler pool)
-            # propagate to the pool threads — query.stop()/job-group
-            # cancellation reaches the in-flight writes and the
-            # pinned-thread JVM side is cleaned up deterministically.
-            from concurrent.futures import ThreadPoolExecutor
-
-            from pyspark import inheritable_thread_target
-
-            writes = [
-                lambda: frames["sets"]
-                .write.mode("overwrite")
-                .parquet(f"{history_dir}/sets/b={batch_id}"),
-                lambda: survivors.select(idcol, textcol)
-                .write.mode("overwrite")
-                .parquet(f"{history_dir}/docs/b={batch_id}"),
-                lambda: frames["dfreq"]
-                .write.mode("overwrite")
-                .parquet(f"{history_dir}/dfreq/b={batch_id}"),
-            ]
-            with ThreadPoolExecutor(max_workers=3) as pool:
-                futs = [
-                    pool.submit(inheritable_thread_target(spark)(w))
-                    for w in writes
-                ]
-                for f in futs:
-                    f.result()
-            frames["index"].write.mode("overwrite").parquet(
-                f"{history_dir}/index/b={batch_id}"
+            # one 3-wide wave (sets materializes the htoks+sets
+            # caches, dfreq reads the shared htoks cache, docs the
+            # checkpointed survivors), then index, then the output
+            docs = survivors.select(idcol, textcol)
+            state.write_batch(
+                batch_id, {"sets": frames["sets"], "docs": docs,
+                           "dfreq": frames["dfreq"], "index": frames["index"]},
+                survivors, output_dir,
             )
-            survivors.write.mode("append").parquet(output_dir)
         finally:
             # per-batch persists must not accumulate across a
             # long-running stream
@@ -654,125 +840,7 @@ def streaming_containment_dedup(
             release_registered("dedup_containment_against_index")
             release_registered("containment_index_frames")
 
-    writer = sdf.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def _versioned_state_pieces(
-    spark, root: str, enum_sub: str, below: int
-) -> list[str]:
-    """Version pieces of a delta-versioned artifact state dir,
-    strictly below batch id ``below``: the newest committed COMPACTED
-    generation ``c=<id>`` plus every committed delta ``b=<v>`` with
-    ``c_id < v < below``. Versions are enumerated from ``enum_sub``
-    (the subdir the writer commits LAST, so a version listed there
-    implies its siblings committed)."""
-    idx_dir = f"{root}/{enum_sub}"
-    cs = [
-        v
-        for v in _bloom_versions(spark, idx_dir, prefix="c=")
-        if v < below
-    ]
-    c0 = max(cs) if cs else None
-    bs = [
-        v
-        for v in _bloom_versions(spark, idx_dir)
-        if v < below and (c0 is None or v > c0)
-    ]
-    return ([f"c={c0}"] if c0 is not None else []) + [f"b={v}" for v in bs]
-
-
-def _prune_state_pieces(
-    spark, root: str, subs: tuple, deltas: list[int], old_c: int | None
-) -> None:
-    """Best-effort deletion of state pieces superseded by a new
-    compacted generation (the folded ``b=`` deltas plus the previous
-    ``c=`` generation) across every artifact subdir. Cosmetic —
-    readers already prefer the newest committed compaction."""
-    jvm = spark.sparkContext._jvm
-    jsc = spark.sparkContext._jsc
-    stale = [f"b={v}" for v in deltas] + (
-        [f"c={old_c}"] if old_c is not None else []
-    )
-    for sub in subs:
-        d = f"{root}/{sub}"
-        fs = jvm.org.apache.hadoop.fs.Path(d).getFileSystem(
-            jsc.hadoopConfiguration()
-        )
-        for name in stale:
-            try:
-                fs.delete(jvm.org.apache.hadoop.fs.Path(f"{d}/{name}"), True)
-            except Exception:
-                pass  # cosmetic; never fail compaction for it
-
-
-def _containment_state_frames(spark, history_dir: str, below: int):
-    """Accumulated containment-gate artifacts strictly below batch id
-    ``below`` (see :func:`_versioned_state_pieces`). Returns
-    ``(index, sets, dfreq)`` frames or ``None`` when no committed
-    state qualifies. ``dfreq`` is summed across the selected pieces
-    (a compacted generation's table is already a sum, so re-summing
-    with newer deltas stays exact)."""
-    pieces = _versioned_state_pieces(spark, history_dir, "index", below)
-    if not pieces:
-        return None
-    index = spark.read.parquet(*[f"{history_dir}/index/{p}" for p in pieces])
-    sets = spark.read.parquet(*[f"{history_dir}/sets/{p}" for p in pieces])
-    dfreq = (
-        spark.read.parquet(*[f"{history_dir}/dfreq/{p}" for p in pieces])
-        .groupBy("__tok__")
-        .agg(F.sum("__df__").alias("__df__"))
-    )
-    return index, sets, dfreq
-
-
-def _stamped_max_bucket(frame: DataFrame, col: str) -> int | None:
-    """The flood cap the artifact BUILDER applied, read back from the
-    parquet-persistent column metadata the builders stamp (see
-    ``minhash_history_frames`` / ``containment_index_frames``).
-    ``None`` for uncapped or externally-built artifacts."""
-    try:
-        mb = (frame.schema[col].metadata or {}).get("max_bucket")
-        return int(mb) if mb is not None else None
-    except Exception:  # pragma: no cover — renamed/absent column
-        return None
-
-
-def _stamped_max_bucket_pieces(
-    spark, piece_dirs: list[str], col: str
-) -> int | None:
-    """Resolve the build-time flood cap across a FOLD's state pieces
-    by reading each piece's own parquet footer (ADVICE r11: a merged
-    multi-path read surfaces whichever piece's schema Spark samples,
-    so a stream restarted with a different ``max_bucket`` across
-    deltas would be recapped — or not — non-deterministically).
-    Explicit policy: the MINIMUM stamp across stamped pieces (the
-    tightest flood bound any delta was built under — recapping is a
-    protective bound, so the conservative merge is the smallest cap);
-    ``None`` when NO piece is stamped (a fully-uncapped build folds
-    losslessly). Pieces written uncapped alongside capped ones still
-    fold under the capped pieces' minimum — the fold's job is
-    re-bounding cross-delta growth, which an uncapped delta does not
-    exempt its neighbors from."""
-    stamps = []
-    for d in piece_dirs:
-        mb = _stamped_max_bucket(spark.read.parquet(d), col)
-        if mb is not None:
-            stamps.append(mb)
-    return min(stamps) if stamps else None
-
-
-def _validate_recap(max_bucket) -> None:
-    """Fail loudly on cap values that would wipe the folded state
-    (``_cap_buckets`` drops EVERY bucket at <= 0); ``None`` means
-    "use the stamped build-time cap" and ``recap=False`` on the
-    compactors is the explicit no-recap override."""
-    if max_bucket is not None and int(max_bucket) <= 0:
-        raise ValueError(f"max_bucket must be >= 1: {max_bucket}")
+    return _start(sdf, process, checkpoint_dir, available_now)
 
 
 def compact_containment_state(
@@ -783,97 +851,23 @@ def compact_containment_state(
     versions into one compacted generation ``c=<top>``, so the
     per-batch state read opens O(1) directories instead of one per
     historical batch and the df-delta sum touches each token once.
-    Run with the stream STOPPED (a concurrent batch could commit a
-    new delta mid-fold; nothing corrupts, but that delta could be
-    read twice by a reader racing the prune — pinned harmless in
-    ``tests/test_streaming.py``).
+    Run with the stream STOPPED. The newest committed delta is never
+    folded (``top`` = the highest version strictly below it), so a
+    replayed batch still resolves complete history. Returns the
+    compacted generation id, or the existing one (``None`` if none)
+    when there is nothing to fold.
 
-    **The NEWEST committed delta is never folded** (``top`` = the
-    highest version STRICTLY BELOW the newest delta). Artifact state
-    is written BEFORE the streaming checkpoint commits, so after a
-    crash/stop mid-batch the newest delta can belong to a batch the
-    engine will REPLAY on restart; the replayed batch reads versions
-    strictly below its own id, which would exclude a ``c=`` built
-    from its own delta — and with the covering deltas pruned it
-    would probe EMPTY history and silently admit duplicates. Leaving
-    the newest delta out keeps every state the replayed batch can
-    see complete. Costs one extra delta dir per read.
-
-    Crash-safe by construction: the compacted generation is written
-    to NEW paths (``index`` last, same commit-order invariant as the
-    writer), readers prefer the newest committed ``c=`` and ignore
-    deltas at or below it, and pruning the superseded pieces is
-    best-effort cosmetic cleanup — a crash at any point leaves a
-    state the reader resolves identically. Returns the compacted
-    generation id, or None when there is nothing to fold.
-
-    **The build-time flood cap is RE-APPLIED to the folded index**:
-    per-delta caps bound each delta independently, so a hot ``__tok__``
-    bucket can grow to ``num_deltas x max_bucket`` across a stream's
-    lifetime — exactly the quadratic candidate fan-out the cap exists
-    to prevent. Folding is the write-once, off-the-hot-path place to
-    re-bound it (same recall trade as the build-time cap, same observe
-    metric). The cap value defaults to what the builder stamped into
-    the artifact metadata (``max_bucket=None`` here = use the stamp;
-    uncapped builds stamp nothing and fold losslessly); pass an int
-    (>= 1 — 0 raises instead of silently wiping the index) to
-    override, or ``recap=False`` to fold a capped build losslessly.
-    Stamps are read PER PIECE (not from the merged read's sampled
-    footer) and merged as the minimum across stamped pieces — see
-    :func:`_stamped_max_bucket_pieces` for the policy.
-
-    Replay caveat (ADVICE r11): recapping weakens the gates' replay
-    invariant from "a retried batch re-derives identical survivors"
-    to AT-LEAST-ONCE on admissions — a crash -> compact -> restart
-    sequence can have the replayed newest batch probe a smaller
-    (recapped) history than its original run and admit docs the
-    original dropped (never the reverse: compaction only removes
-    index rows, and removing index rows only removes drop reasons).
-    The newest delta is never folded, which keeps the replayed
-    batch's own state visible; the recap of OLDER deltas is what it
-    may see differently. Run compaction only after the newest delta's
-    batch is confirmed committed in the streaming checkpoint when
-    exact replay identity matters, or pass ``recap=False``."""
-    _validate_recap(max_bucket)
-    idx_dir = f"{history_dir}/index"
-    cs = _bloom_versions(spark, idx_dir, prefix="c=")
-    c0 = max(cs) if cs else None
-    bs = [v for v in _bloom_versions(spark, idx_dir) if c0 is None or v > c0]
-    # leave the newest delta uncompacted: its batch may replay and
-    # must still resolve complete state strictly below its own id
-    fold = sorted(bs)[:-1]
-    if not fold:
-        return c0  # nothing foldable beyond the last compaction
-    top = max(fold)
-    index, sets, dfreq = _containment_state_frames(
-        spark, history_dir, below=top + 1
-    )
-    # re-bound buckets that grew past the build-time cap across deltas
-    # (see docstring); no-op for uncapped builds or recap=False
-    mb = max_bucket
-    if mb is None and recap:
-        pieces = _versioned_state_pieces(
-            spark, history_dir, "index", below=top + 1
-        )
-        mb = _stamped_max_bucket_pieces(
-            spark, [f"{history_dir}/index/{p}" for p in pieces], "__tok__"
-        )
-    if mb is not None and recap:
-        from pd_utils_spark.extensions.dedup import _cap_buckets
-
-        index = _cap_buckets(
-            index, ["__tok__"], mb, "containment_against_bucket"
-        )
-    # write to the NEW c=<top> generation; index commits LAST so an
-    # index-committed generation implies dfreq/sets committed
-    dfreq.write.mode("overwrite").parquet(f"{history_dir}/dfreq/c={top}")
-    sets.write.mode("overwrite").parquet(f"{history_dir}/sets/c={top}")
-    index.write.mode("overwrite").parquet(f"{history_dir}/index/c={top}")
-    if prune:
-        _prune_state_pieces(
-            spark, history_dir, ("index", "sets", "dfreq"), fold, c0
-        )
-    return top
+    The build-time flood cap is RE-APPLIED to the folded ``index``
+    (a hot ``__tok__`` bucket otherwise grows to ``num_deltas x
+    max_bucket``): by default the minimum cap the builder stamped
+    into the artifact metadata (uncapped builds fold losslessly);
+    pass an int (>= 1 — 0 raises instead of silently wiping the
+    index) to override, or ``recap=False`` to fold a capped build
+    losslessly. Crash safety, the never-fold-the-newest rule, the
+    stamp policy and the recap replay caveat are stated once on
+    :class:`_VersionedState`."""
+    state = _containment_state(spark, history_dir)
+    return state.compact(prune, max_bucket, recap)
 
 
 def streaming_sample_quantiles(
@@ -907,11 +901,10 @@ def streaming_sample_quantiles(
     BATCH-BOUNDARY-INSENSITIVE (any split of the same rows into
     micro-batches yields bit-identical state — merge is
     sort-truncate over row-keyed hashes) and equals the batch twin
-    built over the full history in one pass. Replay safety mirrors
-    :func:`streaming_bloom_dedup`: versioned state
+    built over the full history in one pass. Replay safety is the
+    sketch fold's (:func:`_fold_stream`): versioned state
     (``sample_dir/b=<batch>``, committed-``_SUCCESS`` readers), and a
-    retried batch re-merges the SAME rows into a distinct-merge —
-    idempotent by construction.
+    retried batch rebuilds its own version from its predecessor.
 
     Returns the started ``StreamingQuery``.
     """
@@ -923,41 +916,24 @@ def streaming_sample_quantiles(
 
     byvars_l = to_list(byvars)
     q_names = [f"q{int(round(q * 100))}" for q in qs]
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        # single-file micro-batches otherwise hash/struct every batch
-        # row on ONE core (see _spread_batch; result is partitioning-
-        # independent — deterministic sort-truncate)
-        batch_df = _spread_batch(batch_df)
-        fresh = sample_sketch_by(
-            batch_df, byvars_l, col, id_cols=id_cols, k=k, out="sk"
-        )
-        latest = _latest_bloom_version(spark, sample_dir)
-        if latest is not None:
-            old = spark.read.parquet(f"{sample_dir}/b={latest}")
-            fresh = bottomk_rollup(old.unionByName(fresh), byvars_l, "sk", k=k)
-        merged = fresh.localCheckpoint(eager=True)  # consumed twice
-        merged.write.mode("overwrite").parquet(f"{sample_dir}/b={batch_id}")
-        est = quantile_estimate(merged, "sk", list(qs), drop_sketch=False)
-        (
-            est.select(
-                *byvars_l,
-                *q_names,
-                F.size("sk").cast("bigint").alias("n_sampled"),
-                F.lit(batch_id).cast("bigint").alias("as_of_batch"),
-            )
-            .write.mode("overwrite")
-            .parquet(output_dir)
-        )
-        _prune_bloom_versions(spark, sample_dir, keep_from=latest)
-
-    writer = sdf.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir
+    # single-file micro-batches otherwise hash/struct every batch row
+    # on ONE core (see _spread_batch; result is partitioning-
+    # independent — deterministic sort-truncate)
+    return _fold_stream(
+        sdf, sample_dir, checkpoint_dir, available_now,
+        sketch=lambda b, _: sample_sketch_by(
+            _spread_batch(b), byvars_l, col, id_cols=id_cols, k=k, out="sk"
+        ),
+        merge=lambda old, new: bottomk_rollup(
+            old.unionByName(new), byvars_l, "sk", k=k
+        ),
+        snapshot=lambda m: quantile_estimate(
+            m, "sk", list(qs), drop_sketch=False
+        ).select(
+            *byvars_l, *q_names, F.size("sk").cast("bigint").alias("n_sampled")
+        ),
+        output_dir=output_dir,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def streaming_topk(
@@ -985,16 +961,14 @@ def streaming_topk(
     (true heavy hitters never lost, counts never undercount, bounded
     overestimate).
 
-    Replay safety differs from the HLL/bottom-k rows in one
-    load-bearing way: frequent-items COMBINE IS NOT IDEMPOTENT
+    Replay safety: frequent-items COMBINE IS NOT IDEMPOTENT
     (re-merging the same batch double-counts, where HLL union and
     bottom-k distinct-merge are no-ops), so a retried batch must
-    never merge the version it already committed. The reader
-    therefore takes the latest committed version STRICTLY OLDER than
-    the current batch id — a retry rebuilds its own version from the
-    same predecessor and overwrites it bit-identically. Versioned
-    dirs and committed-``_SUCCESS`` readers as in
-    :func:`streaming_bloom_dedup`.
+    never merge the version it already committed — the sketch fold's
+    read rule (:func:`_fold_stream`) takes the latest committed
+    version STRICTLY OLDER than the current batch id, so a retry
+    rebuilds its own version from the same predecessor and overwrites
+    it bit-identically.
 
     Returns the started ``StreamingQuery``.
     """
@@ -1005,38 +979,17 @@ def streaming_topk(
     )
 
     byvars_l = to_list(byvars)
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        fresh = topk_sketch_by(
-            batch_df, byvars_l, col, max_items=max_items, out="sk"
-        )
-        older = [
-            v for v in _bloom_versions(spark, sketch_dir) if v < batch_id
-        ]
-        if older:
-            old = spark.read.parquet(f"{sketch_dir}/b={older[-1]}")
-            fresh = topk_rollup(
-                old.unionByName(fresh), byvars_l, "sk", max_items=max_items
-            )
-        merged = fresh.localCheckpoint(eager=True)  # consumed twice
-        merged.write.mode("overwrite").parquet(f"{sketch_dir}/b={batch_id}")
-        (
-            topk_estimate(merged, "sk", k=k)
-            .withColumn("as_of_batch", F.lit(batch_id).cast("bigint"))
-            .write.mode("overwrite")
-            .parquet(output_dir)
-        )
-        _prune_bloom_versions(
-            spark, sketch_dir, keep_from=older[-1] if older else None
-        )
-
-    writer = sdf.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir
+    return _fold_stream(
+        sdf, sketch_dir, checkpoint_dir, available_now,
+        sketch=lambda b, _: topk_sketch_by(
+            b, byvars_l, col, max_items=max_items, out="sk"
+        ),
+        merge=lambda old, new: topk_rollup(
+            old.unionByName(new), byvars_l, "sk", max_items=max_items
+        ),
+        snapshot=lambda m: topk_estimate(m, "sk", k=k),
+        output_dir=output_dir,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def streaming_weighted_sample(
@@ -1066,8 +1019,8 @@ def streaming_weighted_sample(
     Same two deterministic-merge properties as
     :func:`streaming_sample_quantiles`, inherited from the same
     sort-truncate: batch-boundary-INSENSITIVE state bit-for-bit, and
-    equality with the one-pass batch twin; replay-safe because the
-    distinct-merge of a retried batch's identical keys is a no-op.
+    equality with the one-pass batch twin; replay-safe under the
+    sketch fold's read rule (:func:`_fold_stream`).
     While a group's (positive-weight) rows fit in ``k`` the sample IS
     the group and the snapshot aggregates are exact.
 
@@ -1079,47 +1032,26 @@ def streaming_weighted_sample(
     )
 
     byvars_l = to_list(byvars)
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        # see _spread_batch — same single-file micro-batch rationale as
-        # streaming_sample_quantiles; A-ES keys are row-deterministic
-        batch_df = _spread_batch(batch_df)
-        fresh = weighted_sample_sketch_by(
-            batch_df, byvars_l, col, weight_col, id_cols=id_cols, k=k,
-            out="sk",
-        )
-        latest = _latest_bloom_version(spark, sample_dir)
-        if latest is not None:
-            old = spark.read.parquet(f"{sample_dir}/b={latest}")
-            fresh = bottomk_rollup(old.unionByName(fresh), byvars_l, "sk", k=k)
-        merged = fresh.localCheckpoint(eager=True)  # consumed twice
-        merged.write.mode("overwrite").parquet(f"{sample_dir}/b={batch_id}")
-        (
-            merged.select(
-                *byvars_l,
-                F.size("sk").cast("bigint").alias("n_sampled"),
-                F.round(
-                    F.aggregate(
-                        F.col("sk"),
-                        F.lit(0.0),
-                        lambda acc, x: acc + x["v"],
-                    ),
-                    6,
-                ).alias("sum_sampled"),
-                F.lit(batch_id).cast("bigint").alias("as_of_batch"),
-            )
-            .write.mode("overwrite")
-            .parquet(output_dir)
-        )
-        _prune_bloom_versions(spark, sample_dir, keep_from=latest)
-
-    writer = sdf.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir
+    # see _spread_batch — same single-file micro-batch rationale as
+    # streaming_sample_quantiles; A-ES keys are row-deterministic
+    return _fold_stream(
+        sdf, sample_dir, checkpoint_dir, available_now,
+        sketch=lambda b, _: weighted_sample_sketch_by(
+            _spread_batch(b), byvars_l, col, weight_col, id_cols=id_cols,
+            k=k, out="sk",
+        ),
+        merge=lambda old, new: bottomk_rollup(
+            old.unionByName(new), byvars_l, "sk", k=k
+        ),
+        snapshot=lambda m: m.select(
+            *byvars_l,
+            F.size("sk").cast("bigint").alias("n_sampled"),
+            F.round(
+                F.aggregate("sk", F.lit(0.0), lambda acc, x: acc + x["v"]), 6
+            ).alias("sum_sampled"),
+        ),
+        output_dir=output_dir,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def read_latest_state(spark, state_dir: str):
@@ -1136,71 +1068,10 @@ def read_latest_state(spark, state_dir: str):
     week of per-day sample sketches up with ``bottomk_rollup``,
     estimate from the live HLL table — all without touching the
     stream's checkpoint."""
-    v = _latest_bloom_version(spark, state_dir)
-    if v is None:
+    versions = _versions(spark, state_dir)
+    if not versions:
         return None, None
-    return v, spark.read.parquet(f"{state_dir}/b={v}")
-
-
-def _bloom_versions(
-    spark, bloom_dir: str, committed_only: bool = True, prefix: str = "b="
-) -> list[int]:
-    """Filter versions under a :func:`streaming_bloom_dedup` state
-    dir. ``committed_only`` keeps only versions whose ``_SUCCESS``
-    marker exists — a version directory APPEARS as soon as the writer
-    mkdirs it, before any parquet file commits, so a crash mid-write
-    (or a concurrent reader racing the write) must never mistake the
-    partial directory for state. ``prefix`` selects the version
-    namespace (``b=`` per-batch versions; ``c=`` the containment
-    gate's compacted generations)."""
-    jvm = spark.sparkContext._jvm
-    jsc = spark.sparkContext._jsc
-    path = jvm.org.apache.hadoop.fs.Path(bloom_dir)
-    fs = path.getFileSystem(jsc.hadoopConfiguration())
-    if not fs.exists(path):
-        return []
-    out = []
-    n = len(prefix)
-    for st in fs.listStatus(path):
-        name = st.getPath().getName()
-        if name.startswith(prefix) and name[n:].isdigit():
-            if committed_only and not fs.exists(
-                jvm.org.apache.hadoop.fs.Path(
-                    f"{bloom_dir}/{name}/_SUCCESS"
-                )
-            ):
-                continue
-            out.append(int(name[n:]))
-    return sorted(out)
-
-
-def _latest_bloom_version(spark, bloom_dir: str) -> int | None:
-    """Latest COMMITTED filter version under a
-    :func:`streaming_bloom_dedup` state dir (also the reader API for
-    downstream batch jobs: ``spark.read.parquet(f"{d}/b={v}")``)."""
-    versions = _bloom_versions(spark, bloom_dir)
-    return versions[-1] if versions else None
-
-
-def _prune_bloom_versions(spark, bloom_dir: str, keep_from: int | None) -> None:
-    """Best-effort removal of filter versions OLDER than ``keep_from``
-    (the previous version is kept so a crash mid-write of the current
-    one never strands the stream without state). Prunes partial
-    (uncommitted) stale versions too."""
-    if keep_from is None:
-        return
-    jvm = spark.sparkContext._jvm
-    jsc = spark.sparkContext._jsc
-    path = jvm.org.apache.hadoop.fs.Path(bloom_dir)
-    fs = path.getFileSystem(jsc.hadoopConfiguration())
-    for v in _bloom_versions(spark, bloom_dir, committed_only=False):
-        if v < keep_from:
-            try:
-                fs.delete(
-                    jvm.org.apache.hadoop.fs.Path(f"{bloom_dir}/b={v}"), True
-                )
-            except Exception:
-                pass  # pruning is cosmetic; never fail the batch for it
+    return versions[-1], spark.read.parquet(f"{state_dir}/b={versions[-1]}")
 
 
 def streaming_sessionize(
@@ -1330,15 +1201,10 @@ def streaming_minhash_dedup(
     the history side. ``compact_minhash_state`` folds deltas into a
     ``c=<top>`` generation (stream stopped).
 
-    Replay safety (same crash algebra as the containment gate): state
-    versions are keyed by ``batch_id``, written BEFORE the output
-    append with ``keys`` committed LAST, and a batch reads only
-    committed versions STRICTLY BELOW its own id — a retried batch
-    ignores its crashed half-write, re-derives identical survivors,
-    idempotently overwrites its own version dirs, and re-appends.
-    ``output_dir`` is therefore AT-LEAST-ONCE (finish downstream with
-    ``exact_dedup`` on id when exactly-once matters) while the
-    artifact state is exactly-once.
+    Replay safety: ``keys`` commits last and the output appends
+    after every state write; ``output_dir`` is AT-LEAST-ONCE, the
+    artifact state exactly-once — the crash algebra is stated on
+    :class:`_VersionedState`.
 
     Shared band keys: a micro-batch is shingled and minhashed ONCE.
     The within-batch dedup persists the batch's shingle sets and its
@@ -1359,10 +1225,9 @@ def streaming_minhash_dedup(
         dedup_minhash_against_index,
         minhash_history_frames,
     )
-    from pd_utils_spark.utils import release_registered
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
+        state = _minhash_state(batch_df.sparkSession, history_dir)
         batch_df = _spread_batch(batch_df)
         try:
             # ONE tokenize pass and ONE signature aggregation per
@@ -1380,21 +1245,12 @@ def streaming_minhash_dedup(
                 max_bucket,
             )
             surv_sh = bsh.join(losers, idcol, "left_anti")
-            state = _minhash_state_frames(spark, history_dir, below=batch_id)
-            if state is not None:
-                keys, shingles = state
+            history = state.read(below=batch_id)
+            if history is not None:
                 survivors = dedup_minhash_against_index(
-                    survivors,
-                    keys,
-                    shingles,
-                    textcol=textcol,
-                    idcol=idcol,
-                    k=k,
-                    num_hashes=num_hashes,
-                    bands=bands,
-                    threshold=threshold,
-                    max_bucket=max_bucket,
-                    batch_shingles=surv_sh,
+                    survivors, *history, textcol=textcol, idcol=idcol, k=k,
+                    num_hashes=num_hashes, bands=bands, threshold=threshold,
+                    max_bucket=max_bucket, batch_shingles=surv_sh,
                     batch_keys=bkeys.join(losers, idcol, "left_anti"),
                 )
             survivors = survivors.localCheckpoint(eager=True)  # 4 writes
@@ -1407,66 +1263,22 @@ def streaming_minhash_dedup(
                 shingles=surv_sh.join(kept, idcol, "left_semi"),
                 band_keys=bkeys.join(kept, idcol, "left_semi"),
             )
-            # Independent writes overlap (guide §2.6, r11) — same
-            # schedule as the containment gate: docs reads only the
-            # checkpointed survivors and shingles only the persisted
-            # batch shingles, so the two run concurrently; keys (read
-            # from the persisted band-key table) still commits
-            # LAST among the state artifacts and the output append
-            # starts only after every state write returned. Callables
-            # are wrapped with inheritable_thread_target (r12) so job-
-            # group cancellation reaches the in-flight writes and the
-            # pinned-thread JVM side is cleaned up deterministically.
-            from concurrent.futures import ThreadPoolExecutor
-
-            from pyspark import inheritable_thread_target
-
-            writes = [
-                lambda: frames["shingles"]
-                .write.mode("overwrite")
-                .parquet(f"{history_dir}/shingles/b={batch_id}"),
-                lambda: survivors.select(idcol, textcol)
-                .write.mode("overwrite")
-                .parquet(f"{history_dir}/docs/b={batch_id}"),
-            ]
-            with ThreadPoolExecutor(max_workers=2) as pool:
-                futs = [
-                    pool.submit(inheritable_thread_target(spark)(w))
-                    for w in writes
-                ]
-                for f in futs:
-                    f.result()
-            frames["keys"].write.mode("overwrite").parquet(
-                f"{history_dir}/keys/b={batch_id}"
+            # one 2-wide wave (shingles reads the persisted batch
+            # shingles, docs the checkpointed survivors), then keys
+            # (from the persisted band-key table), then the output
+            docs = survivors.select(idcol, textcol)
+            state.write_batch(
+                batch_id, {"shingles": frames["shingles"], "docs": docs,
+                           "keys": frames["keys"]},
+                survivors, output_dir,
             )
-            survivors.write.mode("append").parquet(output_dir)
         finally:
             # per-batch persists must not accumulate across the stream
             release_registered("dedup_minhash_lsh")
             release_registered("minhash_history_frames")
             release_registered("dedup_minhash_against_index")
 
-    writer = sdf.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def _minhash_state_frames(spark, history_dir: str, below: int):
-    """Accumulated MinHash-gate artifacts strictly below batch id
-    ``below`` (newest committed ``c=`` generation + newer ``b=``
-    deltas, enumerated from ``keys``). Returns ``(keys, shingles)``
-    or ``None``."""
-    pieces = _versioned_state_pieces(spark, history_dir, "keys", below)
-    if not pieces:
-        return None
-    keys = spark.read.parquet(*[f"{history_dir}/keys/{p}" for p in pieces])
-    shingles = spark.read.parquet(
-        *[f"{history_dir}/shingles/{p}" for p in pieces]
-    )
-    return keys, shingles
+    return _start(sdf, process, checkpoint_dir, available_now)
 
 
 def compact_minhash_state(
@@ -1475,61 +1287,19 @@ def compact_minhash_state(
 ):
     """Fold a :func:`streaming_minhash_dedup` state dir's delta
     versions into one compacted ``c=<top>`` generation — the MinHash
-    sibling of :func:`compact_containment_state` (same crash-safety:
-    new paths only, ``keys`` commits last, readers prefer the newest
-    committed compaction, pruning is cosmetic; run with the stream
-    stopped; **the newest delta is never folded** — its batch may
-    replay after a crash and reads strictly below its own id, so a
-    compaction covering it would leave that replay probing empty
-    history). Returns the compacted generation id, or the existing
-    one when there is nothing to fold.
+    sibling of :func:`compact_containment_state` (run with the stream
+    stopped; the newest delta is never folded). Returns the compacted
+    generation id, or the existing one when there is nothing to fold.
 
-    Like its containment sibling, folding RE-APPLIES the build-time
-    flood cap to the folded ``keys`` (a hot ``(band, band_key)``
-    bucket otherwise grows to ``num_deltas x max_bucket`` over the
-    stream's lifetime); the cap defaults to the value the builder
-    stamped into the artifact metadata (read PER PIECE, merged as the
-    minimum across stamped pieces — see
-    :func:`_stamped_max_bucket_pieces`), pass an int (>= 1; 0 raises)
-    to override or ``recap=False`` to fold losslessly. The replay
-    caveat documented on :func:`compact_containment_state` applies
-    verbatim: recapping makes post-compaction replays at-least-once
-    on admissions."""
-    _validate_recap(max_bucket)
-    idx_dir = f"{history_dir}/keys"
-    cs = _bloom_versions(spark, idx_dir, prefix="c=")
-    c0 = max(cs) if cs else None
-    bs = [v for v in _bloom_versions(spark, idx_dir) if c0 is None or v > c0]
-    fold = sorted(bs)[:-1]  # replay safety: keep the newest delta
-    if not fold:
-        return c0
-    top = max(fold)
-    keys, shingles = _minhash_state_frames(spark, history_dir, below=top + 1)
-    # re-bound band buckets that grew past the build-time cap across
-    # deltas (see docstring); no-op for uncapped builds or recap=False
-    mb = max_bucket
-    if mb is None and recap:
-        pieces = _versioned_state_pieces(
-            spark, history_dir, "keys", below=top + 1
-        )
-        mb = _stamped_max_bucket_pieces(
-            spark, [f"{history_dir}/keys/{p}" for p in pieces], "band_key"
-        )
-    if mb is not None and recap:
-        from pd_utils_spark.extensions.dedup import _cap_buckets
-
-        keys = _cap_buckets(
-            keys, ["band", "band_key"], mb, "lsh_bucket_cap"
-        )
-    shingles.write.mode("overwrite").parquet(
-        f"{history_dir}/shingles/c={top}"
-    )
-    keys.write.mode("overwrite").parquet(f"{history_dir}/keys/c={top}")
-    if prune:
-        _prune_state_pieces(
-            spark, history_dir, ("keys", "shingles"), fold, c0
-        )
-    return top
+    Folding RE-APPLIES the build-time flood cap to the folded
+    ``keys`` (a hot ``(band, band_key)`` bucket otherwise grows to
+    ``num_deltas x max_bucket`` over the stream's lifetime): by
+    default the minimum stamped cap; pass an int (>= 1; 0 raises) to
+    override or ``recap=False`` to fold losslessly. Crash safety, the
+    stamp policy and the recap replay caveat are stated once on
+    :class:`_VersionedState`."""
+    state = _minhash_state(spark, history_dir)
+    return state.compact(prune, max_bucket, recap)
 
 
 def stateful_running_agg(

@@ -1496,16 +1496,14 @@ class TestStreamingBloomDedup:
                 while time.time() < deadline and len(ids()) < 3:
                     time.sleep(1)
                 assert ids() == [1, 3, 11]  # 10 dropped via the filter
-                from pd_utils_spark.streaming.stateful import (
-                    _latest_bloom_version,
-                )
+                from pd_utils_spark.streaming import read_latest_state
 
                 # poll until batch 2's filter version COMMITS (the
                 # output append precedes the filter write, so ids()
                 # reaching 3 does not imply the write finished)
                 v = None
                 while time.time() < deadline and (v is None or v < 1):
-                    v = _latest_bloom_version(spark, bld)
+                    v, _ = read_latest_state(spark, bld)
                     if v is None or v < 1:
                         time.sleep(1)
                 assert v is not None and v >= 1
@@ -1624,11 +1622,9 @@ class TestStreamingDistinctHll:
                 while time.time() < deadline and snap().get("g", (0, 0))[0] < 3:
                     time.sleep(1)
                 assert snap() == {"g": (3, 1), "h": (2, 1)}
-                from pd_utils_spark.streaming.stateful import (
-                    _latest_bloom_version,
-                )
+                from pd_utils_spark.streaming import read_latest_state
 
-                v = _latest_bloom_version(spark, skd)
+                v, _ = read_latest_state(spark, skd)
                 assert v == 1
                 state = spark.read.parquet(f"{skd}/b={v}")
                 assert state.count() == 2  # one sketch row per group
@@ -1719,11 +1715,9 @@ class TestStreamingSampleQuantiles:
                 from pd_utils_spark.extensions.sketches import (
                     sample_sketch_by,
                 )
-                from pd_utils_spark.streaming.stateful import (
-                    _latest_bloom_version,
-                )
+                from pd_utils_spark.streaming import read_latest_state
 
-                v = _latest_bloom_version(spark, smd)
+                v, _ = read_latest_state(spark, smd)
                 assert v == 1
                 state = {
                     r.event_type: [tuple(e) for e in r.sk]
@@ -1843,6 +1837,159 @@ class TestReadLatestState:
             assert v == 1 and df.count() == 5
         finally:
             shutil.rmtree(base, ignore_errors=True)
+
+
+class TestSketchFoldReadRule:
+    """Every sketch fold reads the newest committed version STRICTLY
+    BELOW its batch id: a batch 0 started on a fresh checkpoint must
+    ignore a committed ``<state_dir>/b=0`` it did not write (a
+    foreign seed standing in for its own crashed-then-retried
+    version) and produce the snapshot of a run without the seed."""
+
+    ROWS = [
+        (1, "alpha beta gamma", "g", 1.0, 10, 1.0, 3),
+        (2, "delta epsilon zeta", "g", 2.0, 11, 2.0, 3),
+        (3, "eta theta iota", "h", 3.0, 12, 1.0, 4),
+        (4, "kappa lambda mu", "g", 4.0, 13, 3.0, 5),
+    ]
+    COLS = (
+        "doc_id bigint, text string, event_type string, value double, "
+        "user_id bigint, weight double, item bigint"
+    )
+
+    START = {
+        "bloom": lambda sdf, out, st, ck: W.streaming_bloom_dedup(
+            sdf, out, st, ck, m_bits=1024, k=3, available_now=True
+        ),
+        "hll": lambda sdf, out, st, ck: W.streaming_distinct_hll(
+            sdf, out, st, ck, available_now=True
+        ),
+        "quantiles": lambda sdf, out, st, ck: W.streaming_sample_quantiles(
+            sdf, out, st, ck, id_cols="doc_id", k=8, available_now=True
+        ),
+        "topk": lambda sdf, out, st, ck: W.streaming_topk(
+            sdf, out, st, ck, max_items=8, k=4, available_now=True
+        ),
+        "weighted": lambda sdf, out, st, ck: W.streaming_weighted_sample(
+            sdf, out, st, ck, id_cols="doc_id", k=8, available_now=True
+        ),
+    }
+
+    def _run(self, spark, op, rows, base, state_dir):
+        src = f"{base}/src"
+        spark.createDataFrame(rows, self.COLS).coalesce(1).write.parquet(src)
+        sdf = spark.readStream.schema(self.COLS).parquet(src)
+        q = self.START[op](sdf, f"{base}/out", state_dir, f"{base}/ckpt")
+        try:
+            q.awaitTermination(120)
+        finally:
+            q.stop()
+        return sorted(
+            tuple(r) for r in spark.read.parquet(f"{base}/out").collect()
+        )
+
+    @pytest.mark.parametrize("op", sorted(START))
+    def test_batch_zero_ignores_foreign_committed_version(
+        self, spark, tmp_path, op
+    ):
+        import os
+
+        # foreign seed: same texts (a Bloom member hit), shifted values,
+        # users and items (HLL / sample / frequent-items differences)
+        foreign = [
+            (i + 100, t, g, v + 100, u + 100, w, it + 100)
+            for i, t, g, v, u, w, it in self.ROWS
+        ]
+        st = str(tmp_path / "state")
+        self._run(spark, op, foreign, str(tmp_path / "seed"), st)
+        assert os.path.exists(f"{st}/b=0/_SUCCESS")
+        seeded = self._run(spark, op, self.ROWS, str(tmp_path / "a"), st)
+        clean = self._run(
+            spark, op, self.ROWS, str(tmp_path / "b"), str(tmp_path / "st2")
+        )
+        assert seeded == clean
+
+
+class TestVersionedStateWriteSchedule:
+    """Fault injection into the shared gate write schedule: a wave
+    artifact whose write raises must leave the commit-last artifact
+    uncommitted, the output untouched and the batch invisible to
+    readers; re-running the same batch id without the fault must give
+    the state of an uninterrupted run."""
+
+    B0 = [(1, "alpha bravo charlie delta echo foxtrot"),
+          (2, "zulu yankee xray whiskey victor uniform")]
+    B1 = [(3, "novel content about spark streams today")]
+
+    def _gate(self, spark, gate, hist):
+        from pd_utils_spark.extensions.dedup import (
+            containment_index_frames,
+            minhash_history_frames,
+        )
+        from pd_utils_spark.streaming.stateful import (
+            _containment_state,
+            _minhash_state,
+        )
+
+        if gate == "containment":
+            state = _containment_state(spark, hist)
+            return state, lambda df: containment_index_frames(df, k=1)
+        state = _minhash_state(spark, hist)
+        return state, lambda df: minhash_history_frames(
+            df, k=3, num_hashes=12, bands=4
+        )
+
+    def _write(self, spark, gate, hist, out, batch_id, rows, fault=False):
+        from pd_utils_spark.utils import release_registered
+
+        state, build = self._gate(spark, gate, hist)
+        df = spark.createDataFrame(rows, ["doc_id", "text"])
+        frames = {**build(df), "docs": df}
+        if fault:
+            boom = F.udf(lambda x: x // 0, "int")
+            wave = next(a for a in frames if a not in (state.last, "docs"))
+            frames[wave] = frames[wave].withColumn(
+                "__boom__", boom(F.lit(1))
+            )
+        try:
+            state.write_batch(batch_id, frames, df, out)
+        finally:
+            release_registered("containment_index_frames")
+            release_registered("minhash_history_frames")
+        return state
+
+    @pytest.mark.parametrize("gate", ["containment", "minhash"])
+    def test_failed_wave_write_commits_nothing_visible(
+        self, spark, tmp_path, gate
+    ):
+        import os
+
+        hist, out = str(tmp_path / "hist"), str(tmp_path / "out")
+        self._write(spark, gate, hist, out, 0, self.B0)
+        with pytest.raises(Exception):
+            self._write(spark, gate, hist, out, 1, self.B1, fault=True)
+        state, _ = self._gate(spark, gate, hist)
+        assert not os.path.exists(f"{hist}/{state.last}/b=1/_SUCCESS")
+        assert sorted(
+            r.doc_id for r in spark.read.parquet(out).collect()
+        ) == [1, 2]
+        assert state.pieces(below=2) == ["b=0"]
+        # retry the same batch id without the fault
+        self._write(spark, gate, hist, out, 1, self.B1)
+        assert state.pieces(below=2) == ["b=0", "b=1"]
+        ref_hist, ref_out = str(tmp_path / "ref"), str(tmp_path / "ref_out")
+        self._write(spark, gate, ref_hist, ref_out, 0, self.B0)
+        self._write(spark, gate, ref_hist, ref_out, 1, self.B1)
+
+        def rows(path):
+            return sorted(tuple(r) for r in spark.read.parquet(path).collect())
+
+        for a in (*state.artifacts, "docs"):
+            for v in (0, 1):
+                assert rows(f"{hist}/{a}/b={v}") == rows(
+                    f"{ref_hist}/{a}/b={v}"
+                )
+        assert rows(out) == rows(ref_out)
 
 
 class TestStreamingWeightedSample:
@@ -2120,15 +2267,11 @@ class TestStreamingContainmentDedup:
             # reads strictly below its own id and must still resolve
             # batch 0's full history — not the empty set the old
             # fold-everything compaction left it
-            from pd_utils_spark.streaming.stateful import (
-                _containment_state_frames,
-                _versioned_state_pieces,
-            )
+            from pd_utils_spark.streaming.stateful import _containment_state
 
-            assert _versioned_state_pieces(spark, hist, "index", 1) == [
-                "c=0"
-            ]
-            replay_state = _containment_state_frames(spark, hist, below=1)
+            state = _containment_state(spark, hist)
+            assert state.pieces(below=1) == ["c=0"]
+            replay_state = state.read(below=1)
             assert replay_state is not None
             assert {
                 r["__hid__"] for r in replay_state[1].collect()
@@ -2166,8 +2309,7 @@ class TestStreamingContainmentDedup:
             dedup_containment_against_index,
         )
         from pd_utils_spark.streaming.stateful import (
-            _containment_state_frames,
-            _versioned_state_pieces,
+            _containment_state,
             compact_containment_state,
         )
         from pd_utils_spark.utils import release_registered
@@ -2194,7 +2336,8 @@ class TestStreamingContainmentDedup:
         import os
 
         assert os.path.exists(f"{hist}/index/b=0/_SUCCESS")
-        assert _versioned_state_pieces(spark, hist, "index", 2) == [
+        state = _containment_state(spark, hist)
+        assert state.pieces(below=2) == [
             "c=0", "b=1",
         ]
         batch = spark.createDataFrame(
@@ -2203,7 +2346,7 @@ class TestStreamingContainmentDedup:
              (12, "wholly fresh third batch words")],   # novel
             ["doc_id", "text"],
         )
-        index, sets, dfreq = _containment_state_frames(spark, hist, below=2)
+        index, sets, dfreq = state.read(below=2)
         want = sorted(
             tuple(r)
             for r in dedup_containment_against_index(
@@ -2242,10 +2385,7 @@ class TestCompactionReappliesFloodCap:
 
     def test_minhash_compaction_recaps_folded_keys(self, spark, tmp_path):
         from pd_utils_spark.extensions.dedup import minhash_history_frames
-        from pd_utils_spark.streaming.stateful import (
-            _minhash_state_frames,
-            compact_minhash_state,
-        )
+        from pd_utils_spark.streaming.stateful import compact_minhash_state
         from pd_utils_spark.utils import release_registered
 
         hist = str(tmp_path / "hist")
@@ -2370,13 +2510,14 @@ class TestSpreadBatchSizeAware:
     def test_large_estimate_spreads_to_parallelism(
         self, spark, tmp_path, monkeypatch
     ):
+        from pd_utils_spark.streaming import stateful
         from pd_utils_spark.streaming.stateful import _spread_batch
 
         p = str(tmp_path / "grain")
         spark.range(100).coalesce(1).write.parquet(p)
         df = spark.read.parquet(p)
         # 1-byte grain: every batch's estimate exceeds it -> full fan
-        monkeypatch.setenv("SPARK_GRAFT_SPREAD_TARGET_BYTES", "1")
+        monkeypatch.setattr(stateful, "_SPREAD_TARGET_BYTES", 1)
         out = _spread_batch(df)
         assert (
             out.rdd.getNumPartitions()
@@ -2384,6 +2525,7 @@ class TestSpreadBatchSizeAware:
         )
 
     def test_grain_scales_partition_count(self, spark, tmp_path, monkeypatch):
+        from pd_utils_spark.streaming import stateful
         from pd_utils_spark.streaming.stateful import _spread_batch
 
         p = str(tmp_path / "mid")
@@ -2396,9 +2538,7 @@ class TestSpreadBatchSizeAware:
         )
         assert est > 0
         # grain = half the estimate -> exactly ceil(est/grain) = 2 parts
-        monkeypatch.setenv(
-            "SPARK_GRAFT_SPREAD_TARGET_BYTES", str((est + 1) // 2)
-        )
+        monkeypatch.setattr(stateful, "_SPREAD_TARGET_BYTES", (est + 1) // 2)
         out = _spread_batch(df)
         assert out.rdd.getNumPartitions() == 2
 
@@ -2463,7 +2603,7 @@ class TestRecapValidationAndPolicy:
 
     def test_mixed_stamps_take_minimum_per_piece(self, spark, tmp_path):
         from pd_utils_spark.streaming.stateful import (
-            _stamped_max_bucket_pieces,
+            _minhash_state,
             compact_minhash_state,
         )
 
@@ -2471,12 +2611,7 @@ class TestRecapValidationAndPolicy:
         # deltas built under DIFFERENT caps (a restarted stream with a
         # changed max_bucket); b=2 stays unfolded (newest delta)
         self._write_minhash_deltas(spark, hist, caps=(9, 5, 7))
-        assert (
-            _stamped_max_bucket_pieces(
-                spark, [f"{hist}/keys/b=0", f"{hist}/keys/b=1"], "band_key"
-            )
-            == 5
-        )
+        assert _minhash_state(spark, hist).stamped_cap(below=2) == 5
         assert compact_minhash_state(spark, hist) == 1
         folded = spark.read.parquet(f"{hist}/keys/c=1")
         sizes = folded.groupBy("band", "band_key").count()
