@@ -6,17 +6,18 @@ Spark spelling silently stops scaling: ``Window.orderBy(x)`` with no
 MPI/parallel-scan does it, and how Spark's own ``zipWithIndex``
 numbers rows) is a two-level scan:
 
-1. range-partition by the order columns, sort within partitions;
+1. range-partition by the order columns, tag each row with its
+   partition id and materialize that once (``localCheckpoint``);
 2. per-partition LOCAL running sums (parallel — a window partitioned
-   by ``spark_partition_id()`` is embarrassingly parallel);
+   by the partition id is embarrassingly parallel);
 3. per-partition totals (one tiny agg: #partitions rows), cumulated
    on a single task (trivially small), broadcast-joined back as
    per-partition offsets;
 4. global prefix = local prefix + offset of all earlier partitions.
 
-Cost: one range shuffle of the data + one O(#partitions) side plan —
-vs the single-task total-order window whose cost is the whole dataset
-through one core.
+Cost: one range shuffle of the data (run eagerly, when the scan is
+built) + one O(#partitions) side plan — vs the single-task
+total-order window whose cost is the whole dataset through one core.
 
 Ties across partition boundaries: the range partitioner may split
 equal order-keys between adjacent partitions, so prefix values WITHIN
@@ -80,10 +81,17 @@ def prefix_agg(
     n = partitions or int(
         df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
     )
+    # materialized once: both branches below must see ONE partition
+    # assignment. Each evaluation of a range exchange samples its own
+    # bounds (seeded by RDD id, drawn in input row order), so two
+    # evaluations of a lazy ``ranged`` can disagree on ``__pid__`` and
+    # pair local prefixes with the wrong offsets. A cache could be
+    # recomputed and resampled without notice; a lost local-checkpoint
+    # block fails the job instead.
     ranged = (
         df.repartitionByRange(n, *[F.col(c) for c in order_l])
-        .sortWithinPartitions(*order_l)
         .withColumn("__pid__", F.spark_partition_id())
+        .localCheckpoint(eager=True)
     )
     local_w = (
         Window.partitionBy("__pid__")

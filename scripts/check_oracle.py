@@ -8,9 +8,10 @@ Usage: python scripts/check_oracle.py [sf_dir] [query ...]
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 import numpy as np
@@ -18,6 +19,7 @@ import pandas as pd
 
 import __spark_entry__ as entry
 from pd_utils_spark.session import get_spark
+from pd_utils_spark.utils import release_registered
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part",
@@ -105,6 +107,10 @@ def main():
         except Exception as e:
             failures += 1
             print(f"{name:32s} ERROR: {type(e).__name__}: {str(e)[:500]}")
+        finally:
+            # no query's persisted frames outlive it
+            spark.catalog.clearCache()
+            release_registered()
     print(f"\n{'ALL OK' if failures == 0 else f'{failures} FAILURES'}")
     sys.exit(1 if failures else 0)
 

@@ -1,130 +1,87 @@
-"""Profile one declared query: run it isolated with the Spark UI
-enabled and dump per-job/per-stage wall+metrics from the UI REST API,
-so optimization targets the stage that actually costs time (guide §1).
+"""Profile one declared query: run it in its own session with Spark's
+event log on and fold the log into per-job rows, so optimization
+targets the job that actually costs time and the driver time between
+jobs is named rather than guessed.
 
 Usage:
-    python scripts/profile_query.py <query> [--sf=DIR] [--reps=N]
+    python scripts/profile_query.py <query> --sf=DIR [--reps=N] [--conf=k=v ...]
 
-Prints per-stage rows (submit-ordered): stage id, name (first 60
-chars), duration ms, task count, shuffle read/write bytes, input
-bytes — then a summary of total stage-time vs wall.
+``--conf`` sets runtime SQL settings on the session. Each rep runs
+under its own job group and prints one row per job (start offset,
+duration, stages, tasks, executor CPU, GC, shuffle write, spill), then
+the rep's wall time split into the union of its job intervals and the
+driver gap (wall time during which no Spark job ran: Python, plan
+building, Catalyst planning, scheduling).
 """
 
 from __future__ import annotations
 
-import json
+import argparse
 import os
 import sys
+import tempfile
 import time
-import urllib.request
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path[:0] = [ROOT, os.path.join(ROOT, "perfbench")]
 
-import __spark_entry__ as entry
+import __spark_entry__ as entry  # noqa: E402
+from spans import driver_gap_s, read_event_log, spark_counters  # noqa: E402
 
-from pyspark.sql import SparkSession
-
-
-def get_spark_ui(cpus: str, extra: dict | None = None) -> SparkSession:
-    b = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("profile")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", "24g")
-        .config("spark.ui.enabled", "true")
-    )
-    for k, v in (extra or {}).items():
-        b = b.config(k, v)
-    return b.getOrCreate()
+from pd_utils_spark.session import get_spark  # noqa: E402
 
 
 def main() -> None:
-    args = [a for a in sys.argv[1:] if not a.startswith("--")]
-    sf_dir = "/root/testdata/sf0.1"
-    reps = 1
-    for a in sys.argv[1:]:
-        if a.startswith("--sf="):
-            sf_dir = a.split("=", 1)[1]
-        if a.startswith("--reps="):
-            reps = int(a.split("=", 1)[1])
-    name = args[0]
-    extra = {}
-    for a in sys.argv[1:]:
-        if a.startswith("--conf="):
-            k, v = a.split("=", 2)[1:]
-            extra[k] = v
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = get_spark_ui(cpus, extra)
-    spark.sparkContext.setLogLevel("ERROR")
-    ui = spark.sparkContext.uiWebUrl
-    app_id = spark.sparkContext.applicationId
-    qs = entry.queries()
+    ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
+    ap.add_argument("query")
+    ap.add_argument("--sf", required=True, help="scale-factor data directory")
+    ap.add_argument("--reps", type=int, default=1)
+    ap.add_argument("--conf", action="append", default=[], metavar="K=V")
+    args = ap.parse_args()
 
-    # warmup (absorbs codegen/python-worker spin-up), not profiled
-    from pyspark.sql import functions as F
-    _w = spark.range(10_000).selectExpr("id", "id % 7 AS k")
-    _w.join(F.broadcast(_w.groupBy("k").count()), "k").write.format(
-        "noop"
-    ).mode("overwrite").save()
-    _w.mapInPandas(lambda it: it, "id long, k long").write.format(
-        "noop"
-    ).mode("overwrite").save()
+    with tempfile.TemporaryDirectory(prefix="profile-eventlog-") as evlog:
+        conf = ["spark.ui.showConsoleProgress=false",
+                "spark.eventLog.enabled=true", "spark.eventLog.compress=false",
+                "spark.eventLog.rolling.enabled=false", f"spark.eventLog.dir={evlog}"]
+        os.environ["PYSPARK_SUBMIT_ARGS"] = " ".join(
+            [f"--conf {c}" for c in conf] + ["pyspark-shell"])
+        spark = get_spark("profile")
+        spark.sparkContext.setLogLevel("ERROR")
+        for kv in args.conf:
+            spark.conf.set(*kv.split("=", 1))
+        query = entry.queries()[args.query]
 
-    def stages():
-        with urllib.request.urlopen(
-            f"{ui}/api/v1/applications/{app_id}/stages?status=complete"
-        ) as r:
-            return json.loads(r.read())
+        # warmup (absorbs codegen/python-worker spin-up), not profiled
+        w = spark.range(10_000).selectExpr("id", "id % 7 AS k")
+        w.join(w.groupBy("k").count().hint("broadcast"), "k").write.format(
+            "noop").mode("overwrite").save()
+        w.mapInPandas(lambda it: it, "id long, k long").write.format(
+            "noop").mode("overwrite").save()
 
-    for rep in range(reps):
-        pre = {s["stageId"] for s in stages()}
-        t0 = time.perf_counter()
-        qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-        wall = time.perf_counter() - t0
-        spark.catalog.clearCache()
-        time.sleep(0.5)
-        post = stages()
-        new = sorted(
-            (s for s in post if s["stageId"] not in pre),
-            key=lambda s: s["stageId"],
-        )
-        total_ms = 0
-        rows = []
-        for s in new:
-            try:
-                sub = s.get("firstTaskLaunchedTime") or s.get("submissionTime")
-                comp = s.get("completionTime")
-                from datetime import datetime
+        reps = []
+        for rep in range(args.reps):
+            group = f"{args.query}:{rep}"
+            spark.sparkContext.setJobGroup(group, group)
+            t0 = time.time()
+            query(spark, args.sf).write.format("noop").mode("overwrite").save()
+            reps.append((group, t0, time.time()))
+            spark.catalog.clearCache()
+        app_id = spark.sparkContext.applicationId
+        spark.stop()  # closes the event log under its final name
+        log = read_event_log(os.path.join(evlog, app_id))
 
-                fmt = "%Y-%m-%dT%H:%M:%S.%f%Z"
-                dur = (
-                    datetime.strptime(comp, fmt)
-                    - datetime.strptime(sub, fmt)
-                ).total_seconds() * 1000
-            except Exception:
-                dur = -1
-            total_ms += max(dur, 0)
-            rows.append(
-                (
-                    s["stageId"],
-                    int(dur),
-                    s["numCompleteTasks"],
-                    s.get("shuffleReadBytes", 0),
-                    s.get("shuffleWriteBytes", 0),
-                    s.get("inputBytes", 0),
-                    (s.get("description") or s.get("name", ""))[:90],
-                )
-            )
-        print(f"\n=== {name} rep {rep}: wall {wall:.2f}s, "
-              f"{len(new)} stages, sum(stage wall) {total_ms/1000:.2f}s ===")
-        print(f"{'id':>5} {'ms':>7} {'tsk':>4} {'shR':>9} {'shW':>9} {'in':>9}  name")
-        for r in sorted(rows, key=lambda r: -r[1])[:40]:
-            print(f"{r[0]:>5} {r[1]:>7} {r[2]:>4} {r[3]:>9} {r[4]:>9} {r[5]:>9}  {r[6]}")
+    for group, t0, t1 in reps:
+        c = spark_counters(log, t0, t1)
+        gap = driver_gap_s(log, t0, t1)
+        print(f"\n=== {group}: wall {t1 - t0:.2f}s = jobs {t1 - t0 - gap:.2f}s "
+              f"+ driver gap {gap:.2f}s; {c['jobs']} jobs, {c['tasks']} tasks, "
+              f"cpu {c['executor_cpu_s']:.2f}s, gc {c['gc_s']:.2f}s ===")
+        print(f"{'job':>5} {'at_s':>7} {'dur_s':>7} {'stg':>4} {'tasks':>6} "
+              f"{'cpu_s':>7} {'gc_s':>6} {'shW_mb':>8} {'spill_mb':>8}")
+        for j in sorted(log.in_group(group), key=lambda j: j.start):
+            print(f"{j.id:>5} {j.start - t0:>7.2f} {j.end - j.start:>7.2f} "
+                  f"{len(j.stages):>4} {j.tasks:>6} {j.cpu_s:>7.2f} {j.gc_s:>6.2f} "
+                  f"{j.shuffle_write / 2**20:>8.2f} {j.spill / 2**20:>8.2f}")
 
 
 if __name__ == "__main__":

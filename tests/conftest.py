@@ -1,8 +1,12 @@
 from __future__ import annotations
 
+import os
+
 import pytest
 from hypothesis import HealthCheck, settings
 from pyspark.sql import SparkSession
+
+from pd_utils_spark.session import get_spark
 
 # Property-suite policy (round 7): derandomize so green is
 # reproducible — an unseeded max_examples=8 run let a false invariant
@@ -21,15 +25,26 @@ settings.load_profile("ci")
 
 @pytest.fixture(scope="session")
 def spark() -> SparkSession:
-    s = (
-        SparkSession.builder.master("local[4]")
-        .appName("pd_utils_spark_tests")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "4g")
-        .getOrCreate()
-    )
+    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "4g")
+    s = get_spark("pd_utils_spark_tests", cpus=4)
     s.sparkContext.setLogLevel("ERROR")
     yield s
+
+
+@pytest.fixture
+def checkpointed_plans(monkeypatch) -> list[str]:
+    """Executed plans of the frames local-checkpointed while the test
+    runs. A step materialized when a plan is built (e.g. the ranged
+    frame of ``plans.prefix.prefix_agg``) shows in the returned frame's
+    plan only as a scan of its blocks."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    plans: list[str] = []
+    real = DataFrame.localCheckpoint
+
+    def spy(self, *args, **kwargs):
+        plans.append(self._jdf.queryExecution().executedPlan().toString())
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrame, "localCheckpoint", spy)
+    return plans

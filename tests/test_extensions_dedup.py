@@ -651,8 +651,9 @@ class TestFloodCapObservability:
         max_bucket, the drop count is READABLE from the observe metric
         (docs x bands rows), and the genuinely-near-dup pair outside
         the flood still pairs — the recall the cap is allowed to cost
-        is the flood itself, nothing else. Mirrors the
-        scripts/bench_dedup_skew.py lanes recorded in SCALE.md."""
+        is the flood itself, nothing else. Mirrors the dedup-skew
+        bench lanes recorded in SCALE.md (the script is in git history
+        at commit 85f872c)."""
         from pd_utils_spark.utils import observed_metrics
 
         boiler = (

@@ -102,22 +102,51 @@ def test_prefix_sum_more_partitions_than_rows(spark):
     assert got == {1: 10, 2: 30}
 
 
+def test_prefix_sum_input_reordered_on_every_evaluation(spark):
+    """A shuffle's fetch order makes an input's row order differ from
+    one evaluation to the next. The range bounds are sampled in row
+    order, so the local prefixes and the partition offsets must come
+    from ONE evaluation, or rows pair with the wrong offsets. The
+    payload column ``p`` only the local branch needs keeps the two
+    branches' exchanges from being reused as one."""
+    n = 20_000
+    vals = np.random.RandomState(3).randint(0, 50, n)
+    schema = "o long, x long, p string"
+
+    def reorder(batches):
+        rng = np.random.default_rng()  # unseeded: new order every run
+        for b in batches:
+            yield b.iloc[rng.permutation(len(b))]
+
+    df = spark.createDataFrame(
+        [(i, int(v), str(i)) for i, v in enumerate(vals)], schema
+    ).mapInPandas(reorder, schema)
+    got = prefix_sum(df, "o", "x", partitions=8).toPandas().sort_values("o")
+    assert got["x_cum"].tolist() == np.cumsum(vals).tolist()
+    assert got["p"].tolist() == [str(i) for i in range(n)]
+
+
 def test_prefix_sum_validation(spark):
     df = spark.createDataFrame([(1, 1)], ["o", "x"])
     with pytest.raises(ValueError):
         prefix_sum(df, [], "x")
 
 
-def test_prefix_sum_no_single_task_exchange(spark):
+def test_prefix_sum_no_single_task_exchange(spark, checkpointed_plans):
     """The data path must never collapse to one partition: the only
     single-partition exchange allowed is the O(#partitions) offsets
-    side plan."""
+    side plan. The range partition runs once, in the materialized
+    ranged frame."""
     df = spark.createDataFrame([(i, 1) for i in range(100)], ["o", "x"])
     plan = (
         prefix_sum(df, "o", "x", partitions=8)
         ._jdf.queryExecution().executedPlan().toString()
     )
-    assert "rangepartitioning" in plan.lower()
+    [ranged] = checkpointed_plans
+    assert "rangepartitioning(o" in ranged.lower()
+    assert "SinglePartition" not in ranged
+    assert plan.count("Exchange SinglePartition") == 1
+    assert "BroadcastExchange" in plan
 
 
 # ----------------------------------------------------- KS test
