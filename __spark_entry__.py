@@ -31,6 +31,7 @@ from pd_utils_spark.extensions import profile as pus_profile
 from pd_utils_spark.extensions import sampling as pus_sample
 from pd_utils_spark.extensions import selection as pus_select
 from pd_utils_spark.extensions import stats as pus_stats
+from pd_utils_spark.utils import materialize, query_scope
 
 _ROUND = 6
 
@@ -1097,13 +1098,11 @@ def q_minhash_signature(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_lsh_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark import StorageLevel
-
     u = _docs_with_copies(spark, sf_dir)
     # shingle sets computed ONCE and shared between the LSH and
     # verification stages (same pattern as _verified_dup_pairs —
     # without it the tokenize+shingle pipeline runs twice)
-    sh = pus_dedup.shingle_sets(u, k=3).persist(StorageLevel.MEMORY_AND_DISK)
+    sh = materialize(pus_dedup.shingle_sets(u, k=3))
     cands = pus_dedup.lsh_candidate_pairs(
         u, k=3, num_hashes=12, bands=4, shingles=sh
     )
@@ -1116,10 +1115,8 @@ def q_lsh_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _verified_dup_pairs(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     """(corpus, verified Jaccard>=0.5 near-dup pairs) with shingle sets
     computed once and shared between the LSH and verification stages."""
-    from pyspark import StorageLevel
-
     u = _docs_with_copies(spark, sf_dir)
-    sh = pus_dedup.shingle_sets(u, k=3).persist(StorageLevel.MEMORY_AND_DISK)
+    sh = materialize(pus_dedup.shingle_sets(u, k=3))
     cands = pus_dedup.lsh_candidate_pairs(
         u, k=3, num_hashes=12, bands=4, shingles=sh
     )
@@ -1253,8 +1250,6 @@ def q_dedup_containment_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from pd_utils_spark.utils import release_registered
-
     d = _t(spark, sf_dir, "documents").select("doc_id", "text")
     toks = F.split(F.col("text"), " ")
     m = F.greatest(F.lit(3), F.floor(F.size(toks) * 0.5).cast("int"))
@@ -1271,7 +1266,6 @@ def q_dedup_containment_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch = sliced.unionByName(salted)
     base = tempfile.mkdtemp(prefix="pus_cidx_")
     try:
-        frames = pus_dedup.containment_index_frames(d, k=1)
         # all three artifact writes overlap (guide §2.6; r12 widens the
         # r11 sets-then-{index,dfreq} schedule to ONE wave): the batch
         # artifacts have no commit-order constraint (temp dirs, read
@@ -1283,31 +1277,35 @@ def q_dedup_containment_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         from pyspark import inheritable_thread_target
 
-        def _write(n):
-            frames[n].write.mode("overwrite").parquet(f"{base}/{n}")
+        with query_scope():  # the build's pins go once it is written
+            frames = pus_dedup.containment_index_frames(d, k=1)
 
-        with ThreadPoolExecutor(max_workers=3) as pool:
-            futs = [
-                pool.submit(inheritable_thread_target(spark)(lambda n=n: _write(n)))
-                for n in ("sets", "index", "dfreq")
-            ]
-            for f in futs:
-                f.result()
-        release_registered("containment_index_frames")
+            def _write(n):
+                frames[n].write.mode("overwrite").parquet(f"{base}/{n}")
+
+            with ThreadPoolExecutor(max_workers=3) as pool:
+                futs = [
+                    pool.submit(
+                        inheritable_thread_target(spark)(lambda n=n: _write(n))
+                    )
+                    for n in ("sets", "index", "dfreq")
+                ]
+                for f in futs:
+                    f.result()
         art = {
             n: spark.read.parquet(f"{base}/{n}")
             for n in ("index", "sets", "dfreq")
         }
-        out = pus_dedup.dedup_containment_against_index(
-            batch,
-            art["index"],
-            art["sets"],
-            art["dfreq"],
-            threshold=0.9,
-            k=1,
-        )
-        rows = out.select("doc_id").collect()
-        release_registered("dedup_containment_against_index")
+        with query_scope():
+            out = pus_dedup.dedup_containment_against_index(
+                batch,
+                art["index"],
+                art["sets"],
+                art["dfreq"],
+                threshold=0.9,
+                k=1,
+            )
+            rows = out.select("doc_id").collect()
     finally:
         shutil.rmtree(base, ignore_errors=True)
     return spark.createDataFrame(rows, "doc_id bigint")
@@ -1334,13 +1332,11 @@ def q_candidate_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     approximate path certified against the complete-recall one, the
     number that justifies every banded dedup. Oracle replays both
     generators and the canonical-pair semi-join."""
-    from pyspark import StorageLevel
-
     u = _docs_with_copies(spark, sf_dir).filter(F.col("doc_id") % 2 == 0)
     # ONE shingle pass feeds BOTH generators (round 6): tokenize +
     # shingle is the dominant shared cost of the audit, and both sides
     # consume the identical (doc_id, shingles) frame
-    sh = pus_dedup.shingle_sets(u, k=3).persist(StorageLevel.MEMORY_AND_DISK)
+    sh = materialize(pus_dedup.shingle_sets(u, k=3))
     cand = pus_dedup.lsh_candidate_pairs(
         u, k=3, num_hashes=12, bands=4, shingles=sh
     )
@@ -1366,10 +1362,8 @@ def q_candidate_recall_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the corpus frame is consumed three times (simhash's vote and
     # join-back subtrees + the truth join's shingle pass), each ref
     # otherwise re-running the scan+union+repartition (r12, §1.2)
-    u = (
-        _docs_with_copies(spark, sf_dir)
-        .filter(F.col("doc_id") % 2 == 0)
-        .persist()
+    u = materialize(
+        _docs_with_copies(spark, sf_dir).filter(F.col("doc_id") % 2 == 0)
     )
     cand = pus_dedup.simhash_near_dup_pairs(u, bits=48, max_hamming=3)
     truth = pus_dedup.jaccard_join_prefix(u, threshold=0.5)
@@ -1509,7 +1503,7 @@ def q_ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             "embedding", lambda x: x / pus_sim.norm(F.col("embedding"))
         ).alias("embedding"),
     )
-    nrm = nrm.persist()
+    nrm = materialize(nrm)
     cb = pus_sim.pq_fit(nrm, m=16, ncodes=32, sample=1024)
     enc = pus_sim.pq_encode(nrm, cb)
     cbdf = pus_sim.pq_codebook_table(cb, spark)
@@ -1520,13 +1514,13 @@ def q_ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # truth feeds BOTH hit joins below; un-materialized, the full
     # brute-force scoring subtree would execute once per reference
     # (r12, guide §1.2 "don't compute things twice")
-    truth = pus_sim.brute_force_topk(nrm, q, k=k).persist()
+    truth = materialize(pus_sim.brute_force_topk(nrm, q, k=k))
     # ONE ADC probe (r12, guide §1.2): the k=10 and k=100 probes ran
     # the whole encode+explode+LUT-join+sum pipeline twice; the top-10
     # per query of the materialized top-100 IS the k=10 result (same
     # deterministic total order: adc_dot desc, vec_id — row_number
     # over a superset prefix returns the identical prefix).
-    cand = pus_sim.pq_adc_topk(enc, cbdf, q, k=100).persist()
+    cand = materialize(pus_sim.pq_adc_topk(enc, cbdf, q, k=100))
     w10 = _W.partitionBy("query_id").orderBy(
         F.desc("adc_dot"), F.col("vec_id")
     )
@@ -2091,8 +2085,6 @@ def q_candidate_recall_multiband(spark: SparkSession, sf_dir: str) -> DataFrame:
     J^3 of `candidate_recall_streamband` — this row pins what the
     second band buys (recall can only rise; the cost is 2x key state
     in the claims table)."""
-    from pyspark import StorageLevel
-
     u = _docs_with_copies(spark, sf_dir).filter(F.col("doc_id") % 2 == 0)
     # one persisted shingle pass feeds BOTH the banded generator and
     # the exact truth (the streamband-audit pattern); the 6-hash
@@ -2101,7 +2093,7 @@ def q_candidate_recall_multiband(spark: SparkSession, sf_dir: str) -> DataFrame:
     # tests) via the explode + partial-agg minhash path with the
     # standard flood cap — the r7 first cut re-keyed per row and
     # self-joined uncapped, measured 34.9 s at sf0.1 vs ~8 s here
-    sh = pus_dedup.shingle_sets(u, k=3).persist(StorageLevel.MEMORY_AND_DISK)
+    sh = materialize(pus_dedup.shingle_sets(u, k=3))
     cand = pus_dedup.lsh_candidate_pairs(
         u, k=3, num_hashes=6, bands=2, shingles=sh
     )
@@ -2155,10 +2147,8 @@ def q_candidate_recall_multiband_boundary(
     1-(1-J^3)^2 dial at the knee — the number a user sizing `bands`
     against a REAL near-dup distribution needs (the copies corpus
     certifies the plumbing; this row certifies the curve)."""
-    from pyspark import StorageLevel
-
     u = _docs_boundary(spark, sf_dir)
-    sh = pus_dedup.shingle_sets(u, k=3).persist(StorageLevel.MEMORY_AND_DISK)
+    sh = materialize(pus_dedup.shingle_sets(u, k=3))
     cand = pus_dedup.lsh_candidate_pairs(
         u, k=3, num_hashes=6, bands=2, shingles=sh
     )
@@ -2182,8 +2172,6 @@ def q_greedy_band_precision_boundary(
     partner-indicator left join over the dropped set, shared
     persisted shingles between the greedy generator and the exact
     prefix-join truth."""
-    from pyspark import StorageLevel
-
     from pd_utils_spark.extensions.dedup import dedup_bands_greedy
 
     u = _docs_boundary(spark, sf_dir)
@@ -2191,7 +2179,7 @@ def q_greedy_band_precision_boundary(
     dropped = u.select("doc_id").join(
         survivors.select("doc_id"), "doc_id", "left_anti"
     )
-    sh = pus_dedup.shingle_sets(u, k=3).persist(StorageLevel.MEMORY_AND_DISK)
+    sh = materialize(pus_dedup.shingle_sets(u, k=3))
     truth = pus_dedup.jaccard_join_prefix(u, threshold=0.5, shingles=sh)
     has_partner = (
         truth.select(F.col("id_a").alias("doc_id"))
@@ -2241,8 +2229,6 @@ def q_greedy_band_precision(spark: SparkSession, sf_dir: str) -> DataFrame:
     what the bands miss). Truth = the exact prefix-join; the oracle
     replays greedy via chained QUALIFY windows and truth via the
     list_intersect Jaccard."""
-    from pyspark import StorageLevel
-
     from pd_utils_spark.extensions.dedup import dedup_bands_greedy
 
     u = _docs_with_copies(spark, sf_dir).filter(F.col("doc_id") % 2 == 0)
@@ -2250,7 +2236,7 @@ def q_greedy_band_precision(spark: SparkSession, sf_dir: str) -> DataFrame:
     dropped = u.select("doc_id").join(
         survivors.select("doc_id"), "doc_id", "left_anti"
     )
-    sh = pus_dedup.shingle_sets(u, k=3).persist(StorageLevel.MEMORY_AND_DISK)
+    sh = materialize(pus_dedup.shingle_sets(u, k=3))
     truth = pus_dedup.jaccard_join_prefix(u, threshold=0.5, shingles=sh)
     has_partner = (
         truth.select(F.col("id_a").alias("doc_id"))
@@ -2648,10 +2634,8 @@ def q_candidate_recall_streamband(spark: SparkSession, sf_dir: str) -> DataFrame
     same corpus. One band trades recall for bounded streaming state
     (P(collide | J) = J^3 vs the 4-band S-curve); this row pins the
     actual number so the tradeoff is measured, not folklore."""
-    from pyspark import StorageLevel
-
     u = _docs_with_copies(spark, sf_dir).filter(F.col("doc_id") % 2 == 0)
-    sh = pus_dedup.shingle_sets(u, k=3).persist(StorageLevel.MEMORY_AND_DISK)
+    sh = materialize(pus_dedup.shingle_sets(u, k=3))
     cand = pus_dedup.lsh_candidate_pairs(
         u, k=3, num_hashes=3, bands=1, shingles=sh
     )
@@ -6759,11 +6743,8 @@ def q_kmv_containment_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     (<= 0.05; measured <= 0.017) and worst pair error (<= 0.45;
     measured <= 0.34 at k=16). The oracle states the exact set
     algebra; sketch arrays never cross engines."""
-    from pyspark import StorageLevel
-
     from pd_utils_spark.extensions import sketches as pus_sk
     from pd_utils_spark.extensions.dedup import shingle_sets
-    from pd_utils_spark.utils import register_persisted
 
     # repartition before the shingle expression: the documents parquet
     # is one file, and sf0.1's long texts make a serial shingle pass
@@ -6773,16 +6754,14 @@ def q_kmv_containment_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and the per-doc sketch is bottomk_array, the MAP-ONLY form (a
     # doc's set lives in one row; the exploded groupBy build was
     # measured 5x slower here and is bit-identical, pytest-pinned)
-    sh = (
+    sh = materialize(
         shingle_sets(u)
         .select(
             "doc_id",
             F.expr("filter(shingles, x -> length(x) > 0)").alias("t"),
         )
         .filter(F.size("t") > 0)
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    register_persisted("kmv_containment_audit", [sh])
     K = 16
     # ONE original-vs-variant pair join (r12, guide §2.4 "remove
     # shuffles outright"): the estimate side (k=16 sketches) and the
@@ -6873,7 +6852,7 @@ def q_weighted_pick_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # consume it. Materialize once (r11, guide §1.2 "don't compute
     # things twice"): without this the whole salted pipeline was
     # measured to run twice per bench invocation.
-    picks = picks.localCheckpoint(eager=True)
+    picks = materialize(picks, stable=True, eager=True)
     counts = picks.groupBy("cls").agg(F.count(F.lit(1)).alias("n_picks"))
     shares = o.groupBy(F.col("cls").cast("bigint").alias("cls")).agg(
         F.sum("wt").alias("__wc__")

@@ -62,6 +62,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from pd_utils_spark.utils import materialize, query_scope
+
 __all__ = [
     "word_counts",
     "learn_bpe",
@@ -175,8 +177,8 @@ def learn_bpe(
         raise ValueError(f"batch_merges must be >= 1: {batch_merges}")
     spark = df.sparkSession
     wc = word_counts(df, textcol)
-    base = wc.select(F.expr(_wrap("w", eow)).alias("s"), "cnt").persist()
-    try:
+    with query_scope():
+        base = materialize(wc.select(F.expr(_wrap("w", eow)).alias("s"), "cnt"))
         merges: list[tuple[int, str, str, int]] = []
         cur = base
         while len(merges) < n_merges:
@@ -223,13 +225,11 @@ def learn_bpe(
                     "cnt",
                 )
                 if len(merges) % checkpoint_every == 0:
-                    cur = cur.localCheckpoint(eager=True)
+                    cur = materialize(cur, stable=True, eager=True)
         return spark.createDataFrame(
             [(rank, l, r, l + r, f) for rank, l, r, f in merges],
             "rank int, left string, right string, merged string, freq bigint",
         )
-    finally:
-        base.unpersist()
 
 
 def apply_bpe(

@@ -29,7 +29,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from pd_utils_spark.extensions.text import _tokens
-from pd_utils_spark.utils import materialize, register_persisted
+from pd_utils_spark.utils import materialize, reliable_checkpoints
 
 
 def _norm(textcol: Column) -> Column:
@@ -370,19 +370,14 @@ def exact_dedup_against_bloom(
     hfp = F.md5(
         (_norm(F.col(htext)) if normalize else F.col(htext)).cast("string")
     )
-    from pyspark import StorageLevel
-
     hist = history.select(hfp.alias("__fp__")).distinct()
     positives = work.filter(F.col("__might__")).select(idcol, "__fp__")
     # persisted (guide §7.2): when ``df`` is a UNION, the left-anti
     # join is pushed through it and each branch re-runs the history
     # fingerprint distinct + verify semi-join; the id frame is tiny
-    confirmed = (
-        positives.join(hist, "__fp__", "left_semi")
-        .select(idcol)
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    confirmed = materialize(
+        positives.join(hist, "__fp__", "left_semi").select(idcol)
     )
-    register_persisted("exact_dedup_against_bloom", [confirmed])
     return df.join(confirmed, idcol, "left_anti")
 
 
@@ -457,15 +452,10 @@ def minhash_signature(
     construction with a Jaccard verification stage.
     """
     if shingles is None:
-        from pyspark import StorageLevel
-
         # materialize before the explode: Spark's Generate re-derives
         # an inline-computed array far more expensively than it reads
         # a materialized one (measured ~10x at sf0.1 — see SCALE.md)
-        shingles = shingle_sets(df, textcol, idcol, k).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-        register_persisted("minhash_signature", [shingles])
+        shingles = materialize(shingle_sets(df, textcol, idcol, k))
     sig = _minhash_sig_table(shingles, idcol, num_hashes, out)
     return df.join(sig, df[idcol] == sig["__mh_id__"], "left").drop("__mh_id__")
 
@@ -732,10 +722,9 @@ def _greedy_band_filter(
         # the map-heavy shingle+minhash pipeline upstream would
         # execute once per reference, doubling per pass. Materialize
         # each pass's input so every pass computes exactly once; the
-        # streaming gate releases these after its eager checkpoint,
-        # batch callers via release_registered("greedy_band_filter").
+        # caller's query_scope releases these (the streaming gate's
+        # right after its eager checkpoint).
         work = materialize(work)
-        register_persisted("greedy_band_filter", [work])
         cur = work.withColumn("__kb__", F.col(keyscol)[b])
         keep = cur.groupBy("__kb__").agg(F.min(idcol).alias(idcol))
         work = (
@@ -920,21 +909,16 @@ def lsh_candidate_pairs(
     ``exact_dedup`` first). Dropped-row counts are observable via the
     ``lsh_bucket_cap*`` observe metric.
     ``shingles``: optional precomputed ``shingle_sets`` frame to share
-    shingle construction with other stages. Every frame this persists
-    (its own shingle sets, the capped key table) is registered under
-    ``"lsh_candidate_pairs"`` for ``release_registered``.
+    shingle construction with other stages. Every frame this pins
+    (its own shingle sets, the capped key table) is released by the
+    caller's :func:`~pd_utils_spark.utils.query_scope`.
     """
     if num_hashes % bands != 0:
         raise ValueError(f"num_hashes={num_hashes} not divisible by bands={bands}")
     if shingles is None:
-        from pyspark import StorageLevel
-
-        shingles = shingle_sets(df, textcol, idcol, k).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-        register_persisted("lsh_candidate_pairs", [shingles])
+        shingles = materialize(shingle_sets(df, textcol, idcol, k))
     keyed = _band_key_table(shingles, idcol, num_hashes, bands)
-    return _lsh_pairs(keyed, idcol, max_bucket, "lsh_candidate_pairs")
+    return _lsh_pairs(keyed, idcol, max_bucket)
 
 
 def _band_key_table(
@@ -944,7 +928,9 @@ def _band_key_table(
     ``shingle_sets`` frame: signature aggregation plus banding, one row
     per (doc, band). A pure per-doc function of the shingle set, so a
     slice of it by id equals the table built from the same slice of
-    shingles."""
+    shingles. Pins nothing itself; callers that reuse it
+    :func:`~pd_utils_spark.utils.materialize` it inside their
+    :func:`~pd_utils_spark.utils.query_scope`."""
     sigs = _minhash_sig_table(shingles, idcol, num_hashes)
     return lsh_band_keys(sigs, bands=bands).selectExpr(
         f"__mh_id__ AS {_q(idcol)}", "band", "band_key"
@@ -952,12 +938,11 @@ def _band_key_table(
 
 
 def _lsh_pairs(
-    keyed: DataFrame, idcol: str, max_bucket: int | None, label: str
+    keyed: DataFrame, idcol: str, max_bucket: int | None
 ) -> DataFrame:
     """Candidate pairs ``(id_a < id_b)`` sharing a (band, band_key)
     bucket of the key table ``keyed``, after the flood cap. The capped
-    table is materialized and registered under the caller's ``label``
-    so ``release_registered(label)`` frees it."""
+    table is materialized (a reuse pin of the caller's scope)."""
     if max_bucket is not None:
         keyed = _cap_buckets(keyed, ["band", "band_key"], max_bucket, "lsh_bucket_cap")
     # Materialize before the self-join: the sides are separate subtrees
@@ -969,7 +954,6 @@ def _lsh_pairs(
     # eager localCheckpoint ran a full job at plan-construction time
     # and its truncated lineage was unrecoverable on executor loss.
     keyed = materialize(keyed)
-    register_persisted(label, [keyed])
     idq = _q(idcol)
     return (
         keyed.alias("a")
@@ -1100,30 +1084,20 @@ def _dedup_minhash_lsh_parts(
     ``shingles`` and ``band_keys`` (the UNCAPPED
     ``(idcol, band, band_key)`` table) cover ALL of ``df``; ``losers``
     is the dropped-id frame. Everything persisted here, the capped
-    candidate key table included, is registered under
-    ``"dedup_minhash_lsh"``."""
+    candidate key table included, is a reuse pin of the caller's
+    :func:`~pd_utils_spark.utils.query_scope`."""
     if num_hashes % bands != 0:
         raise ValueError(f"num_hashes={num_hashes} not divisible by bands={bands}")
-    from pyspark import StorageLevel
-
-    sh = shingle_sets(df, textcol, idcol, k).persist(StorageLevel.MEMORY_AND_DISK)
-    keys = _band_key_table(sh, idcol, num_hashes, bands).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    register_persisted("dedup_minhash_lsh", [sh, keys])
-    cands = _lsh_pairs(keys, idcol, max_bucket, "dedup_minhash_lsh")
+    sh = materialize(shingle_sets(df, textcol, idcol, k))
+    keys = materialize(_band_key_table(sh, idcol, num_hashes, bands))
+    cands = _lsh_pairs(keys, idcol, max_bucket)
     sim = jaccard_pairs(df, cands, textcol, idcol, k, shingles=sh).filter(
         F.col("jaccard") >= threshold
     )
     # persisted (guide §7.2): when ``df`` is a UNION, the left-anti
     # join is pushed through it and each branch re-runs the whole
     # LSH-candidate + Jaccard-verify pipeline; the id frame is tiny
-    losers = (
-        sim.selectExpr(f"id_b AS {_q(idcol)}")
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    register_persisted("dedup_minhash_lsh", [losers])
+    losers = materialize(sim.selectExpr(f"id_b AS {_q(idcol)}").distinct())
     return df.join(losers, idcol, "left_anti"), sh, keys, losers
 
 
@@ -1206,8 +1180,8 @@ def minhash_history_frames(
     Same write-once-probe-many contract as
     :func:`containment_index_frames` (its containment sibling). When
     this builder computes the band keys itself, the shingle frame
-    feeds both outputs and is persisted and registered under
-    ``"minhash_history_frames"`` — release after materializing.
+    feeds both outputs and is pinned in the caller's
+    :func:`~pd_utils_spark.utils.query_scope`.
     Bit-compatibility pinned by pytest: probing these frames returns
     exactly the survivors :func:`dedup_minhash_against` computes from
     the raw history frame."""
@@ -1218,10 +1192,7 @@ def minhash_history_frames(
     if shingles is None:
         shingles = shingle_sets(history, textcol, idcol, k)
     if band_keys is None:
-        from pyspark import StorageLevel
-
-        shingles = shingles.persist(StorageLevel.MEMORY_AND_DISK)
-        register_persisted("minhash_history_frames", [shingles])
+        shingles = materialize(shingles)
         band_keys = _band_key_table(shingles, idcol, num_hashes, bands)
     # band keys are a function of (k, num_hashes, bands); stamp them as
     # column metadata (parquet-persistent) so the probe can fail fast
@@ -1288,8 +1259,9 @@ def dedup_minhash_against_index(
     parameters. ``max_bucket`` caps ``batch_keys`` over those rows,
     exactly as it caps self-computed keys. When the probe computes the
     batch keys itself, the batch shingles feed both the keys and the
-    Jaccard verify and are persisted; the hit-id frame always is. Both
-    are registered under ``"dedup_minhash_against_index"``."""
+    Jaccard verify and are pinned; the hit-id frame always is. Both
+    are reuse pins of the caller's
+    :func:`~pd_utils_spark.utils.query_scope`."""
     if num_hashes % bands != 0:
         raise ValueError(
             f"num_hashes={num_hashes} not divisible by bands={bands}"
@@ -1300,14 +1272,11 @@ def dedup_minhash_against_index(
         {"k": k, "num_hashes": num_hashes, "bands": bands},
         "minhash_history_frames",
     )
-    from pyspark import StorageLevel
-
     idq = _q(idcol)
     if batch_shingles is None:
         batch_shingles = shingle_sets(df, textcol, idcol, k)
     if batch_keys is None:
-        batch_shingles = batch_shingles.persist(StorageLevel.MEMORY_AND_DISK)
-        register_persisted("dedup_minhash_against_index", [batch_shingles])
+        batch_shingles = materialize(batch_shingles)
         batch_keys = _band_key_table(batch_shingles, idcol, num_hashes, bands)
     bkeys = batch_keys.selectExpr(f"{idq} AS __bid__", "band", "band_key")
     if max_bucket is not None:
@@ -1336,13 +1305,11 @@ def dedup_minhash_against_index(
     # frame: a UNION batch would otherwise re-run the candidate join +
     # Jaccard verify once per branch via the left-anti pushdown
     # (guide §7.2)
-    hits = (
+    hits = materialize(
         j.filter(F.col("__j__") >= threshold)
         .selectExpr(f"__bid__ AS {idq}")
         .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    register_persisted("dedup_minhash_against_index", [hits])
     return df.join(hits, idcol, "left_anti")
 
 
@@ -1522,7 +1489,7 @@ def _to_fixpoint(
     :func:`_rebuild_from_removal`'s CONTRACT note)."""
     cur = one_pass(df)
     for _ in range(max_passes):
-        cur = cur.localCheckpoint()
+        cur = materialize(cur, stable=True, eager=True)
         nxt = one_pass(cur.select(idcol, F.col(out).alias("text")))
         n_changed = (
             nxt.withColumnRenamed(out, "__new__")
@@ -2167,8 +2134,8 @@ def connected_components(
     the rounds shuffle pairs, never documents.
 
     ``checkpoint_dir``: when set, per-round label frames use RELIABLE
-    checkpointing (``sparkContext.setCheckpointDir(checkpoint_dir)`` +
-    ``df.checkpoint()``) — blocks land on the shared checkpoint store
+    checkpointing (:func:`~pd_utils_spark.utils.reliable_checkpoints`)
+    — blocks land on the shared checkpoint store
     (HDFS/S3), so an executor loss mid-run recovers and a long 100 TB
     dedup job survives dynamic allocation. The default (None) keeps
     ``localCheckpoint``: faster (executor-local blocks, no FS
@@ -2181,60 +2148,30 @@ def connected_components(
     every checkpoint this run wrote is already eagerly materialized
     before the restore, so the returned frame stays valid.
     """
-    spark = pairs.sparkSession
-    prev_ckpt_dir = None
-    if checkpoint_dir is not None:
-        try:
-            prev_ckpt_dir = spark.sparkContext.getCheckpointDir()
-        except Exception:
-            prev_ckpt_dir = None
-        spark.sparkContext.setCheckpointDir(checkpoint_dir)
-
-    def _ckpt(d: DataFrame) -> DataFrame:
-        return d.checkpoint(eager=True) if checkpoint_dir is not None else d.localCheckpoint(eager=True)
-
-    try:
-        return _cc_run(pairs, src, dst, out, max_iter, _ckpt)
-    finally:
-        if checkpoint_dir is not None and prev_ckpt_dir != checkpoint_dir:
-            # restore the session-global checkpoint dir (None -> unset
-            # is not expressible via the public API; fall back to the
-            # underlying JVM accessor so materialize() sees the prior
-            # state). Best-effort: the restore must NEVER mask an
-            # already-computed result, and the private accessor could
-            # change across Spark versions — a failed unset merely
-            # leaves the session checkpoint dir set to checkpoint_dir.
-            try:
-                if prev_ckpt_dir is not None:
-                    spark.sparkContext.setCheckpointDir(prev_ckpt_dir)
-                else:
-                    jsc = spark.sparkContext._jsc.sc()
-                    none = spark.sparkContext._jvm.scala.Option.apply(None)
-                    getattr(jsc, "checkpointDir_$eq")(none)
-            except Exception:
-                pass
+    with reliable_checkpoints(pairs.sparkSession, checkpoint_dir):
+        return _cc_run(pairs, src, dst, out, max_iter)
 
 
-def _cc_run(pairs, src, dst, out, max_iter, _ckpt):
+def _cc_run(pairs, src, dst, out, max_iter):
     a, b = F.col(src).alias("a"), F.col(dst).alias("b")
     # Materialize the edge list BEFORE the symmetrizing union: the union
     # references `edges` twice, and an un-materialized self-union makes
     # Spark execute the caller's (possibly very expensive — LSH+Jaccard)
     # pair pipeline once PER BRANCH. Measured at sf0.1: checkpointing
     # first halves the end-to-end connected_components query (~24s->12s).
-    edges = _ckpt(
-        pairs.select(a, b)
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
+    edges = materialize(
+        pairs.select(a, b).filter(F.col("a") != F.col("b")).distinct(),
+        stable=True, eager=True,
     )
     sym = edges.unionByName(
         edges.select(F.col("b").alias("a"), F.col("a").alias("b"))
     )
 
-    labels = _ckpt(
+    labels = materialize(
         sym.groupBy("a").agg(F.min("b").alias("__m__")).select(
             F.col("a").alias("__id__"), F.least("a", "__m__").alias("__c__")
-        )
+        ),
+        stable=True, eager=True,
     )
 
     from pd_utils_spark.utils import observed_metrics
@@ -2277,7 +2214,7 @@ def _cc_run(pairs, src, dst, out, max_iter, _ckpt):
             metric,
             F.sum((F.col("__c__") != F.col("__prev__")).cast("long")).alias("n"),
         )
-        ckpt = _ckpt(obs)
+        ckpt = materialize(obs, stable=True, eager=True)
         got = observed_metrics(obs).get(metric)
         if got is not None:
             changed = int(got["n"] or 0)
@@ -2496,22 +2433,18 @@ def near_dup_analysis(
     components/deduped/cluster_stats trio — see SCALE.md round 4).
     The pair frame is persisted (memory-and-disk, lineage kept) and
     the CC labels are already materialized by the per-round
-    checkpoints, so every returned frame is compute-once. Call
-    ``utils.release_registered("near_dup_analysis")`` (or
-    ``spark.catalog.clearCache()``) when done.
+    checkpoints, so every returned frame is compute-once. Run it
+    inside a :func:`~pd_utils_spark.utils.query_scope`, which releases
+    the pins on exit.
     """
-    from pyspark import StorageLevel
-
-    sh = shingle_sets(df, textcol, idcol, k).persist(StorageLevel.MEMORY_AND_DISK)
+    sh = materialize(shingle_sets(df, textcol, idcol, k))
     cands = lsh_candidate_pairs(
         df, textcol, idcol, k, num_hashes, bands, max_bucket, shingles=sh
     )
-    pairs = (
+    pairs = materialize(
         jaccard_pairs(df, cands, textcol, idcol, k, shingles=sh)
         .filter(F.col("jaccard") >= threshold)
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    register_persisted("near_dup_analysis", [sh, pairs])
     comp = connected_components(
         pairs.select("id_a", "id_b"), checkpoint_dir=checkpoint_dir
     )
@@ -2723,19 +2656,13 @@ def jaccard_join_prefix(
     LSH when thresholds are low (prefixes grow as (1-t)·n) or when
     approximate recall is acceptable.
 
-    Cache note: TWO frames stay persisted after the call — the
-    compact (id, 64-bit token) frame (read by the document-frequency
+    Cache note: TWO frames stay pinned after the call — the compact
+    (id, 64-bit token) frame (read by the document-frequency
     aggregate and the join back) and the sorted-token frame (read
-    three times: prefix index + both verify sides). Both are
-    registered on the returned DataFrame's ``_pus_persisted`` handle
-    AND in the module-level persist registry under the label
-    ``"jaccard_join_prefix"``: in a long-lived session issuing many
-    joins, call ``pd_utils_spark.utils.release_cached(result)`` after
-    your first action — on the EXACT returned frame; the handle does
-    not survive select/filter/cache — or, if you transformed the
-    result first,
-    ``pd_utils_spark.utils.release_registered("jaccard_join_prefix")``
-    (``spark.catalog.clearCache()`` also works but evicts everything).
+    three times: prefix index + both verify sides). Both are reuse
+    pins (:func:`~pd_utils_spark.utils.materialize`): run the join
+    inside a :func:`~pd_utils_spark.utils.query_scope`, which
+    unpersists them on exit whatever you did to the result.
 
     ``shingles``: optional precomputed :func:`shingle_sets` frame
     (idcol, shingles) — pass a persisted one to share shingle
@@ -2772,13 +2699,11 @@ def jaccard_join_prefix(
     # (measured 21 s -> ~8 s on the sf0.1 self-join), and the oracle
     # replays the identical md5 arithmetic so exactness is preserved
     # (collision odds over a corpus's shingles are ~n^2 / 2^60)
-    from pyspark import StorageLevel
-
     # TWO consumers read toks (the document-frequency agg and the
     # join back) — persisting the compact (id, 64-bit token) frame
     # halves the tokenize+shingle+md5 work (measured ~4 -> ~2.5 s
     # warm at sf0.1, r6); same retained-cache contract as sorted_docs
-    toks = (
+    toks = materialize(
         exploded
         .filter(F.length("__raw__") > 0)
         .select(
@@ -2787,14 +2712,13 @@ def jaccard_join_prefix(
             .cast("bigint")
             .alias("__tok__"),
         )
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     dfreq = toks.groupBy("__tok__").agg(F.count(F.lit(1)).alias("__df__"))
 
     # three consumers read this frame (prefix index + both verify
     # sides); without the persist the tokenize->hash->sort lineage
     # runs three times (measured 12.4 s -> 8 s at sf0.1)
-    sorted_docs = (
+    sorted_docs = materialize(
         toks.join(dfreq, "__tok__")
         .groupBy("__id__")
         .agg(
@@ -2808,7 +2732,6 @@ def jaccard_join_prefix(
                 "__toks__"
             ),
         )
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     n = F.size("__toks__")
     plen = (n - F.ceil(F.lit(float(threshold)) * n) + 1).cast("int")
@@ -2880,11 +2803,6 @@ def jaccard_join_prefix(
         )
         .filter(F.col("jaccard") >= threshold)
     )
-    # cleanup handles for release_cached / release_registered (see
-    # Cache note above) — the attribute dies on the first downstream
-    # transformation, the registry entry does not
-    result._pus_persisted = [toks, sorted_docs]
-    register_persisted("jaccard_join_prefix", [toks, sorted_docs])
     return result
 
 
@@ -2935,8 +2853,9 @@ def containment_join_prefix(
     Scale shape mirrors :func:`jaccard_join_prefix`: one
     token-frequency agg, one join back + per-doc array sort, one
     prefix/index explode + equi-join, one verify join; the same TWO
-    persisted frames are registered under
-    ``"containment_join_prefix"`` (see the cache note there).
+    frames stay pinned until the caller's
+    :func:`~pd_utils_spark.utils.query_scope` exits (see the cache note
+    there).
     ``shingles``: optional precomputed :func:`shingle_sets` frame to
     share shingle construction across stages."""
     result, _toks, _sorted = _containment_join_prefix_parts(
@@ -2958,7 +2877,7 @@ def _containment_join_prefix_parts(
     frames ``(result, toks, sorted_docs)`` so sibling consumers (e.g.
     :func:`dedup_containment`'s size lookup) can ride the already-
     cached token work instead of re-running the full shingle pass per
-    subtree. Persist/registry contract identical to the public form."""
+    subtree. Pin contract identical to the public form."""
     if not 0.0 < threshold <= 1.0:
         raise ValueError(f"threshold must be in (0, 1]: {threshold}")
     if k < 1:
@@ -2976,9 +2895,7 @@ def _containment_join_prefix_parts(
             F.col(idcol).alias("__id__"),
             F.explode(F.col("shingles")).alias("__raw__"),
         )
-    from pyspark import StorageLevel
-
-    toks = (
+    toks = materialize(
         exploded
         .filter(F.length("__raw__") > 0)
         .select(
@@ -2987,10 +2904,9 @@ def _containment_join_prefix_parts(
             .cast("bigint")
             .alias("__tok__"),
         )
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     dfreq = toks.groupBy("__tok__").agg(F.count(F.lit(1)).alias("__df__"))
-    sorted_docs = (
+    sorted_docs = materialize(
         toks.join(dfreq, "__tok__")
         .groupBy("__id__")
         .agg(
@@ -3004,7 +2920,6 @@ def _containment_join_prefix_parts(
                 "__toks__"
             ),
         )
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     n = F.size("__toks__")
     t_lit = F.lit(float(threshold))
@@ -3062,8 +2977,6 @@ def _containment_join_prefix_parts(
         )
         .filter(F.col("containment") >= threshold)
     )
-    result._pus_persisted = [toks, sorted_docs]
-    register_persisted("containment_join_prefix", [toks, sorted_docs])
     return result, toks, sorted_docs
 
 
@@ -3123,8 +3036,8 @@ def _dedup_containment_parts(
     each stage's token frame from ONE shingle pass instead of
     re-tokenizing the batch text per stage (guide §1.2). ``toks`` is
     the exploded ``(__id__, __tok__)`` frame over ALL of ``df``;
-    ``dropped`` the id frame of subsumed docs. Persist/registry
-    contract identical to the public form."""
+    ``dropped`` the id frame of subsumed docs. Pin contract identical
+    to the public form."""
     pairs, toks, sorted_docs = _containment_join_prefix_parts(
         df,
         textcol=textcol,
@@ -3152,15 +3065,13 @@ def _dedup_containment_parts(
     sb = sizes.select(
         F.col("__sid__").alias("id_container"), F.col("__sz__").alias("__nb__")
     )
-    from pyspark import StorageLevel
-
     # Persisted (r11, guide §7.2 "duplicated subtrees"): when ``df``
     # is a UNION, Catalyst pushes the left-anti join through it
     # (PushdownLeftSemiAntiJoin) and each branch gets its OWN copy of
     # the join's right side — re-running the entire candidate+verify
     # pipeline once per branch. The id frame is tiny; persisting it
     # turns the pushed-down copies into cache reads.
-    dropped = (
+    dropped = materialize(
         pairs.join(sa, "id_contained")
         .join(sb, "id_container")
         .filter(
@@ -3172,9 +3083,7 @@ def _dedup_containment_parts(
         )
         .select(F.col("id_contained").alias(idcol))
         .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    register_persisted("containment_join_prefix", [dropped])
     return df.join(dropped, idcol, "left_anti"), toks, dropped
 
 
@@ -3237,9 +3146,8 @@ def containment_index_frames(
     ``containment_against_bucket`` observe metric) — the scale-
     correct place for it: a per-probe cap re-runs a window over the
     full history index every batch and breaks the shuffle-free
-    bucketed-table join. The shared exploded token frame is
-    persisted and registered under ``"containment_index_frames"`` —
-    release after materializing the three outputs.
+    bucketed-table join. The shared exploded token frame is a reuse
+    pin of the caller's :func:`~pd_utils_spark.utils.query_scope`.
 
     Bit-compatibility contract (pytest-pinned): probing these frames
     with :func:`dedup_containment_against_index` returns exactly the
@@ -3247,8 +3155,6 @@ def containment_index_frames(
     history frame."""
     if k < 1:
         raise ValueError(f"k must be >= 1: {k}")
-    from pyspark import StorageLevel
-
     # ``toks``: optional precomputed (__id__, __tok__) frame covering
     # exactly ``history``'s rows with the same (k,) hashing —
     # _containment_toks is a pure per-row function of (id, text), so a
@@ -3258,21 +3164,18 @@ def containment_index_frames(
     # within-batch dedup's token frame this way).
     if toks is None:
         toks = _containment_toks(history, textcol, idcol, k)
-    htoks = toks.persist(StorageLevel.MEMORY_AND_DISK)
-    register_persisted("containment_index_frames", [htoks])
+    htoks = materialize(toks)
     dfreq = htoks.groupBy("__tok__").agg(F.count(F.lit(1)).alias("__df__"))
     # sets is persisted too (r11, guide §1.2 "don't compute things
     # twice"): index is DERIVED from sets, so materializing the two
     # artifacts as separate actions — the parquet writes every caller
     # performs — would otherwise run the collect_set aggregation over
     # the full history token frame once per artifact
-    sets = (
+    sets = materialize(
         htoks.groupBy("__id__")
         .agg(F.collect_set("__tok__").alias("__toks__"))
         .select(F.col("__id__").alias("__hid__"), "__toks__")
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    register_persisted("containment_index_frames", [sets])
     # token hashes are a function of k; stamp it as parquet-persistent
     # column metadata so the probe fails fast on a mismatched shingle
     # width (see _check_artifact_params; a generator alias drops
@@ -3335,8 +3238,8 @@ def dedup_containment_against_index(
     the artifact build — the builder stamps it as ``__tok__`` column metadata and
     this probe raises ``ValueError`` on a mismatch (a mismatched
     probe hashes shingles into a different token space and silently
-    matches nothing). Batch-side intermediates are persisted and
-    registered under ``"dedup_containment_against_index"``."""
+    matches nothing). Batch-side intermediates are reuse pins of the
+    caller's :func:`~pd_utils_spark.utils.query_scope`."""
     if not 0.0 < threshold <= 1.0:
         raise ValueError(f"threshold must be in (0, 1]: {threshold}")
     if k < 1:
@@ -3344,17 +3247,14 @@ def dedup_containment_against_index(
     _check_artifact_params(
         index, "__tok__", {"k": k}, "containment_index_frames"
     )
-    from pyspark import StorageLevel
-
     # ``toks``: optional precomputed (__id__, __tok__) frame covering
     # exactly ``df``'s rows (same contract as
     # containment_index_frames(toks=...)) — skips the probe's own
     # batch shingle pass when the caller already tokenized the batch.
     if toks is None:
         toks = _containment_toks(df, textcol, idcol, k)
-    btoks = toks.persist(StorageLevel.MEMORY_AND_DISK)
-    register_persisted("dedup_containment_against_index", [btoks])
-    sorted_batch = (
+    btoks = materialize(toks)
+    sorted_batch = materialize(
         btoks.join(dfreq, "__tok__", "left")
         .groupBy("__id__")
         .agg(
@@ -3373,9 +3273,7 @@ def dedup_containment_against_index(
                 "__toks__"
             ),
         )
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    register_persisted("dedup_containment_against_index", [sorted_batch])
     n = F.size("__toks__")
     t_lit = F.lit(float(threshold))
     plen = (n - F.ceil(t_lit * n - F.lit(1e-9)) + 1).cast("int")
@@ -3418,15 +3316,13 @@ def dedup_containment_against_index(
     # persisted for the same reason as dedup_containment's dropped
     # frame: a UNION batch would otherwise re-run the candidate join +
     # verify once per branch via the left-anti pushdown (guide §7.2)
-    dropped = (
+    dropped = materialize(
         cand.join(left, "__bid__")
         .join(right, "__hid__")
         .filter(inter / F.size("__ta__").cast("double") >= threshold)
         .select(F.col("__bid__").alias(idcol))
         .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    register_persisted("dedup_containment_against_index", [dropped])
     return df.join(dropped, idcol, "left_anti")
 
 
@@ -3472,10 +3368,8 @@ def dedup_containment_against(
     serves many batches, materialize the artifacts ONCE and call the
     probe directly (that is the entire point of the split; the
     streaming gate in ``streaming/stateful.py`` does exactly this
-    with versioned per-batch deltas). Intermediates are registered
-    under the two composed labels (``"containment_index_frames"``
-    for the history token frame, ``"dedup_containment_against_index"``
-    for the batch-side frames)."""
+    with versioned per-batch deltas). Intermediates are the two
+    composed calls' reuse pins."""
     frames = containment_index_frames(
         history, textcol=history_textcol or textcol, idcol=idcol, k=k
     )
@@ -3579,7 +3473,6 @@ def candidate_recall(
     # pairs only — tiny relative to the corpus they audit.
     c = materialize(canon(cand))
     t = materialize(canon(truth))
-    register_persisted("candidate_recall", [c, t])
     hit = t.join(c, ["__a__", "__b__"], "left_semi")
     nt = t.groupBy().agg(F.count(F.lit(1)).alias("n_true"))
     nc = c.groupBy().agg(F.count(F.lit(1)).alias("n_cand"))

@@ -14,7 +14,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pd_utils_spark.utils import register_persisted
+from pd_utils_spark.utils import materialize, reliable_checkpoints
 
 
 def pagerank(
@@ -77,68 +77,44 @@ def pagerank(
         raise ValueError(f"damping must be in (0, 1): {damping}")
     if iters < 1:
         raise ValueError(f"iters must be >= 1: {iters}")
-    from pyspark import StorageLevel
-
-    spark = edges.sparkSession
-    reliable = checkpoint_dir is not None
-    prev_ckpt_dir = None
-    if reliable:
-        try:
-            prev_ckpt_dir = spark.sparkContext.getCheckpointDir()
-        except Exception:
-            prev_ckpt_dir = None
-        spark.sparkContext.setCheckpointDir(checkpoint_dir)
-
-    def _ckpt(d: DataFrame) -> DataFrame:
-        # reliable mode materializes each round to stable storage
-        # (eager also guarantees the final frame is written before the
-        # session dir is restored below)
-        return d.checkpoint(eager=True) if reliable else d.localCheckpoint(eager=False)
-
-    e = edges.select(F.col(src).alias("__s__"), F.col(dst).alias("__d__"))
-    nodes = (
-        e.select(F.col("__s__").alias("__n__"))
-        .unionByName(e.select(F.col("__d__").alias("__n__")))
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    n_nodes = nodes.count()  # one action up front; also pins the cache
-    outdeg = e.groupBy("__s__").agg(F.count("*").alias("__deg__"))
-    contrib_edges = (
-        e.join(outdeg, "__s__")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    if sources is None:
-        # a literal column over the ALREADY-cached node frame: do not
-        # re-persist (double-caching measured ~7% per-query overhead)
-        nodes_p = nodes.withColumn("__p__", F.lit(1.0 / n_nodes))
-        register_persisted("pagerank", [nodes, contrib_edges])
-    else:
-        if isinstance(sources, DataFrame):
-            sdf = sources.select(
-                F.col(sources.columns[0]).alias("__n__")
-            ).distinct()
-            marked = nodes.join(sdf, "__n__", "left_semi")
-        else:
-            marked = nodes.filter(F.col("__n__").isin(list(sources)))
-        n_src = marked.count()
-        if n_src == 0:
-            raise ValueError("no source node is present in the graph")
-        nodes_p = (
-            nodes.join(marked.withColumn("__m__", F.lit(1)), "__n__", "left")
-            .withColumn(
-                "__p__",
-                F.when(
-                    F.col("__m__").isNotNull(), F.lit(1.0 / n_src)
-                ).otherwise(F.lit(0.0)),
-            )
-            .drop("__m__")
+    with reliable_checkpoints(edges.sparkSession, checkpoint_dir):
+        e = edges.select(F.col(src).alias("__s__"), F.col(dst).alias("__d__"))
+        nodes = materialize(
+            e.select(F.col("__s__").alias("__n__"))
+            .unionByName(e.select(F.col("__d__").alias("__n__")))
+            .distinct()
         )
-        # the personalized restart vector is join-derived: cache it
-        nodes_p = nodes_p.persist(StorageLevel.MEMORY_AND_DISK)
-        register_persisted("pagerank", [nodes, contrib_edges, nodes_p])
-    ranks = nodes_p.select("__n__", F.col("__p__").alias("__r__"))
-    try:
+        n_nodes = nodes.count()  # one action up front; also pins the cache
+        outdeg = e.groupBy("__s__").agg(F.count("*").alias("__deg__"))
+        contrib_edges = materialize(e.join(outdeg, "__s__"))
+        if sources is None:
+            # a literal column over the ALREADY-cached node frame: do not
+            # re-persist (double-caching measured ~7% per-query overhead)
+            nodes_p = nodes.withColumn("__p__", F.lit(1.0 / n_nodes))
+        else:
+            if isinstance(sources, DataFrame):
+                sdf = sources.select(
+                    F.col(sources.columns[0]).alias("__n__")
+                ).distinct()
+                marked = nodes.join(sdf, "__n__", "left_semi")
+            else:
+                marked = nodes.filter(F.col("__n__").isin(list(sources)))
+            n_src = marked.count()
+            if n_src == 0:
+                raise ValueError("no source node is present in the graph")
+            nodes_p = (
+                nodes.join(marked.withColumn("__m__", F.lit(1)), "__n__", "left")
+                .withColumn(
+                    "__p__",
+                    F.when(
+                        F.col("__m__").isNotNull(), F.lit(1.0 / n_src)
+                    ).otherwise(F.lit(0.0)),
+                )
+                .drop("__m__")
+            )
+            # the personalized restart vector is join-derived: cache it
+            nodes_p = materialize(nodes_p)
+        ranks = nodes_p.select("__n__", F.col("__p__").alias("__r__"))
         for _ in range(iters):
             contrib = (
                 contrib_edges.join(
@@ -151,28 +127,18 @@ def pagerank(
                 .groupBy("__n__")
                 .agg(F.sum("__c__").alias("__in__"))
             )
-            ranks = _ckpt(
-                nodes_p.join(contrib, "__n__", "left")
-                .select(
+            # reliable mode writes each round eagerly to stable storage,
+            # so the final frame exists before the session dir is restored
+            ranks = materialize(
+                nodes_p.join(contrib, "__n__", "left").select(
                     "__n__",
                     (
                         F.lit(1.0 - damping) * F.col("__p__")
                         + F.lit(damping) * F.coalesce("__in__", F.lit(0.0))
                     ).alias("__r__"),
-                )
+                ),
+                stable=True,
             )
-    finally:
-        if reliable and prev_ckpt_dir != checkpoint_dir:
-            # best-effort restore — must never mask the computed result
-            try:
-                if prev_ckpt_dir is not None:
-                    spark.sparkContext.setCheckpointDir(prev_ckpt_dir)
-                else:
-                    jsc = spark.sparkContext._jsc.sc()
-                    none = spark.sparkContext._jvm.scala.Option.apply(None)
-                    getattr(jsc, "checkpointDir_$eq")(none)
-            except Exception:
-                pass
     return ranks.select(F.col("__n__").alias("node"), F.col("__r__").alias(out))
 
 
@@ -218,17 +184,15 @@ def hits(
     """
     if iters < 1:
         raise ValueError(f"iters must be >= 1: {iters}")
-    from pyspark import StorageLevel
-
-    e = edges.select(F.col(src).alias("__s__"), F.col(dst).alias("__d__")) \
-        .distinct().persist(StorageLevel.MEMORY_AND_DISK)
-    nodes = (
+    e = materialize(
+        edges.select(F.col(src).alias("__s__"), F.col(dst).alias("__d__"))
+        .distinct()
+    )
+    nodes = materialize(
         e.select(F.col("__s__").alias("__n__"))
         .unionByName(e.select(F.col("__d__").alias("__n__")))
         .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    register_persisted("hits", [e, nodes])
 
     def _l2norm(df, col, eager=True):
         # EAGER checkpoint before the norm: the crossJoin references
@@ -240,7 +204,7 @@ def hits(
         # 10-round plan re-enters Catalyst per reference and
         # optimization time itself explodes (measured minutes).
         if eager:
-            df = df.localCheckpoint(eager=True)
+            df = materialize(df, stable=True, eager=True)
         nrm = df.agg(F.sqrt(F.sum(F.col(col) * F.col(col))).alias("__nrm__"))
         return df.crossJoin(F.broadcast(nrm)).select(
             "__n__",
@@ -389,29 +353,24 @@ def bfs_levels(
     O(edges) across ALL rounds, the textbook level-synchronous BFS
     bound).
 
-    Cache note: the projected edge frame stays persisted (every round
-    joins it) — ``utils.release_registered("bfs_levels")`` (or
-    unpersist / ``spark.catalog.clearCache()``) after your
-    first action on the result if you run many traversals in one
-    long-lived session.
+    Cache note: the projected edge frame stays pinned (every round
+    joins it) — run traversals inside a
+    :func:`~pd_utils_spark.utils.query_scope`, which releases it on
+    exit.
     """
     if max_depth < 0:
         raise ValueError(f"max_depth must be >= 0: {max_depth}")
-    from pyspark import StorageLevel
-
-    e = edges.select(F.col(src).alias("__s__"), F.col(dst).alias("__d__"))
-    e = e.persist(StorageLevel.MEMORY_AND_DISK)
-    register_persisted("bfs_levels", [e])
-    frontier = (
-        sources.select(F.col(node).alias("__n__"))
-        .distinct()
-        .localCheckpoint(eager=False)
+    e = materialize(
+        edges.select(F.col(src).alias("__s__"), F.col(dst).alias("__d__"))
+    )
+    frontier = materialize(
+        sources.select(F.col(node).alias("__n__")).distinct(), stable=True
     )
     visited = frontier.select("__n__", F.lit(0).alias("__l__"))
     for depth in range(1, max_depth + 1):
         if early_stop and frontier.isEmpty():
             break
-        nxt = _bfs_round(e, frontier, visited).localCheckpoint(eager=False)
+        nxt = materialize(_bfs_round(e, frontier, visited), stable=True)
         visited = visited.unionByName(
             nxt.select("__n__", F.lit(depth).alias("__l__"))
         )
@@ -450,25 +409,21 @@ def label_propagation(
     left join back onto the node set — edge-sized shuffles, nothing
     quadratic, per-round checkpoint keeps the plan flat (same lineage
     hygiene as :func:`pagerank`). The projected edge and node frames
-    stay persisted (read every round) —
-    ``utils.release_registered("label_propagation")`` (or unpersist /
-    ``spark.catalog.clearCache()`` after your first action when
-    running many propagations in one long-lived session.
+    stay pinned (read every round) until the caller's
+    :func:`~pd_utils_spark.utils.query_scope` exits.
     """
     if iters < 0:
         raise ValueError(f"iters must be >= 0: {iters}")
-    from pyspark import StorageLevel
     from pyspark.sql import Window
 
-    e = edges.select(F.col(src).alias("__s__"), F.col(dst).alias("__d__"))
-    e = e.persist(StorageLevel.MEMORY_AND_DISK)
-    nodes = (
+    e = materialize(
+        edges.select(F.col(src).alias("__s__"), F.col(dst).alias("__d__"))
+    )
+    nodes = materialize(
         e.select(F.col("__s__").alias("__n__"))
         .unionByName(e.select(F.col("__d__").alias("__n__")))
         .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    register_persisted("label_propagation", [e, nodes])
     labels = nodes.select("__n__", F.col("__n__").alias("__l__"))
     w = Window.partitionBy("__dn__").orderBy(
         F.desc("__c__"), F.asc("__bl__")
@@ -483,13 +438,13 @@ def label_propagation(
             .filter(F.col("__rk__") == 1)
             .select("__dn__", "__bl__")
         )
-        labels = (
+        labels = materialize(
             labels.join(best, labels["__n__"] == best["__dn__"], "left")
             .select(
                 "__n__",
                 F.coalesce("__bl__", "__l__").alias("__l__"),
-            )
-            .localCheckpoint(eager=False)
+            ),
+            stable=True,
         )
     return labels.select(
         F.col("__n__").alias("node"), F.col("__l__").alias(out)
@@ -587,17 +542,17 @@ def k_core(
     if k < 1:
         raise ValueError(f"k must be >= 1: {k}")
     a, b = F.col(src), F.col(dst)
-    e = (
+    e = materialize(
         edges.select(F.least(a, b).alias("lo"), F.greatest(a, b).alias("hi"))
         .filter(F.col("lo") != F.col("hi"))
-        .distinct()
-        .localCheckpoint(eager=True)
+        .distinct(),
+        stable=True, eager=True,
     )
     n_edges = e.count()
     for _ in range(max_iter):
         if n_edges == 0:
             break
-        e2 = _peel_round(e, k).localCheckpoint(eager=True)
+        e2 = materialize(_peel_round(e, k), stable=True, eager=True)
         n2 = e2.count()
         e = e2
         if n2 == n_edges:

@@ -37,7 +37,7 @@ from pyspark.sql import functions as F
 
 from pd_utils_spark.extensions.dedup import _norm, _shingles_from_toks, shingle_sets
 from pd_utils_spark.extensions.text import _tokens
-from pd_utils_spark.utils import register_persisted, to_list
+from pd_utils_spark.utils import materialize, to_list
 
 _HASH_DENOM = 1 << 31
 _HASH_MASK = _HASH_DENOM - 1
@@ -437,12 +437,7 @@ def ngram_hashes(
     GPT-3/The Pile methodology). Documents shorter than ``n`` words
     hash their whole normalized text, so short benchmark items still
     match verbatim copies."""
-    from pyspark import StorageLevel
-
-    grams = shingle_sets(df, textcol, idcol, n, out="__grams__").persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    register_persisted("ngram_hashes", [grams])
+    grams = materialize(shingle_sets(df, textcol, idcol, n, out="__grams__"))
     return grams.select(
         F.col(idcol), F.explode(F.col("__grams__")).alias("__g__")
     ).select(F.col(idcol), F.md5(F.col("__g__")).alias(out))

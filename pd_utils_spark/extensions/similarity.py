@@ -31,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from pd_utils_spark.utils import materialize, query_scope
+
 
 def dot(a: Column, b: Column) -> Column:
     """Double-precision dot product of two array columns (left fold in
@@ -542,8 +544,6 @@ def embedding_near_dup_pairs(
     # bucket-cap window once PER SIDE. Lazy + fault-tolerant (persist,
     # or reliable checkpoint when a checkpoint dir is configured) —
     # see utils.materialize.
-    from pd_utils_spark.utils import materialize
-
     sig = materialize(sig)
     a = sig.alias("a")
     b = sig.alias("b")
@@ -677,21 +677,19 @@ def kmeans_fit(
     join) plus a ``(cluster, dim)`` hash aggregation whose shuffle is
     k x dims rows after map-side combine, regardless of corpus size.
     ``iters`` full scans total: when ``iters > 1`` the (id, vector)
-    projection is persisted for the duration of the fit and
-    unpersisted before returning, so a derived upstream frame (e.g.
+    projection is pinned for the duration of the fit, in its own
+    :func:`~pd_utils_spark.utils.query_scope` that releases it before
+    returning (error paths too), so a derived upstream frame (e.g.
     the normalized projection :func:`semantic_dedup_kmeans` builds)
     is computed once, not ``iters + 1`` times; a plain parquet scan
     pays one cheap cache write for the same read volume.
     """
     if k < 1 or iters < 0:
         raise ValueError(f"need k >= 1 and iters >= 0: {k}, {iters}")
-    from pyspark import StorageLevel
-
     work = df.select(idcol, veccol)
-    cached = iters > 1
-    if cached:
-        work = work.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
+    with query_scope():
+        if iters > 1:
+            work = materialize(work)
         seed_rows = work.orderBy(idcol).limit(k).collect()
         if len(seed_rows) < k:
             raise ValueError(f"k={k} exceeds row count {len(seed_rows)}")
@@ -719,9 +717,6 @@ def kmeans_fit(
                 else list(cents[cid])
                 for cid in range(k)
             ]
-    finally:
-        if cached:
-            work.unpersist()
     return cents
 
 

@@ -33,7 +33,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from pd_utils_spark.utils import to_list
+from pd_utils_spark.utils import materialize, to_list
 
 __all__ = ["prefix_sum", "prefix_agg", "exact_ntile"]
 
@@ -88,10 +88,10 @@ def prefix_agg(
     # pair local prefixes with the wrong offsets. A cache could be
     # recomputed and resampled without notice; a lost local-checkpoint
     # block fails the job instead.
-    ranged = (
+    ranged = materialize(
         df.repartitionByRange(n, *[F.col(c) for c in order_l])
-        .withColumn("__pid__", F.spark_partition_id())
-        .localCheckpoint(eager=True)
+        .withColumn("__pid__", F.spark_partition_id()),
+        stable=True, eager=True,
     )
     local_w = (
         Window.partitionBy("__pid__")

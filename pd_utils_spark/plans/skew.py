@@ -12,7 +12,7 @@ from typing import Optional
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pd_utils_spark.utils import to_list
+from pd_utils_spark.utils import materialize, to_list
 
 # partial / final decomposition per aggregate: algebraic aggs combine
 # with the listed final function; avg decomposes into sum + count
@@ -145,13 +145,11 @@ def hot_key_join(
     count also short-circuits: zero hot keys -> plain shuffle join
     with no union overhead.
 
-    Cache note: on the two-path (broadcast) return, the small hot-key
-    frame stays persisted because the returned lazy plan references it
-    twice (semi + anti split) — like :func:`~pd_utils_spark.utils.
-    materialize`, call ``spark.catalog.clearCache()`` (or unpersist
-    via ``df.sparkSession.catalog``) after your first action if you
-    issue many such joins in one long-lived session; the fallback
-    paths unpersist before returning.
+    Cache note: the small hot-key frame is a reuse pin
+    (:func:`~pd_utils_spark.utils.materialize`) because the returned
+    two-path plan references it twice (semi + anti split); run the
+    join inside a :func:`~pd_utils_spark.utils.query_scope`, which
+    unpersists it on exit.
     """
     if how not in ("inner", "left", "left_outer", "leftouter"):
         raise ValueError(
@@ -167,16 +165,14 @@ def hot_key_join(
     # the hot-key set is small by construction (each key has >threshold
     # rows, so there are at most n_rows/threshold of them) — broadcast
     # it for the semi/anti splits and the right-side filter
-    hot_b = F.broadcast(hot.persist())
+    hot_b = F.broadcast(materialize(hot))
     hot_right_plan = right.join(hot_b, on_l, "left_semi")
     hot_right_rows = hot_right_plan.count()
     if hot_right_rows > max_broadcast_rows:
         # right side of the hot keys is itself too big to broadcast:
         # replicate-and-salt handles two-sided skew without collecting
-        hot.unpersist()
         return salted_join(left, right, on=on_l, how=how)
     if hot_right_rows == 0:
-        hot.unpersist()
         return left.join(right, on_l, how)
     cold_left = left.join(hot_b, on_l, "left_anti")
     hot_left = left.join(hot_b, on_l, "left_semi")

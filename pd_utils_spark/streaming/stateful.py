@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from pd_utils_spark.utils import release_registered, to_list
+from pd_utils_spark.utils import materialize, query_scope, to_list
 
 
 #: Per-task input-byte grain for spreading an under-partitioned
@@ -149,11 +149,19 @@ def _delete_quietly(spark, state_dir: str, names: list[str]) -> None:
 
 
 def _start(sdf: DataFrame, process, checkpoint_dir: str, available_now: bool):
-    """Start ``process`` as the ``foreachBatch`` sink of ``sdf``;
-    ``available_now=True`` drains everything currently available and
-    terminates (Trigger.AvailableNow — the batch-backfill mode).
-    Returns the started ``StreamingQuery``."""
-    writer = sdf.writeStream.foreachBatch(process).option(
+    """Start ``process`` as the ``foreachBatch`` sink of ``sdf``, each
+    micro-batch in its own :func:`~pd_utils_spark.utils.query_scope`
+    (per-batch pins never accumulate across a long-running stream, and
+    never release a caller's frames); ``available_now=True`` drains
+    everything currently available and terminates
+    (Trigger.AvailableNow — the batch-backfill mode). Returns the
+    started ``StreamingQuery``."""
+
+    def scoped(batch_df: DataFrame, batch_id: int) -> None:
+        with query_scope():
+            process(batch_df, batch_id)
+
+    writer = sdf.writeStream.foreachBatch(scoped).option(
         "checkpointLocation", checkpoint_dir
     )
     if available_now:
@@ -380,7 +388,7 @@ def _fold_stream(
         old = spark.read.parquet(f"{state_dir}/b={prev[-1]}") if prev else None
         fresh = sketch(batch_df, old)
         merged = fresh if old is None else merge(old, fresh)
-        merged = merged.localCheckpoint(eager=True)
+        merged = materialize(merged, stable=True, eager=True)
         merged.write.mode("overwrite").parquet(f"{state_dir}/b={batch_id}")
         if snapshot is not None:
             snapshot(merged).withColumn(
@@ -584,14 +592,13 @@ def streaming_greedy_band_dedup(
                 .distinct()
             )
             work = work.join(hit, idcol, "left_anti")
-        survivors = _greedy_band_filter(work, idcol, bands).localCheckpoint(
-            eager=True
-        )  # written twice below
-        # the eager checkpoint has materialized the survivor set, so
-        # the per-pass frames _greedy_band_filter persisted are now
-        # superseded — release them here or they accumulate across
-        # micro-batches for the life of the stream
-        release_registered("greedy_band_filter")
+        # written twice below; the eager checkpoint supersedes the
+        # per-pass frames _greedy_band_filter pins, so its own scope
+        # releases them before the writes
+        with query_scope():
+            survivors = materialize(
+                _greedy_band_filter(work, idcol, bands), stable=True, eager=True
+            )
         survivors.drop("__bks__").write.mode("append").parquet(output_dir)
         survivors.select(
             F.posexplode("__bks__").alias("band", "key")
@@ -663,7 +670,7 @@ def streaming_bloom_dedup(
             batch = exact_dedup_against_bloom(
                 batch, old, textcol=textcol, idcol=idcol, verify=False
             )
-        survivors = batch.localCheckpoint(eager=True)  # consumed twice
+        survivors = materialize(batch, stable=True, eager=True)  # read twice
         survivors.write.mode("append").parquet(output_dir)
         return bloom_fingerprints(survivors, textcol, m_bits, k)
 
@@ -788,57 +795,50 @@ def streaming_containment_dedup(
     def process(batch_df: DataFrame, batch_id: int) -> None:
         state = _containment_state(batch_df.sparkSession, history_dir)
         batch_df = _spread_batch(batch_df)
-        try:
-            # ONE shingle pass per micro-batch (r12, guide §1.2): the
-            # within-batch dedup exposes its persisted (__id__,
-            # __tok__) frame, and both the history probe and the
-            # artifact build derive their token frames from it by
-            # (anti/semi) id joins instead of re-tokenizing the batch
-            # text — _containment_toks is a pure per-row function of
-            # (id, text), so the derived slices are row-identical to
-            # what each stage would have computed itself.
-            survivors, btoks, dropped = _dedup_containment_parts(
-                batch_df, textcol=textcol, idcol=idcol, threshold=threshold,
-                k=k, max_bucket=max_bucket,
+        # ONE shingle pass per micro-batch (r12, guide §1.2): the
+        # within-batch dedup exposes its persisted (__id__,
+        # __tok__) frame, and both the history probe and the
+        # artifact build derive their token frames from it by
+        # (anti/semi) id joins instead of re-tokenizing the batch
+        # text — _containment_toks is a pure per-row function of
+        # (id, text), so the derived slices are row-identical to
+        # what each stage would have computed itself.
+        survivors, btoks, dropped = _dedup_containment_parts(
+            batch_df, textcol=textcol, idcol=idcol, threshold=threshold,
+            k=k, max_bucket=max_bucket,
+        )
+        ids = F.col(idcol).alias("__id__")
+        surv_toks = btoks.join(dropped.select(ids), "__id__", "left_anti")
+        history = state.read(below=batch_id)
+        if history is not None:
+            # history side was flood-capped at build time (below)
+            # — a per-probe cap would re-window the full history
+            # index every batch
+            survivors = dedup_containment_against_index(
+                survivors, *history, textcol=textcol, idcol=idcol,
+                threshold=threshold, k=k, max_bucket=None,
+                toks=surv_toks,
             )
-            ids = F.col(idcol).alias("__id__")
-            surv_toks = btoks.join(dropped.select(ids), "__id__", "left_anti")
-            history = state.read(below=batch_id)
-            if history is not None:
-                # history side was flood-capped at build time (below)
-                # — a per-probe cap would re-window the full history
-                # index every batch
-                survivors = dedup_containment_against_index(
-                    survivors, *history, textcol=textcol, idcol=idcol,
-                    threshold=threshold, k=k, max_bucket=None,
-                    toks=surv_toks,
-                )
-            survivors = survivors.localCheckpoint(eager=True)  # 5 writes
-            # flood cap applied per delta at build — write-once; a
-            # bucket spanning deltas is capped per delta until a
-            # compaction re-bounds it
-            frames = containment_index_frames(
-                survivors, textcol=textcol, idcol=idcol, k=k,
-                max_bucket=max_bucket,
-                toks=surv_toks.join(
-                    survivors.select(ids), "__id__", "left_semi"
-                ),
-            )
-            # one 3-wide wave (sets materializes the htoks+sets
-            # caches, dfreq reads the shared htoks cache, docs the
-            # checkpointed survivors), then index, then the output
-            docs = survivors.select(idcol, textcol)
-            state.write_batch(
-                batch_id, {"sets": frames["sets"], "docs": docs,
-                           "dfreq": frames["dfreq"], "index": frames["index"]},
-                survivors, output_dir,
-            )
-        finally:
-            # per-batch persists must not accumulate across a
-            # long-running stream
-            release_registered("containment_join_prefix")
-            release_registered("dedup_containment_against_index")
-            release_registered("containment_index_frames")
+        survivors = materialize(survivors, stable=True, eager=True)  # 5 writes
+        # flood cap applied per delta at build — write-once; a
+        # bucket spanning deltas is capped per delta until a
+        # compaction re-bounds it
+        frames = containment_index_frames(
+            survivors, textcol=textcol, idcol=idcol, k=k,
+            max_bucket=max_bucket,
+            toks=surv_toks.join(
+                survivors.select(ids), "__id__", "left_semi"
+            ),
+        )
+        # one 3-wide wave (sets materializes the htoks+sets
+        # caches, dfreq reads the shared htoks cache, docs the
+        # checkpointed survivors), then index, then the output
+        docs = survivors.select(idcol, textcol)
+        state.write_batch(
+            batch_id, {"sets": frames["sets"], "docs": docs,
+                       "dfreq": frames["dfreq"], "index": frames["index"]},
+            survivors, output_dir,
+        )
 
     return _start(sdf, process, checkpoint_dir, available_now)
 
@@ -1229,54 +1229,48 @@ def streaming_minhash_dedup(
     def process(batch_df: DataFrame, batch_id: int) -> None:
         state = _minhash_state(batch_df.sparkSession, history_dir)
         batch_df = _spread_batch(batch_df)
-        try:
-            # ONE tokenize pass and ONE signature aggregation per
-            # micro-batch: the within-batch dedup exposes
-            # its persisted shingle frame and its uncapped band-key
-            # table, and both the history probe and the artifact build
-            # derive their slices of them by (anti/semi) id joins
-            # instead of re-shingling and re-minhashing the batch —
-            # both are pure per-row functions of (id, text), so the
-            # derived slices are row-identical to what each stage
-            # would have computed itself. Each stage still applies the
-            # flood cap to its own rows.
-            survivors, bsh, bkeys, losers = _dedup_minhash_lsh_parts(
-                batch_df, textcol, idcol, k, num_hashes, bands, threshold,
-                max_bucket,
+        # ONE tokenize pass and ONE signature aggregation per
+        # micro-batch: the within-batch dedup exposes
+        # its persisted shingle frame and its uncapped band-key
+        # table, and both the history probe and the artifact build
+        # derive their slices of them by (anti/semi) id joins
+        # instead of re-shingling and re-minhashing the batch —
+        # both are pure per-row functions of (id, text), so the
+        # derived slices are row-identical to what each stage
+        # would have computed itself. Each stage still applies the
+        # flood cap to its own rows.
+        survivors, bsh, bkeys, losers = _dedup_minhash_lsh_parts(
+            batch_df, textcol, idcol, k, num_hashes, bands, threshold,
+            max_bucket,
+        )
+        surv_sh = bsh.join(losers, idcol, "left_anti")
+        history = state.read(below=batch_id)
+        if history is not None:
+            survivors = dedup_minhash_against_index(
+                survivors, *history, textcol=textcol, idcol=idcol, k=k,
+                num_hashes=num_hashes, bands=bands, threshold=threshold,
+                max_bucket=max_bucket, batch_shingles=surv_sh,
+                batch_keys=bkeys.join(losers, idcol, "left_anti"),
             )
-            surv_sh = bsh.join(losers, idcol, "left_anti")
-            history = state.read(below=batch_id)
-            if history is not None:
-                survivors = dedup_minhash_against_index(
-                    survivors, *history, textcol=textcol, idcol=idcol, k=k,
-                    num_hashes=num_hashes, bands=bands, threshold=threshold,
-                    max_bucket=max_bucket, batch_shingles=surv_sh,
-                    batch_keys=bkeys.join(losers, idcol, "left_anti"),
-                )
-            survivors = survivors.localCheckpoint(eager=True)  # 4 writes
-            # band-bucket flood cap applied per delta at build time
-            # (write-once); the probe caps only its batch side
-            kept = survivors.select(idcol)
-            frames = minhash_history_frames(
-                survivors, textcol=textcol, idcol=idcol, k=k,
-                num_hashes=num_hashes, bands=bands, max_bucket=max_bucket,
-                shingles=surv_sh.join(kept, idcol, "left_semi"),
-                band_keys=bkeys.join(kept, idcol, "left_semi"),
-            )
-            # one 2-wide wave (shingles reads the persisted batch
-            # shingles, docs the checkpointed survivors), then keys
-            # (from the persisted band-key table), then the output
-            docs = survivors.select(idcol, textcol)
-            state.write_batch(
-                batch_id, {"shingles": frames["shingles"], "docs": docs,
-                           "keys": frames["keys"]},
-                survivors, output_dir,
-            )
-        finally:
-            # per-batch persists must not accumulate across the stream
-            release_registered("dedup_minhash_lsh")
-            release_registered("minhash_history_frames")
-            release_registered("dedup_minhash_against_index")
+        survivors = materialize(survivors, stable=True, eager=True)  # 4 writes
+        # band-bucket flood cap applied per delta at build time
+        # (write-once); the probe caps only its batch side
+        kept = survivors.select(idcol)
+        frames = minhash_history_frames(
+            survivors, textcol=textcol, idcol=idcol, k=k,
+            num_hashes=num_hashes, bands=bands, max_bucket=max_bucket,
+            shingles=surv_sh.join(kept, idcol, "left_semi"),
+            band_keys=bkeys.join(kept, idcol, "left_semi"),
+        )
+        # one 2-wide wave (shingles reads the persisted batch
+        # shingles, docs the checkpointed survivors), then keys
+        # (from the persisted band-key table), then the output
+        docs = survivors.select(idcol, textcol)
+        state.write_batch(
+            batch_id, {"shingles": frames["shingles"], "docs": docs,
+                       "keys": frames["keys"]},
+            survivors, output_dir,
+        )
 
     return _start(sdf, process, checkpoint_dir, available_now)
 

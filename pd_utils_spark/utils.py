@@ -2,6 +2,11 @@
 
 from __future__ import annotations
 
+import threading
+from collections.abc import Iterator
+from contextlib import contextmanager
+
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 
 NUMERIC_SPARK_TYPES = {
@@ -40,133 +45,111 @@ def quote(col: str) -> str:
     return "`" + col.replace("`", "``") + "`"
 
 
-def materialize(df: DataFrame, eager: bool = False) -> DataFrame:
-    """Compute-once materialization of ``df`` for multiply-referenced
-    subtrees (e.g. both sides of a self-join, where ReuseExchange
-    cannot dedupe the separate subtrees and the upstream pipeline
-    would otherwise execute once PER reference).
+class _Scopes(threading.local):
+    """Per-thread stack of open :func:`query_scope` pin lists."""
 
-    Fault-tolerance-aware choice of mechanism:
+    def __init__(self) -> None:
+        self.stack: list[list[DataFrame]] = []
 
-    - If the SparkContext has a **reliable checkpoint dir** configured
-      (``sparkContext.setCheckpointDir``), uses ``persist`` THEN
-      ``df.checkpoint()`` — data lands on the (replicated) checkpoint
-      store, so an executor loss mid-job does not lose the materialized
-      blocks. This is the right mode for 100 TB runs with dynamic
-      allocation. The persist matters: a lazy checkpoint alone writes
-      its data only after the first job completes (recomputing the
-      subtree to do so), so the first action — typically the self-join
-      this call guards — would still execute the subtree once per join
-      side plus once for the checkpoint write. With the persist
-      underneath, the first action computes the subtree exactly once;
-      the checkpoint write then reads cached blocks.
-    - Otherwise ``persist(MEMORY_AND_DISK)`` — lazily cached, computed
-      once at first action and shared by every reference; on executor
-      loss the lost blocks are *recomputed from lineage* (slower, but
-      never job-fatal, unlike ``localCheckpoint`` whose truncated
-      lineage makes lost blocks unrecoverable).
 
-    ``eager=False`` (default) keeps plan construction free — building
-    the DataFrame (or calling ``.explain``) runs no job; the first
-    action pays the materialization. Set ``eager=True`` only when a
-    driver-side loop needs the result pinned before iterating.
+_SCOPES = _Scopes()
+
+
+def materialize(
+    df: DataFrame, *, stable: bool = False, eager: bool = False
+) -> DataFrame:
+    """The one way the library pins a subtree it reads more than once
+    (e.g. both sides of a self-join, where ReuseExchange cannot dedupe
+    the separate subtrees and the upstream pipeline would otherwise
+    execute once PER reference).
+
+    ``stable=False`` (reuse, the default): ``persist(MEMORY_AND_DISK)``
+    — lazily cached, computed once at the first action and shared by
+    every reference; lost blocks are *recomputed from lineage*. The
+    pin registers itself in the innermost open :func:`query_scope` on
+    the calling thread, which unpersists it on exit; outside a scope
+    nothing records it (``spark.catalog.clearCache()`` frees it). With
+    a **reliable checkpoint dir** set (:func:`reliable_checkpoints`)
+    the persisted frame is also lazily ``checkpoint``-ed, so the data
+    lands on the (replicated) checkpoint store and survives executor
+    loss; the persist underneath makes the first action compute the
+    subtree once and the checkpoint write read the cache (a bare lazy
+    checkpoint would recompute it per reference plus once more).
+
+    ``stable=True`` (one evaluation: range bounds, RNG draws, lineage
+    truncation in iterative loops): ``localCheckpoint(eager)`` — lost
+    blocks fail the job instead of being silently recomputed — or,
+    with a reliable checkpoint dir, ``checkpoint(eager=True)``.
+    Checkpoint blocks are not scope-released (the ContextCleaner
+    reclaims them with the frame).
+
+    ``eager=True`` runs the job at call time; it needs
+    ``stable=True`` (a reuse pin is always lazy, so building a plan
+    runs no job).
     """
-    from pyspark import StorageLevel
-
-    sc = df.sparkSession.sparkContext
+    if eager and not stable:
+        raise ValueError("materialize(eager=True) requires stable=True")
     try:
-        has_ckpt_dir = sc.getCheckpointDir() is not None
+        reliable = df.sparkSession.sparkContext.getCheckpointDir() is not None
     except Exception:
-        has_ckpt_dir = False
-    if has_ckpt_dir:
-        # persist first so the first action computes the subtree once
-        # (see docstring); the checkpoint write then reads the cache.
-        df.persist(StorageLevel.MEMORY_AND_DISK)
-        out = df.checkpoint(eager=eager)
-        if eager:
-            # the checkpoint files now supersede the cache; drop it so
-            # repeated materialize() calls don't pin redundant copies
-            # for the rest of the session
-            df.unpersist()
-        # lazy: the cache must survive until the caller's first action
-        # materializes the checkpoint; callers doing many lazy
-        # checkpoints should unpersist the source afterwards (or
-        # spark.catalog.clearCache()) to reclaim the superseded blocks
-        return out
-    out = df.persist(StorageLevel.MEMORY_AND_DISK)
-    if eager:
-        out.count()
-    return out
+        reliable = False
+    if stable:
+        if reliable:
+            return df.checkpoint(eager=True)
+        return df.localCheckpoint(eager=eager)
+    pinned = df.persist(StorageLevel.MEMORY_AND_DISK)
+    if _SCOPES.stack:
+        _SCOPES.stack[-1].append(pinned)
+    return df.checkpoint(eager=False) if reliable else pinned
 
 
-#: Module-level registry of operator-persisted intermediates, keyed by
-#: operator label. The ``_pus_persisted`` attribute on a result frame
-#: does NOT survive downstream transformations (``select``/``filter``/
-#: ``cache`` return new DataFrames without it), so operators ALSO
-#: register here — ``release_registered()`` works no matter what the
-#: caller did to the result frame in between.
-_PERSIST_REGISTRY: dict[str, list[DataFrame]] = {}
+@contextmanager
+def query_scope() -> Iterator[list[DataFrame]]:
+    """Release every reuse pin :func:`materialize` makes on this
+    thread while the block runs: on exit (normal or raised) exactly
+    those frames are unpersisted, whatever the caller did to the
+    returned frames in between. Scopes nest — a pin belongs to the
+    innermost open one — and are per thread, so a streaming
+    micro-batch (its own scope, on the stream's thread) never releases
+    a caller's frames. Yields the list of pinned frames."""
+    pins: list[DataFrame] = []
+    _SCOPES.stack.append(pins)
+    try:
+        yield pins
+    finally:
+        _SCOPES.stack.pop()
+        for f in pins:
+            f.unpersist()
 
 
-def register_persisted(label: str, frames: list[DataFrame]) -> None:
-    """Record ``frames`` (already persisted by an operator) under
-    ``label`` so :func:`release_registered` can unpersist them later
-    even if the caller no longer holds the operator's exact result
-    frame. Repeated calls with the same label APPEND (an operator run
-    twice in a session has two generations of intermediates alive
-    until released)."""
-    _PERSIST_REGISTRY.setdefault(label, []).extend(frames)
-
-
-def release_registered(label: str | None = None, blocking: bool = False) -> int:
-    """Unpersist every operator-registered intermediate under
-    ``label`` (or ALL labels when ``None``) and drop them from the
-    registry. Returns the number of frames released. This is the
-    derived-frame-safe counterpart of :func:`release_cached`: it works
-    regardless of what transformations the caller applied to the
-    operator's result."""
-    labels = [label] if label is not None else list(_PERSIST_REGISTRY)
-    n = 0
-    for key in labels:
-        for f in _PERSIST_REGISTRY.pop(key, []):
-            f.unpersist(blocking)
-            n += 1
-    return n
-
-
-def release_cached(df: DataFrame, blocking: bool = False) -> int:
-    """Unpersist every frame an operator registered on ``df`` via the
-    ``_pus_persisted`` handle (operators that persist intermediate
-    frames for multi-consumer reuse — e.g.
-    :func:`~pd_utils_spark.extensions.dedup.jaccard_join_prefix` —
-    attach the persisted frames to their RESULT so callers can release
-    them after the first action without nuking the whole session cache
-    with ``spark.catalog.clearCache()``). Returns the number of frames
-    released; a frame with no handle is a no-op (0).
-
-    .. warning:: The handle lives on the EXACT frame the operator
-       returned — any downstream transformation (``select``,
-       ``filter``, even ``cache``) returns a new DataFrame without it,
-       making this call a silent no-op (returns 0). If you transformed
-       the result before releasing, use :func:`release_registered`
-       with the operator's label instead (operators register their
-       persists in a module-level registry as well)."""
-    frames = getattr(df, "_pus_persisted", None) or []
-    for f in frames:
-        f.unpersist(blocking)
-    if frames:
-        df._pus_persisted = []
-        # the registry holds the same frames; drop them there too so a
-        # later release_registered() doesn't double-unpersist (harmless
-        # but miscounts)
-        released = {id(f) for f in frames}
-        for key, reg in list(_PERSIST_REGISTRY.items()):
-            kept = [f for f in reg if id(f) not in released]
-            if kept:
-                _PERSIST_REGISTRY[key] = kept
-            else:
-                _PERSIST_REGISTRY.pop(key)
-    return len(frames)
+@contextmanager
+def reliable_checkpoints(spark, checkpoint_dir: str | None) -> Iterator[None]:
+    """Set the session's reliable checkpoint dir to ``checkpoint_dir``
+    for the block, so every :func:`materialize` inside it pins on
+    stable storage; ``None`` leaves the session as it is. The prior
+    dir (a session-global setting) is restored on exit, so the call
+    does not switch unrelated later checkpoint users into a different
+    mode. The restore writes the prior value back through the JVM
+    accessor: the public setter cannot unset, and it would create a
+    fresh subdirectory under the prior dir instead of reusing it.
+    Best-effort: a failed restore never masks the block's result."""
+    if checkpoint_dir is None:
+        yield
+        return
+    sc = spark.sparkContext
+    try:
+        prev = sc.getCheckpointDir()
+    except Exception:
+        prev = None
+    sc.setCheckpointDir(checkpoint_dir)
+    try:
+        yield
+    finally:
+        try:
+            old = sc._jvm.scala.Option.apply(prev)
+            getattr(sc._jsc.sc(), "checkpointDir_$eq")(old)
+        except Exception:
+            pass
 
 
 def observed_metrics(df: DataFrame) -> dict[str, dict]:
@@ -220,8 +203,8 @@ def plan_barrier(df: DataFrame, name: str | None = None) -> DataFrame:
     a ``persist``, nothing must be evicted later.
 
     Use between building an expensive array column and exploding it,
-    when the array is consumed exactly once (use ``persist`` instead
-    when several stages share the computed frame).
+    when the array is consumed exactly once (use :func:`materialize`
+    instead when several stages share the computed frame).
     """
     from pyspark.sql import functions as F
 

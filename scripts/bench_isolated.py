@@ -16,7 +16,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entry
 from pd_utils_spark.session import get_spark
-from pd_utils_spark.utils import release_registered
+from pd_utils_spark.utils import query_scope
 
 
 def main() -> None:
@@ -36,14 +36,16 @@ def main() -> None:
         times = []
         for _ in range(reps):
             t0 = time.perf_counter()
-            qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
+            with query_scope():  # releases the query's pins
+                qs[name](spark, sf_dir).write.format("noop").mode(
+                    "overwrite"
+                ).save()
             times.append(round(time.perf_counter() - t0, 3))
-            # drop leaked persists and the operators' registry, then nudge
-            # a driver GC so the ContextCleaner reclaims shuffle files /
-            # broadcasts (accumulated state measured to inflate later
-            # reps up to ~8x)
+            # drop any other cached data, then nudge a driver GC so the
+            # ContextCleaner reclaims shuffle files / broadcasts
+            # (accumulated state measured to inflate later reps up to
+            # ~8x)
             spark.catalog.clearCache()
-            release_registered()
             try:
                 spark._jvm.System.gc()
             except Exception:

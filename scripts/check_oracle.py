@@ -19,7 +19,7 @@ import pandas as pd
 
 import __spark_entry__ as entry
 from pd_utils_spark.session import get_spark
-from pd_utils_spark.utils import release_registered
+from pd_utils_spark.utils import query_scope
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part",
@@ -90,13 +90,14 @@ def main():
         if only and name not in only:
             continue
         try:
-            sdf = fn(spark, sf_dir)
-            if name not in oracles:
-                n = sdf.count()
-                print(f"{name:32s} rows-only: {n} rows")
-                continue
-            opdf = con.execute(oracles[name]).fetchdf()
-            problems = compare(name, sdf, opdf)
+            with query_scope():  # no query's pins outlive it
+                sdf = fn(spark, sf_dir)
+                if name not in oracles:
+                    n = sdf.count()
+                    print(f"{name:32s} rows-only: {n} rows")
+                    continue
+                opdf = con.execute(oracles[name]).fetchdf()
+                problems = compare(name, sdf, opdf)
             if problems:
                 failures += 1
                 print(f"{name:32s} FAIL")
@@ -108,9 +109,7 @@ def main():
             failures += 1
             print(f"{name:32s} ERROR: {type(e).__name__}: {str(e)[:500]}")
         finally:
-            # no query's persisted frames outlive it
             spark.catalog.clearCache()
-            release_registered()
     print(f"\n{'ALL OK' if failures == 0 else f'{failures} FAILURES'}")
     sys.exit(1 if failures else 0)
 

@@ -7,6 +7,7 @@ from hypothesis import HealthCheck, settings
 from pyspark.sql import SparkSession
 
 from pd_utils_spark.session import get_spark
+from pd_utils_spark.utils import query_scope
 
 # Property-suite policy (round 7): derandomize so green is
 # reproducible — an unseeded max_examples=8 run let a false invariant
@@ -29,6 +30,15 @@ def spark() -> SparkSession:
     s = get_spark("pd_utils_spark_tests", cpus=4)
     s.sparkContext.setLogLevel("ERROR")
     yield s
+
+
+@pytest.fixture(autouse=True)
+def pins():
+    """Every test runs in its own query scope: the frames the library
+    pins while it runs are unpersisted when it ends. Yields the scope's
+    pin list."""
+    with query_scope() as frames:
+        yield frames
 
 
 @pytest.fixture

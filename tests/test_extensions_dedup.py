@@ -209,15 +209,14 @@ class TestStringBuiltLshPlans:
         ):
             with pytest.raises(ValueError, match="divisible"):
                 call()
-        from pd_utils_spark.utils import release_registered
-
-        release_registered("minhash_history_frames")
 
     def test_signature_plan_round_trips_do_not_grow_with_hashes(
         self, corpus, monkeypatch
     ):
         """Building the signature plan costs the same number of py4j
         commands for 12 and 128 hashes: no per-hash round trips."""
+        import gc
+
         import py4j.java_gateway as jg
 
         sh = D.shingle_sets(corpus)
@@ -230,11 +229,19 @@ class TestStringBuiltLshPlans:
             return orig(self, *a, **kw)
 
         monkeypatch.setattr(jg.GatewayClient, "send_command", counted)
+        # earlier tests' released frames are garbage; a cyclic
+        # collection inside the window would count their py4j detach
+        # commands as plan-building round trips
+        gc.collect()
+        gc.disable()
         cost = {}
-        for n in (12, 128, 12):
-            before = sent[0]
-            D._minhash_sig_table(sh, "doc_id", n)
-            cost.setdefault(n, []).append(sent[0] - before)
+        try:
+            for n in (12, 128, 12):
+                before = sent[0]
+                D._minhash_sig_table(sh, "doc_id", n)
+                cost.setdefault(n, []).append(sent[0] - before)
+        finally:
+            gc.enable()
         assert cost[12][0] > 0
         assert cost[12][0] == cost[12][1] == cost[128][0], cost
 
@@ -415,6 +422,7 @@ class TestConnectedComponents:
         # convergence and labels must be identical to the local path
         ckpt = str(tmp_path / "cc_ckpt")
         pairs = self._pairs(spark, [(1, 2), (2, 3), (10, 11)])
+        prev = spark.sparkContext.getCheckpointDir()
         got = {
             r.id_a: r.component
             for r in D.connected_components(pairs, checkpoint_dir=ckpt).collect()
@@ -424,6 +432,8 @@ class TestConnectedComponents:
 
         # reliable checkpoint files actually landed in the dir
         assert any(os.scandir(ckpt))
+        # and the session checkpoint dir is restored afterwards
+        assert spark.sparkContext.getCheckpointDir() == prev
 
 
 class TestDedupConnected:
@@ -945,57 +955,24 @@ class TestJaccardJoinPrefix:
         with pytest.raises(ValueError, match="k must"):
             jaccard_join_prefix(df, k=0)
 
-    def test_release_cached_unpersists_both_frames(self, spark):
-        # r7: the two intermediate persists are registered on the
-        # result so long-lived sessions can release exactly them
-        # (caches only materialize in storage AFTER an action)
+    def test_scope_release_survives_derived_frames(self, spark):
+        # a caller holding only a DERIVED frame still releases the
+        # operator's two pinned intermediates: the scope records the
+        # pins themselves, not the frame the operator returned
         from pd_utils_spark.extensions.dedup import jaccard_join_prefix
-        from pd_utils_spark.utils import release_cached, release_registered
+        from pd_utils_spark.utils import query_scope
 
-        release_registered()  # clean slate: other tests register too
         df = spark.createDataFrame(
             [(i, f"alpha beta gamma delta w{i} x{i} y{i}") for i in range(6)],
             ["doc_id", "text"],
         )
-        res = jaccard_join_prefix(df, threshold=0.5)
-        res.count()
-        frames = list(res._pus_persisted)
-        assert len(frames) == 2
-        assert all(f.storageLevel.useMemory for f in frames)
-        assert release_cached(res) == 2
-        assert all(not f.storageLevel.useMemory for f in frames)
-        assert release_cached(res) == 0  # handle cleared, no-op
-        # release_cached also scrubbed the registry entry — no
-        # double-release via the label path
-        assert release_registered("jaccard_join_prefix") == 0
-
-    def test_release_registered_survives_derived_frames(self, spark):
-        # r8 (ADVICE): the _pus_persisted attribute dies on any
-        # downstream transformation; the module-level registry lets a
-        # caller holding only a DERIVED frame still release the
-        # operator's persisted intermediates by label.
-        from pd_utils_spark.extensions.dedup import jaccard_join_prefix
-        from pd_utils_spark.utils import (
-            _PERSIST_REGISTRY,
-            release_cached,
-            release_registered,
-        )
-
-        release_registered()  # clean slate from earlier tests
-        df = spark.createDataFrame(
-            [(i, f"alpha beta gamma delta w{i} x{i} y{i}") for i in range(6)],
-            ["doc_id", "text"],
-        )
-        res = jaccard_join_prefix(df, threshold=0.5)
-        derived = res.filter(F.col("jaccard") >= 0.9)  # handle lost here
-        derived.count()
-        assert release_cached(derived) == 0  # the documented silent no-op
-        frames = list(_PERSIST_REGISTRY["jaccard_join_prefix"])
-        assert len(frames) == 2
-        assert all(f.storageLevel.useMemory for f in frames)
-        assert release_registered("jaccard_join_prefix") == 2
-        assert all(not f.storageLevel.useMemory for f in frames)
-        assert release_registered("jaccard_join_prefix") == 0
+        with query_scope() as pins:
+            res = jaccard_join_prefix(df, threshold=0.5)
+            derived = res.filter(F.col("jaccard") >= 0.9)
+            derived.count()
+            assert len(pins) == 2
+            assert all(f.storageLevel.useMemory for f in pins)
+        assert all(not f.storageLevel.useMemory for f in pins)
 
 
 class TestDedupBandsGreedy:
@@ -1741,14 +1718,11 @@ class TestContainmentIndexPath:
 
     def _artifacts_via_parquet(self, spark, tmp_path, hist, k):
         from pd_utils_spark.extensions.dedup import containment_index_frames
-        from pd_utils_spark.utils import release_registered
-
         frames = containment_index_frames(hist, k=k)
         for name in ("index", "sets", "dfreq"):
             frames[name].write.mode("overwrite").parquet(
                 str(tmp_path / name)
             )
-        release_registered("containment_index_frames")
         return {
             name: spark.read.parquet(str(tmp_path / name))
             for name in ("index", "sets", "dfreq")
@@ -1864,8 +1838,6 @@ class TestContainmentIndexPath:
             dedup_containment_against,
             dedup_containment_against_index,
         )
-        from pd_utils_spark.utils import release_registered
-
         hist = spark.createDataFrame(self.HIST, ["doc_id", "text"])
         b1 = spark.createDataFrame(
             [
@@ -1894,8 +1866,6 @@ class TestContainmentIndexPath:
             delta[name].write.mode("overwrite").parquet(
                 str(tmp_path / "v1" / name)
             )
-        release_registered("containment_index_frames")
-        release_registered("dedup_containment_against_index")
         merged = {
             name: spark.read.parquet(
                 str(tmp_path / "v0" / name), str(tmp_path / "v1" / name)
@@ -1946,8 +1916,6 @@ class TestMinhashIndexPath:
             dedup_minhash_against_index,
             minhash_history_frames,
         )
-        from pd_utils_spark.utils import release_registered
-
         hist = spark.createDataFrame(self.HIST, ["doc_id", "text"])
         batch = spark.createDataFrame(self.BATCH, ["doc_id", "text"])
         kw = dict(k=3, num_hashes=12, bands=6, threshold=0.5)
@@ -1962,7 +1930,6 @@ class TestMinhashIndexPath:
             frames[name].write.mode("overwrite").parquet(
                 str(tmp_path / name)
             )
-        release_registered("minhash_history_frames")
         art = {
             name: spark.read.parquet(str(tmp_path / name))
             for name in ("keys", "shingles")
@@ -1971,7 +1938,6 @@ class TestMinhashIndexPath:
             batch, art["keys"], art["shingles"], **kw
         )
         got = sorted(tuple(r) for r in got_df.collect())
-        release_registered("dedup_minhash_against_index")
         assert got == want
         assert {r[0] for r in got} == {11}
 
@@ -1988,8 +1954,6 @@ class TestMinhashIndexPath:
             dedup_minhash_against_index,
             minhash_history_frames,
         )
-        from pd_utils_spark.utils import release_registered
-
         hist = spark.createDataFrame(self.HIST, ["doc_id", "text"])
         batch = spark.createDataFrame(self.BATCH, ["doc_id", "text"])
         frames = minhash_history_frames(hist, k=3, num_hashes=12, bands=6)
@@ -1997,7 +1961,6 @@ class TestMinhashIndexPath:
             frames[name].write.mode("overwrite").parquet(
                 str(tmp_path / name)
             )
-        release_registered("minhash_history_frames")
         art = {
             name: spark.read.parquet(str(tmp_path / name))
             for name in ("keys", "shingles")
@@ -2017,7 +1980,6 @@ class TestMinhashIndexPath:
         # band-key explode (the recompute path carries a THIRD
         # history-side shingle explode — asserted gone here)
         assert len(gens) == 2
-        release_registered("dedup_minhash_against_index")
 
     def test_probe_params_mismatch_fails_fast(self, spark, tmp_path):
         """Band keys are a function of (k, num_hashes, bands); the
@@ -2029,8 +1991,6 @@ class TestMinhashIndexPath:
             dedup_minhash_against_index,
             minhash_history_frames,
         )
-        from pd_utils_spark.utils import release_registered
-
         hist = spark.createDataFrame(self.HIST, ["doc_id", "text"])
         batch = spark.createDataFrame(self.BATCH, ["doc_id", "text"])
         frames = minhash_history_frames(hist, k=3, num_hashes=12, bands=6)
@@ -2038,7 +1998,6 @@ class TestMinhashIndexPath:
             frames[name].write.mode("overwrite").parquet(
                 str(tmp_path / name)
             )
-        release_registered("minhash_history_frames")
         art = {
             name: spark.read.parquet(str(tmp_path / name))
             for name in ("keys", "shingles")

@@ -363,28 +363,29 @@ class TestKCore:
 
 
 def test_iterative_operator_persists_release_by_label(spark):
-    """r8: the internal persists the iterative operators retain (the
-    docstrings' 'unpersist when done' note) are registered in the
-    module-level registry, so a session can reclaim them by label
+    """The frames the iterative operators keep pinned for their rounds
+    are reuse pins of the caller's query scope, released on exit
     without holding any frame reference."""
     from pd_utils_spark.extensions.graph import bfs_levels, pagerank
-    from pd_utils_spark.utils import release_registered
+    from pd_utils_spark.utils import query_scope
 
-    release_registered()  # clean slate
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (4, 1)], ["src", "dst"]
     )
     srcs = spark.createDataFrame([(1,)], ["node"])
-    bfs_levels(edges, srcs, max_depth=3).count()
-    assert release_registered("bfs_levels") == 1
-    pagerank(edges, iters=2).count()
+    with query_scope() as pins:
+        bfs_levels(edges, srcs, max_depth=3).count()
+    assert len(pins) == 1
+    with query_scope() as pins:
+        pagerank(edges, iters=2).count()
     # uniform: nodes + contrib_edges only (the literal restart column
-    # rides the cached node frame — no third persist)
-    assert release_registered("pagerank") == 2
-    pagerank(edges, iters=2, sources=[1]).count()
+    # rides the cached node frame — no third pin)
+    assert len(pins) == 2
+    with query_scope() as pins:
+        pagerank(edges, iters=2, sources=[1]).count()
     # personalized: + the join-derived restart-vector frame
-    assert release_registered("pagerank") == 3
-    assert release_registered() == 0
+    assert len(pins) == 3
+    assert not any(f.storageLevel.useMemory for f in pins)
 
 
 # ------------------------------------------------------------ link_prediction

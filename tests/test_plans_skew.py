@@ -10,6 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from pd_utils_spark.plans import salted_groupby_agg, salted_join, write_bucketed
+from pd_utils_spark.utils import query_scope
 
 
 @pytest.fixture(scope="module")
@@ -232,14 +233,12 @@ class TestBucketedIngestGateProbes:
             containment_index_frames,
             dedup_containment_against_index,
         )
-        from pd_utils_spark.utils import release_registered
-
         hist = spark.createDataFrame(self.HIST, ["doc_id", "text"])
         batch = spark.createDataFrame(self.BATCH, ["doc_id", "text"])
-        frames = containment_index_frames(hist, k=1)
-        for n in ("index", "sets", "dfreq"):
-            frames[n].write.mode("overwrite").parquet(str(tmp_path / n))
-        release_registered("containment_index_frames")
+        with query_scope():
+            frames = containment_index_frames(hist, k=1)
+            for n in ("index", "sets", "dfreq"):
+                frames[n].write.mode("overwrite").parquet(str(tmp_path / n))
         plain = {
             n: spark.read.parquet(str(tmp_path / n))
             for n in ("index", "sets", "dfreq")
@@ -253,24 +252,26 @@ class TestBucketedIngestGateProbes:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         try:
             kw = dict(threshold=0.9, k=1)
-            out_plain = dedup_containment_against_index(
-                batch, plain["index"], plain["sets"], plain["dfreq"], **kw
-            )
-            n_plain, _ = self._n_exchanges(out_plain)
-            want = sorted(r.doc_id for r in out_plain.collect())
-            release_registered("dedup_containment_against_index")
-            out_b = dedup_containment_against_index(
-                batch,
-                spark.table("tb_cont_idx"),
-                spark.table("tb_cont_sets"),
-                plain["dfreq"],
-                **kw,
-            )
-            n_buck, plan = self._n_exchanges(out_b)
-            assert n_buck == n_plain - 2, plan
-            assert plan.count("Bucketed: true") == 2, plan
-            got = sorted(r.doc_id for r in out_b.collect())
-            release_registered("dedup_containment_against_index")
+            # each probe in its own scope: the second must plan its
+            # batch side afresh, not over the first one's caches
+            with query_scope():
+                out_plain = dedup_containment_against_index(
+                    batch, plain["index"], plain["sets"], plain["dfreq"], **kw
+                )
+                n_plain, _ = self._n_exchanges(out_plain)
+                want = sorted(r.doc_id for r in out_plain.collect())
+            with query_scope():
+                out_b = dedup_containment_against_index(
+                    batch,
+                    spark.table("tb_cont_idx"),
+                    spark.table("tb_cont_sets"),
+                    plain["dfreq"],
+                    **kw,
+                )
+                n_buck, plan = self._n_exchanges(out_b)
+                assert n_buck == n_plain - 2, plan
+                assert plan.count("Bucketed: true") == 2, plan
+                got = sorted(r.doc_id for r in out_b.collect())
             assert got == want == [101]
         finally:
             spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
@@ -282,14 +283,12 @@ class TestBucketedIngestGateProbes:
             dedup_minhash_against_index,
             minhash_history_frames,
         )
-        from pd_utils_spark.utils import release_registered
-
         hist = spark.createDataFrame(self.HIST, ["doc_id", "text"])
         batch = spark.createDataFrame(self.BATCH, ["doc_id", "text"])
-        frames = minhash_history_frames(hist, k=3, num_hashes=12, bands=6)
-        for n in ("keys", "shingles"):
-            frames[n].write.mode("overwrite").parquet(str(tmp_path / n))
-        release_registered("minhash_history_frames")
+        with query_scope():
+            frames = minhash_history_frames(hist, k=3, num_hashes=12, bands=6)
+            for n in ("keys", "shingles"):
+                frames[n].write.mode("overwrite").parquet(str(tmp_path / n))
         plain = {
             n: spark.read.parquet(str(tmp_path / n))
             for n in ("keys", "shingles")
@@ -303,25 +302,26 @@ class TestBucketedIngestGateProbes:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         try:
             kw = dict(threshold=0.5, k=3, num_hashes=12, bands=6)
-            out_plain = dedup_minhash_against_index(
-                batch, plain["keys"], plain["shingles"], **kw
-            )
-            n_plain, _ = self._n_exchanges(out_plain)
-            want = sorted(r.doc_id for r in out_plain.collect())
-            release_registered("dedup_minhash_against_index")
-            out_b = dedup_minhash_against_index(
-                batch, spark.table("tb_mh_keys"), spark.table("tb_mh_sh"), **kw
-            )
-            n_buck, plan = self._n_exchanges(out_b)
-            assert n_buck == n_plain - 2, plan
-            assert plan.count("Bucketed: true") == 2, plan
-            # the build-time params stamp survives bucketed saveAsTable
-            assert spark.table("tb_mh_keys").schema["band_key"].metadata == {
-                "k": 3, "num_hashes": 12, "bands": 6,
-                "max_bucket": 100_000,
-            }
-            got = sorted(r.doc_id for r in out_b.collect())
-            release_registered("dedup_minhash_against_index")
+            with query_scope():
+                out_plain = dedup_minhash_against_index(
+                    batch, plain["keys"], plain["shingles"], **kw
+                )
+                n_plain, _ = self._n_exchanges(out_plain)
+                want = sorted(r.doc_id for r in out_plain.collect())
+            with query_scope():
+                out_b = dedup_minhash_against_index(
+                    batch, spark.table("tb_mh_keys"), spark.table("tb_mh_sh"),
+                    **kw,
+                )
+                n_buck, plan = self._n_exchanges(out_b)
+                assert n_buck == n_plain - 2, plan
+                assert plan.count("Bucketed: true") == 2, plan
+                # the build-time params stamp survives bucketed saveAsTable
+                assert spark.table("tb_mh_keys").schema["band_key"].metadata == {
+                    "k": 3, "num_hashes": 12, "bands": 6,
+                    "max_bucket": 100_000,
+                }
+                got = sorted(r.doc_id for r in out_b.collect())
             assert got == want == [101]
         finally:
             spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)

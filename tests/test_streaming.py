@@ -20,6 +20,7 @@ from pyspark.sql.types import (
 )
 
 from pd_utils_spark import streaming as W
+from pd_utils_spark.utils import query_scope
 
 EVENTS = pd.DataFrame(
     {
@@ -782,8 +783,6 @@ class TestStreamingMinhashDedup:
             dedup_minhash_against_index,
             minhash_history_frames,
         )
-        from pd_utils_spark.utils import release_registered
-
         hot = "the quick brown fox jumps over the lazy dog today"
         batch = spark.createDataFrame(
             [(1, hot), (2, hot), (3, hot)]
@@ -795,54 +794,46 @@ class TestStreamingMinhashDedup:
         )
         kw = dict(k=3, num_hashes=12, bands=6, max_bucket=2)
         probe = dict(threshold=0.5, **kw)
-        try:
-            _, sh, keys, _ = _dedup_minhash_lsh_parts(batch, threshold=0.5, **kw)
-            # the whole batch's hot buckets (3 docs) overflow the cap
-            assert keys.groupBy("band", "band_key").count().agg(
-                F.max("count")
-            ).first()[0] == 3
-            art = minhash_history_frames(hist, **kw)
-            # (slice, hot docs whose keys survive the slice's own cap,
-            # probe survivors: a surviving hot key meets the history)
-            cases = [
-                (batch.filter("doc_id <> 3"), {1, 2}, [10, 11, 12]),
-                (batch, set(), [1, 2, 3, 10, 11, 12]),
-            ]
-            for part, hot_kept, survivors in cases:
-                ids = part.select("doc_id")
-                part_sh = sh.join(ids, "doc_id", "left_semi")
-                part_keys = keys.join(ids, "doc_id", "left_semi")
-                shared = minhash_history_frames(
-                    part, shingles=part_sh, band_keys=part_keys, **kw
-                )
-                own = minhash_history_frames(part, **kw)
-                for name in ("keys", "shingles"):
-                    assert shared[name].schema == own[name].schema
-                    got = sorted(map(tuple, shared[name].collect()))
-                    assert got == sorted(map(tuple, own[name].collect()))
-                assert shared["keys"].schema["band_key"].metadata == {
-                    "k": 3, "num_hashes": 12, "bands": 6, "max_bucket": 2,
-                }
-                hids = {r["__hid__"] for r in shared["keys"].collect()}
-                assert hids & {1, 2, 3} == hot_kept
+        _, sh, keys, _ = _dedup_minhash_lsh_parts(batch, threshold=0.5, **kw)
+        # the whole batch's hot buckets (3 docs) overflow the cap
+        assert keys.groupBy("band", "band_key").count().agg(
+            F.max("count")
+        ).first()[0] == 3
+        art = minhash_history_frames(hist, **kw)
+        # (slice, hot docs whose keys survive the slice's own cap,
+        # probe survivors: a surviving hot key meets the history)
+        cases = [
+            (batch.filter("doc_id <> 3"), {1, 2}, [10, 11, 12]),
+            (batch, set(), [1, 2, 3, 10, 11, 12]),
+        ]
+        for part, hot_kept, survivors in cases:
+            ids = part.select("doc_id")
+            part_sh = sh.join(ids, "doc_id", "left_semi")
+            part_keys = keys.join(ids, "doc_id", "left_semi")
+            shared = minhash_history_frames(
+                part, shingles=part_sh, band_keys=part_keys, **kw
+            )
+            own = minhash_history_frames(part, **kw)
+            for name in ("keys", "shingles"):
+                assert shared[name].schema == own[name].schema
+                got = sorted(map(tuple, shared[name].collect()))
+                assert got == sorted(map(tuple, own[name].collect()))
+            assert shared["keys"].schema["band_key"].metadata == {
+                "k": 3, "num_hashes": 12, "bands": 6, "max_bucket": 2,
+            }
+            hids = {r["__hid__"] for r in shared["keys"].collect()}
+            assert hids & {1, 2, 3} == hot_kept
 
-                got = dedup_minhash_against_index(
-                    part, art["keys"], art["shingles"], batch_shingles=part_sh,
-                    batch_keys=part_keys, **probe,
-                )
-                want = dedup_minhash_against_index(
-                    part, art["keys"], art["shingles"], **probe
-                )
-                got_ids = sorted(r.doc_id for r in got.collect())
-                assert got_ids == sorted(r.doc_id for r in want.collect())
-                assert got_ids == survivors
-        finally:
-            for label in (
-                "dedup_minhash_lsh",
-                "minhash_history_frames",
-                "dedup_minhash_against_index",
-            ):
-                release_registered(label)
+            got = dedup_minhash_against_index(
+                part, art["keys"], art["shingles"], batch_shingles=part_sh,
+                batch_keys=part_keys, **probe,
+            )
+            want = dedup_minhash_against_index(
+                part, art["keys"], art["shingles"], **probe
+            )
+            got_ids = sorted(r.doc_id for r in got.collect())
+            assert got_ids == sorted(r.doc_id for r in want.collect())
+            assert got_ids == survivors
 
 
 class TestWatermarkLateData:
@@ -1940,22 +1931,17 @@ class TestVersionedStateWriteSchedule:
         )
 
     def _write(self, spark, gate, hist, out, batch_id, rows, fault=False):
-        from pd_utils_spark.utils import release_registered
-
         state, build = self._gate(spark, gate, hist)
         df = spark.createDataFrame(rows, ["doc_id", "text"])
-        frames = {**build(df), "docs": df}
-        if fault:
-            boom = F.udf(lambda x: x // 0, "int")
-            wave = next(a for a in frames if a not in (state.last, "docs"))
-            frames[wave] = frames[wave].withColumn(
-                "__boom__", boom(F.lit(1))
-            )
-        try:
+        with query_scope():  # the build's pins go with the write
+            frames = {**build(df), "docs": df}
+            if fault:
+                boom = F.udf(lambda x: x // 0, "int")
+                wave = next(a for a in frames if a not in (state.last, "docs"))
+                frames[wave] = frames[wave].withColumn(
+                    "__boom__", boom(F.lit(1))
+                )
             state.write_batch(batch_id, frames, df, out)
-        finally:
-            release_registered("containment_index_frames")
-            release_registered("minhash_history_frames")
         return state
 
     @pytest.mark.parametrize("gate", ["containment", "minhash"])
@@ -2165,8 +2151,6 @@ class TestStreamingContainmentDedup:
                 from pd_utils_spark.extensions.dedup import (
                     containment_index_frames,
                 )
-                from pd_utils_spark.utils import release_registered
-
                 dfreq = (
                     spark.read.parquet(
                         f"{hist}/dfreq/b=0", f"{hist}/dfreq/b=1"
@@ -2177,7 +2161,6 @@ class TestStreamingContainmentDedup:
                 want = containment_index_frames(docs, k=1)["dfreq"]
                 got_m = {r["__tok__"]: r["__df__"] for r in dfreq.collect()}
                 want_m = {r["__tok__"]: r["__df__"] for r in want.collect()}
-                release_registered("containment_index_frames")
                 assert got_m == want_m
             finally:
                 q.stop()
@@ -2312,8 +2295,6 @@ class TestStreamingContainmentDedup:
             _containment_state,
             compact_containment_state,
         )
-        from pd_utils_spark.utils import release_registered
-
         hist = str(tmp_path / "hist")
         b0 = spark.createDataFrame(
             [(1, "alpha bravo charlie delta echo foxtrot golf hotel"),
@@ -2329,7 +2310,6 @@ class TestStreamingContainmentDedup:
                 frames[name].write.mode("overwrite").parquet(
                     f"{hist}/{name}/b={bid}"
                 )
-            release_registered("containment_index_frames")
         assert compact_containment_state(spark, hist, prune=False) == 0
         # (a) stale delta b=0 still on disk; the enumerator resolves
         # c=0 + b=1 only — no path is read twice
@@ -2353,7 +2333,6 @@ class TestStreamingContainmentDedup:
                 batch, index, sets, dfreq, threshold=0.9, k=1
             ).collect()
         )
-        release_registered("dedup_containment_against_index")
         assert {r[0] for r in want} == {12}
         # (b) the hypothetical double-read: batch-0 artifacts via BOTH
         # c=0 and the stale b=0 it folded
@@ -2371,7 +2350,6 @@ class TestStreamingContainmentDedup:
                 batch, index2, sets2, dfreq2, threshold=0.9, k=1
             ).collect()
         )
-        release_registered("dedup_containment_against_index")
         assert got == want
 
 
@@ -2386,8 +2364,6 @@ class TestCompactionReappliesFloodCap:
     def test_minhash_compaction_recaps_folded_keys(self, spark, tmp_path):
         from pd_utils_spark.extensions.dedup import minhash_history_frames
         from pd_utils_spark.streaming.stateful import compact_minhash_state
-        from pd_utils_spark.utils import release_registered
-
         hist = str(tmp_path / "hist")
         hot = "the quick brown fox jumps over the lazy dog today"
         # three deltas; each delta's hot-text bucket is 3 rows <= cap 4,
@@ -2406,7 +2382,6 @@ class TestCompactionReappliesFloodCap:
                 frames[name].write.mode("overwrite").parquet(
                     f"{hist}/{name}/b={bid}"
                 )
-            release_registered("minhash_history_frames")
         keys_b0 = spark.read.parquet(f"{hist}/keys/b=0")
         # the applied cap is stamped, parquet-persistent
         assert keys_b0.schema["band_key"].metadata["max_bucket"] == 4
@@ -2432,8 +2407,6 @@ class TestCompactionReappliesFloodCap:
         from pd_utils_spark.streaming.stateful import (
             compact_containment_state,
         )
-        from pd_utils_spark.utils import release_registered
-
         hist = str(tmp_path / "hist")
         # "common" appears in 2 docs per delta (<= cap 3); folded across
         # b=0 + b=1 it holds 4 rows — over the build-time cap
@@ -2450,7 +2423,6 @@ class TestCompactionReappliesFloodCap:
                 frames[name].write.mode("overwrite").parquet(
                     f"{hist}/{name}/b={bid}"
                 )
-            release_registered("containment_index_frames")
         idx_b0 = spark.read.parquet(f"{hist}/index/b=0")
         assert idx_b0.schema["__tok__"].metadata["max_bucket"] == 3
         assert idx_b0.count() == 6  # 2 docs x 3 tokens, nothing capped
@@ -2469,8 +2441,6 @@ class TestCompactionReappliesFloodCap:
         from pd_utils_spark.streaming.stateful import (
             compact_containment_state,
         )
-        from pd_utils_spark.utils import release_registered
-
         hist = str(tmp_path / "hist")
         for bid in (0, 1, 2):
             frame = spark.createDataFrame(
@@ -2481,7 +2451,6 @@ class TestCompactionReappliesFloodCap:
                 frames[name].write.mode("overwrite").parquet(
                     f"{hist}/{name}/b={bid}"
                 )
-            release_registered("containment_index_frames")
         idx_b0 = spark.read.parquet(f"{hist}/index/b=0")
         assert "max_bucket" not in (idx_b0.schema["__tok__"].metadata or {})
         assert compact_containment_state(spark, hist) == 1
@@ -2552,8 +2521,6 @@ class TestRecapValidationAndPolicy:
 
     def _write_minhash_deltas(self, spark, hist, caps):
         from pd_utils_spark.extensions.dedup import minhash_history_frames
-        from pd_utils_spark.utils import release_registered
-
         hot = "the quick brown fox jumps over the lazy dog today"
         for bid, cap in enumerate(caps):
             frame = spark.createDataFrame(
@@ -2567,7 +2534,6 @@ class TestRecapValidationAndPolicy:
                 frames[name].write.mode("overwrite").parquet(
                     f"{hist}/{name}/b={bid}"
                 )
-            release_registered("minhash_history_frames")
 
     def test_zero_cap_raises_everywhere(self, spark, tmp_path):
         from pd_utils_spark.extensions.dedup import _cap_buckets
