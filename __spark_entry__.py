@@ -31,28 +31,34 @@ from pd_utils_spark.extensions import profile as pus_profile
 from pd_utils_spark.extensions import sampling as pus_sample
 from pd_utils_spark.extensions import selection as pus_select
 from pd_utils_spark.extensions import stats as pus_stats
-from pd_utils_spark.utils import materialize, query_scope
+from pd_utils_spark.utils import materialize, query_scope, quote
 
 _ROUND = 6
 
 
+def _events_ts(spark: SparkSession, read: Callable[[], DataFrame]) -> DataFrame:
+    """The events ``ts`` rule, for batch and stream reads alike:
+    ``read()`` reads events.parquet, whose ``ts`` is parquet
+    TIMESTAMP(NANOS). Spark <=4.0 rejects it in the vectorized reader
+    unless the legacy conf reads it as a long (then integer-divide to
+    micros — double division would lose precision on ns epochs >
+    2^53); Spark >=4.1 ignores the legacy conf and reads nanos
+    natively as TIMESTAMP_NTZ (truncated to micros). Handle both so
+    the same entry file runs on either: the data's nanos are
+    micro-aligned, so the two paths produce identical instants
+    (session tz is UTC)."""
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    ev = read()
+    if dict(ev.dtypes)["ts"] == "bigint":
+        return ev.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    return ev.withColumn("ts", F.col("ts").cast("timestamp"))
+
+
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    path = f"{sf_dir}/{name}.parquet"
     if name == "events":
-        # events.ts is parquet TIMESTAMP(NANOS). Spark <=4.0 rejects it
-        # in the vectorized reader unless the legacy conf reads it as a
-        # long (then integer-divide to micros — double division would
-        # lose precision on ns epochs > 2^53); Spark >=4.1 ignores the
-        # legacy conf and reads nanos natively as TIMESTAMP_NTZ
-        # (truncated to micros). Handle both so the same entry file runs
-        # on either: the data's nanos are micro-aligned, so the two
-        # paths produce identical instants (session tz is UTC).
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-        ts_type = dict(ev.dtypes)["ts"]
-        if ts_type == "bigint":
-            return ev.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        return ev.withColumn("ts", F.col("ts").cast("timestamp"))
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+        return _events_ts(spark, lambda: spark.read.parquet(path))
+    df = spark.read.parquet(path)
     if name == "documents":
         # the test-data corpus is ONE parquet row group, so Spark gets a
         # single input split and every CPU-heavy text pipeline (shingles,
@@ -63,37 +69,35 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
+def _stream_t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """A file stream over the one file ``<sf_dir>/<name>.parquet``
+    (the file source wants a directory, so a glob filter picks the
+    file), with the schema of its batch read and the events ``ts``
+    rule; under AvailableNow it is one micro-batch."""
+
+    def read() -> DataFrame:
+        return (
+            spark.readStream.schema(
+                spark.read.parquet(f"{sf_dir}/{name}.parquet").schema
+            )
+            .option("pathGlobFilter", f"{name}.parquet")
+            .parquet(sf_dir)
+        )
+
+    return _events_ts(spark, read) if name == "events" else read()
+
+
 def _round_doubles(df: DataFrame, n: int = _ROUND) -> DataFrame:
-    out = df
-    for name, dtype in df.dtypes:
-        if dtype in ("double", "float"):
-            out = out.withColumn(name, F.round(F.col(name).cast("double"), n))
-    return out
-
-
-def _stream_state_partitions(spark: SparkSession, n: int = 8):
-    """Context manager: run a streaming query with ``n`` shuffle
-    partitions, restoring the session default afterwards. A streaming
-    query pins its state-store instance count to
-    ``spark.sql.shuffle.partitions`` at FIRST start, and every
-    micro-batch then pays per-instance open/commit/snapshot cost —
-    so the right number is sized to stateful-key cardinality and
-    executor count, not to the batch-shuffle default (32 instances on
-    a one-batch local run was measured ~2x slower than 8 with
-    identical results; on a real cluster pick cores-times-executors).
-    """
-    import contextlib
-
-    @contextlib.contextmanager
-    def _cm():
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(n))
-        try:
-            yield
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-
-    return _cm()
+    """Round every double and float column to ``n`` places (as double),
+    in one projection that keeps the column order."""
+    return df.selectExpr(
+        *(
+            f"round(CAST({quote(c)} AS DOUBLE), {n}) AS {quote(c)}"
+            if t in ("double", "float")
+            else quote(c)
+            for c, t in df.dtypes
+        )
+    )
 
 
 def _file_stream(spark: SparkSession, src: str, *frames: DataFrame):
@@ -111,30 +115,58 @@ def _file_stream(spark: SparkSession, src: str, *frames: DataFrame):
     )
 
 
-def _run_stream(spark, prefix, source, start, batches, error, cols):
-    """The one harness of the foreachBatch streaming rows: in a fresh
-    temp dir ``base``, ``source(base)`` builds the streaming
-    DataFrame, ``start(sdf, base)`` starts the operator with its
-    output at ``base/out`` and its state and checkpoint under
-    ``base``, and the run must take exactly ``batches`` data
-    micro-batches — each row's oracle assumes that count, so any
-    other count raises ``AssertionError(error.format(n=<count>))``.
-    Returns the collected ``base/out`` rows projected to ``cols``
-    (the dirs are deleted before return, so rows are collected)."""
+def _sink(sdf: DataFrame, base: str, output_mode: str = "append"):
+    """Start ``sdf`` as an AvailableNow query whose micro-batches land
+    in ``base/out`` (checkpoint ``base/ckpt``) by the memory sink's
+    rule: each batch appends, except in complete mode, where it
+    replaces the output."""
+    from pd_utils_spark.streaming.stateful import _start
+
+    mode = "overwrite" if output_mode == "complete" else "append"
+    return _start(
+        sdf,
+        lambda batch, _: batch.write.mode(mode).parquet(f"{base}/out"),
+        f"{base}/ckpt",
+        True,
+        output_mode=output_mode,
+    )
+
+
+def _run_stream(spark, name, source, start, batches) -> DataFrame:
+    """The one harness of the streaming rows: in a fresh temp dir
+    ``base``, ``source(base)`` builds the streaming DataFrame and
+    ``start(sdf, base)`` starts the query with its output at
+    ``base/out`` and its state and checkpoint under ``base``. The
+    query runs with 8 shuffle partitions, which a streaming query
+    takes as its state-store instance count at first start (every
+    micro-batch pays per-instance open/commit/snapshot cost; 32 on a
+    one-batch local run was measured ~2x slower than 8 with identical
+    results; on a real cluster size it to the stateful keys and
+    cores). The run must take exactly ``batches`` data micro-batches —
+    each row's oracle assumes that count — or it raises
+    ``AssertionError``. Returns ``base/out`` read back and pinned
+    (stable, eager) before ``base`` is deleted."""
     import shutil
     import tempfile
 
-    base = tempfile.mkdtemp(prefix=prefix)
+    base = tempfile.mkdtemp(prefix=f"pus_{name}_")
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         sdf = source(base)
-        with _stream_state_partitions(spark):
-            q = start(sdf, base)
-            q.awaitTermination()
-            n = sum(1 for p in q.recentProgress if p["numInputRows"] > 0)
-            if n != batches:
-                raise AssertionError(error.format(n=n))
-        return spark.read.parquet(f"{base}/out").select(*cols).collect()
+        spark.conf.set("spark.sql.shuffle.partitions", "8")
+        q = start(sdf, base)
+        q.awaitTermination()
+        n = sum(1 for p in q.recentProgress if p["numInputRows"] > 0)
+        if n != batches:
+            raise AssertionError(
+                f"{name} assumes {batches} data micro-batch(es); "
+                f"the stream ran {n}"
+            )
+        return materialize(
+            spark.read.parquet(f"{base}/out"), stable=True, eager=True
+        )
     finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
         shutil.rmtree(base, ignore_errors=True)
 
 
@@ -1952,128 +1984,98 @@ def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_streaming_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gap-based sessionization driven through the STRUCTURED
-    STREAMING engine end-to-end: the events parquet is consumed via
-    readStream, labeled by streaming_sessionize (applyInPandasWithState
-    — per-user (last_ts, session) state in the state store), landed in
-    a memory sink with Trigger.AvailableNow, then rolled to the same
+    STREAMING engine end-to-end: the events parquet is consumed as a
+    file stream, labeled by streaming_sessionize
+    (applyInPandasWithState — per-user (last_ts, session) state in the
+    state store) with Trigger.AvailableNow into the harness's parquet
+    output (read back once the stream ends), then rolled to the same
     per-session stats as the batch ``sessionize`` query and
     hash-matched against the SAME DuckDB oracle. The fixture is one
-    parquet file, so the run is one micro-batch; multi-batch
+    parquet file, so the run is one micro-batch (asserted); multi-batch
     equivalence (state carried across batches, TTL eviction) is
     property-locked in tests/test_streaming.py."""
     from pd_utils_spark.streaming.stateful import streaming_sessionize
 
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    # FileStreamSource wants a directory; glob-filter down to the one
-    # events file inside the sf dir
-    sdf = (
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-        .select("user_id", "ts", "event_id")
+    labeled = _run_stream(
+        spark,
+        "streaming_sessionize",
+        lambda base: streaming_sessionize(
+            _stream_t(spark, sf_dir, "events").select("user_id", "ts", "event_id"),
+            "user_id",
+            "ts",
+            gap_seconds=1800,
+            tiebreak="event_id",
+        ),
+        _sink,
+        1,
     )
-    labeled = streaming_sessionize(
-        sdf, "user_id", "ts", gap_seconds=1800, tiebreak="event_id"
-    )
-    name = "streaming_sessionize_sink"
-    with _stream_state_partitions(spark):
-        q = (
-            labeled.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     eus = F.unix_micros(F.col("ts"))
-    return (
-        spark.table(name)
-        .groupBy("user_id", "session_index")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.min("ts").alias("session_start"),
-            F.max("ts").alias("session_end"),
-            ((F.max(eus) - F.min(eus)) / F.lit(1_000_000.0)).alias(
-                "duration_seconds"
-            ),
-        )
+    return labeled.groupBy("user_id", "session_index").agg(
+        F.count("*").alias("n_events"),
+        F.min("ts").alias("session_start"),
+        F.max("ts").alias("session_end"),
+        ((F.max(eus) - F.min(eus)) / F.lit(1_000_000.0)).alias(
+            "duration_seconds"
+        ),
     )
 
 
 def q_streaming_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming exact dedup driven through the engine end-to-end:
-    the documents parquet is consumed via readStream, duplicates (by
+    the documents parquet is consumed as a file stream, duplicates (by
     normalized-content md5) are dropped across micro-batches with
     Spark's keyed dedup state (streaming/stateful.py
-    streaming_exact_dedup), landed in a memory sink with
-    Trigger.AvailableNow. The result is projected to the SURVIVING
+    streaming_exact_dedup), and the survivors are appended with
+    Trigger.AvailableNow to the harness's parquet output (one
+    micro-batch, asserted). The result is projected to the SURVIVING
     CONTENT FINGERPRINTS — the survivor's row identity depends on
     arrival order inside a micro-batch, but the fingerprint set is
     deterministic and equals DuckDB's DISTINCT over the same md5."""
     from pd_utils_spark.extensions.dedup import _norm
     from pd_utils_spark.streaming.stateful import streaming_exact_dedup
 
-    raw_schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-    sdf = (
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
+    deduped = _run_stream(
+        spark,
+        "streaming_exact_dedup",
+        lambda base: streaming_exact_dedup(
+            _stream_t(spark, sf_dir, "documents"), textcol="text"
+        ),
+        _sink,
+        1,
     )
-    deduped = streaming_exact_dedup(sdf, textcol="text")
-    name = "streaming_exact_dedup_sink"
-    with _stream_state_partitions(spark):
-        q = (
-            deduped.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return (
-        spark.table(name)
-        .select(F.md5(_norm(F.col("text")).cast("string")).alias("fp"))
-        .distinct()
-    )
+    return deduped.select(
+        F.md5(_norm(F.col("text")).cast("string")).alias("fp")
+    ).distinct()
 
 
 def q_streaming_near_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming NEAR-duplicate dedup driven through the engine
     end-to-end (streaming/stateful.py streaming_band_dedup): the
-    documents parquet is consumed via readStream, each row gets its
+    documents parquet is consumed as a file stream, each row gets its
     one-band MinHash LSH key as a pure column expression (3 hashes
     over 3-shingles — batch band 0 bit-for-bit), and band-key
     duplicates are dropped across micro-batches with keyed dedup
-    state; memory sink, Trigger.AvailableNow. Survivor row identity
-    depends on intra-batch arrival order, but the surviving band-KEY
-    set is deterministic (keep-one-per-key => the distinct-key set),
-    which is what the oracle replays relationally."""
+    state; survivors are appended with Trigger.AvailableNow to the
+    harness's parquet output (one micro-batch, asserted). Survivor
+    row identity depends on intra-batch arrival order, but the
+    surviving band-KEY set is deterministic (keep-one-per-key => the
+    distinct-key set), which is what the oracle replays
+    relationally."""
     from pd_utils_spark.extensions.dedup import minhash_band_key
     from pd_utils_spark.streaming.stateful import streaming_band_dedup
 
-    raw_schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-    sdf = (
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
+    deduped = _run_stream(
+        spark,
+        "streaming_near_dedup",
+        lambda base: streaming_band_dedup(
+            _stream_t(spark, sf_dir, "documents"), textcol="text"
+        ),
+        _sink,
+        1,
     )
-    deduped = streaming_band_dedup(sdf, textcol="text")
-    name = "streaming_near_dedup_sink"
-    with _stream_state_partitions(spark):
-        q = (
-            deduped.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return (
-        spark.table(name)
-        .select(minhash_band_key(F.col("text"), 3, 3).alias("band_key"))
-        .distinct()
-    )
+    return deduped.select(
+        minhash_band_key(F.col("text"), 3, 3).alias("band_key")
+    ).distinct()
 
 
 def q_candidate_recall_multiband(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2274,16 +2276,16 @@ def q_streaming_bloom_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     accumulated Bloom filter (ONE row of m_bits/64 longs — history
     state that never grows), survivors append and their fingerprints
     fold into the filter. With AvailableNow over one parquet file
-    there is exactly ONE batch (asserted below, same pin as the
-    multiband row), so the result is the deterministic within-batch
+    there is exactly ONE batch (the harness asserts the count, as
+    for the multiband row), so the result is the deterministic within-batch
     path — the oracle replays plain exact_dedup; cross-batch
     semantics (member drops + ~fpp false drops) are pinned by
     pytest."""
     from pd_utils_spark.streaming.stateful import streaming_bloom_dedup
 
-    rows = _run_stream(
+    out = _run_stream(
         spark,
-        "pus_bloomdedup_",
+        "streaming_bloom_dedup",
         # documents has no exact text dups; stream the copies corpus
         # (one coalesced file -> one AvailableNow batch) so the row
         # actually drops half its input
@@ -2300,11 +2302,8 @@ def q_streaming_bloom_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             available_now=True,
         ),
         1,
-        "streaming_bloom_dedup oracle assumes ONE micro-batch; the "
-        "stream ran {n}",
-        ["doc_id"],
     )
-    return spark.createDataFrame(rows, "doc_id bigint")
+    return out.select("doc_id")
 
 
 def q_streaming_multiband_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2324,18 +2323,15 @@ def q_streaming_multiband_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     matches the stream only because AvailableNow over one parquet
     file yields exactly one micro-batch (cross-batch survivors are
     first-claim-wins — see the operator's batch-boundary caveat); the
-    assertion below pins that assumption so a future source change
+    harness's batch-count assertion pins that assumption so a future source change
     (multi-file dir, maxFilesPerTrigger) fails loudly instead of
     flaking."""
     from pd_utils_spark.streaming.stateful import streaming_greedy_band_dedup
 
-    raw_schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-    rows = _run_stream(
+    out = _run_stream(
         spark,
-        "pus_mbdedup_",
-        lambda base: spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir),
+        "streaming_multiband_dedup",
+        lambda base: _stream_t(spark, sf_dir, "documents"),
         lambda sdf, base: streaming_greedy_band_dedup(
             sdf,
             output_dir=f"{base}/out",
@@ -2347,59 +2343,41 @@ def q_streaming_multiband_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             available_now=True,
         ),
         1,
-        "streaming_multiband_dedup oracle assumes ONE micro-batch; the "
-        "stream ran {n} data batches — the single-batch global greedy "
-        "oracle no longer matches the cross-batch first-claim-wins rule "
-        "(see operator docstring)",
-        ["doc_id"],
     )
-    return spark.createDataFrame(rows, "doc_id bigint")
+    return out.select("doc_id")
 
 
 def q_streaming_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-static enrichment (streaming/windows.py
     stream_static_enrich) driven through the streaming engine
-    end-to-end: the events parquet is consumed via readStream,
+    end-to-end: the events parquet is consumed as a file stream,
     broadcast-joined per micro-batch against a STATIC user-segment
     dimension (stateless — no watermark, no join state), then
     aggregated per (segment, day) with a tumbling window in complete
-    mode. Oracle = the identical batch aggregation in DuckDB."""
+    mode; each complete-mode emission replaces the harness's parquet
+    output (one micro-batch, asserted). Oracle = the identical batch
+    aggregation in DuckDB."""
     from pd_utils_spark.streaming.windows import stream_static_enrich
 
-    ev_batch = _t(spark, sf_dir, "events")
     dim = (
-        ev_batch.select("user_id").distinct()
+        _t(spark, sf_dir, "events").select("user_id").distinct()
         .withColumn("segment", (F.col("user_id") % 5).cast("int"))
     )
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    sdf = (
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
-    ts_type = dict(sdf.dtypes)["ts"]
-    if ts_type == "bigint":
-        sdf = sdf.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    else:
-        sdf = sdf.withColumn("ts", F.col("ts").cast("timestamp"))
-    enriched = stream_static_enrich(sdf, dim, "user_id")
-    agg = enriched.groupBy(
-        "segment", F.window("ts", "1 day").alias("w")
-    ).agg(
-        F.count(F.lit(1)).alias("n"),
-        F.round(F.sum("value"), 2).alias("total_value"),
-    )
-    name = "streaming_enrich_sink"
-    with _stream_state_partitions(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
+    agg = _run_stream(
+        spark,
+        "streaming_enrich",
+        lambda base: stream_static_enrich(
+            _stream_t(spark, sf_dir, "events"), dim, "user_id"
         )
-        q.awaitTermination()
-    return spark.table(name).select(
+        .groupBy("segment", F.window("ts", "1 day").alias("w"))
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.round(F.sum("value"), 2).alias("total_value"),
+        ),
+        lambda sdf, base: _sink(sdf, base, "complete"),
+        1,
+    )
+    return agg.select(
         "segment",
         F.dayofmonth(F.col("w.start")).alias("day"),
         "n",
@@ -2409,55 +2387,31 @@ def q_streaming_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Watermarked STREAM-STREAM interval join driven through the
-    streaming engine end-to-end: the events parquet is consumed twice
-    via readStream (view stream + click stream), every click within
+    streaming engine end-to-end: the events parquet is consumed as a
+    file stream split into a view and a click side, every click within
     [view_ts, view_ts + 1 hour] of a same-user view is matched by
     stream_interval_join (both-side watermarks + two-sided bound =
-    evictable join state), landed in a memory sink with
-    Trigger.AvailableNow, and the (user_id, view_id, click_id) pairs
-    hash-match a plain DuckDB interval join. The fixture is one file
-    (one micro-batch); cross-batch state/watermark semantics are
-    locked in tests/test_streaming.py."""
+    evictable join state) and appended with Trigger.AvailableNow to
+    the harness's parquet output, and the (user_id, view_id, click_id)
+    pairs hash-match a plain DuckDB interval join. The fixture is one
+    file (one micro-batch, asserted); cross-batch state/watermark
+    semantics are locked in tests/test_streaming.py."""
     from pd_utils_spark.streaming.windows import stream_interval_join
 
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-
-    def _stream():
-        return (
-            spark.readStream.schema(raw_schema)
-            .option("pathGlobFilter", "events.parquet")
-            .parquet(sf_dir)
-            .withColumn("ts", F.col("ts").cast("timestamp"))
+    def source(base):
+        ev = _stream_t(spark, sf_dir, "events")
+        views = ev.filter(F.col("event_type") == "view").select(
+            "user_id", "ts", F.col("event_id").alias("view_id")
+        )
+        clicks = ev.filter(F.col("event_type") == "click").select(
+            "user_id", F.col("ts").alias("ts_r"), F.col("event_id").alias("click_id")
+        )
+        return stream_interval_join(
+            views, clicks, "user_id", "ts", "ts_r", "0 seconds", "1 hour"
         )
 
-    views = (
-        _stream()
-        .filter(F.col("event_type") == "view")
-        .select("user_id", "ts", F.col("event_id").alias("view_id"))
-    )
-    clicks = (
-        _stream()
-        .filter(F.col("event_type") == "click")
-        .select(
-            "user_id",
-            F.col("ts").alias("ts_r"),
-            F.col("event_id").alias("click_id"),
-        )
-    )
-    joined = stream_interval_join(
-        views, clicks, "user_id", "ts", "ts_r", "0 seconds", "1 hour"
-    )
-    name = "streaming_interval_join_sink"
-    with _stream_state_partitions(spark):
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name).select("user_id", "view_id", "click_id")
+    joined = _run_stream(spark, "streaming_interval_join", source, _sink, 1)
+    return joined.select("user_id", "view_id", "click_id")
 
 
 def q_streaming_running_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2468,29 +2422,23 @@ def q_streaming_running_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the events parquet, latest emitted row per key == the
     batch per-user aggregate. Complements streaming_sessionize: that
     one checks custom ROW-LABELING state, this one checks custom
-    AGGREGATING state."""
+    AGGREGATING state. Each update-mode emission is appended to the
+    harness's parquet output (one micro-batch, asserted)."""
     from pyspark.sql import Window
 
     from pd_utils_spark.streaming.stateful import stateful_running_agg
 
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    sdf = (
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-        .select("user_id", "value")
+    agg = _run_stream(
+        spark,
+        "streaming_running_agg",
+        lambda base: stateful_running_agg(
+            _stream_t(spark, sf_dir, "events").select("user_id", "value"),
+            "user_id",
+            "value",
+        ),
+        lambda sdf, base: _sink(sdf, base, "update"),
+        1,
     )
-    agg = stateful_running_agg(sdf, "user_id", "value")
-    name = "streaming_running_agg_sink"
-    with _stream_state_partitions(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     # latest emitted row per key (running_count is monotone per key,
     # so max-count row == final state even across multiple batches)
     # event values are 2-decimal, so round(sum, 2) reconstructs the
@@ -2501,8 +2449,7 @@ def q_streaming_running_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (power-of-2 counts x 2-decimal values) and flip per engine.
     w = Window.partitionBy("user_id").orderBy(F.desc("running_count"))
     return (
-        spark.table(name)
-        .withColumn("__rk__", F.row_number().over(w))
+        agg.withColumn("__rk__", F.row_number().over(w))
         .filter(F.col("__rk__") == 1)
         .select(
             "user_id",
@@ -6923,7 +6870,7 @@ def q_streaming_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine end-to-end (streaming/stateful.py streaming_distinct_hll):
     the events table is split into TWO parquet files and consumed as
     TWO micro-batches (maxFilesPerTrigger=1 + AvailableNow, asserted
-    below), so the cross-batch HLL union genuinely executes — batch
+    by the harness), so the cross-batch HLL union genuinely executes — batch
     2's repeated users must not re-count. State is one sketch row per
     event_type forever. At this table's cardinality (150 users/type
     at sf0.01) the sketch is in coupon mode and EXACT, so the oracle
@@ -6935,9 +6882,9 @@ def q_streaming_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pd_utils_spark.streaming.stateful import streaming_distinct_hll
 
     ev = _t(spark, sf_dir, "events").select("event_id", "event_type", "user_id")
-    rows = _run_stream(
+    out = _run_stream(
         spark,
-        "pus_hllstream_",
+        "streaming_hll_distinct",
         # two appends -> two files -> two AvailableNow micro-batches
         lambda base: _file_stream(spark, f"{base}/src", *_event_halves(ev)),
         lambda sdf, base: streaming_distinct_hll(
@@ -6951,13 +6898,8 @@ def q_streaming_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
             available_now=True,
         ),
         2,
-        "streaming_hll_distinct expects TWO micro-batches (cross-batch "
-        "union exercised); the stream ran {n}",
-        ["event_type", "distinct_estimate", "as_of_batch"],
     )
-    return spark.createDataFrame(
-        rows, "event_type string, distinct_estimate bigint, as_of_batch bigint"
-    )
+    return out.select("event_type", "distinct_estimate", "as_of_batch")
 
 
 def q_streaming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6978,9 +6920,9 @@ def q_streaming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events").select(
         "event_id", "event_type", (F.col("user_id") % 16).alias("item")
     )
-    rows = _run_stream(
+    out = _run_stream(
         spark,
-        "pus_topkstream_",
+        "streaming_topk",
         lambda base: _file_stream(spark, f"{base}/src", *_event_halves(ev)),
         lambda sdf, base: streaming_topk(
             sdf,
@@ -6994,17 +6936,12 @@ def q_streaming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             available_now=True,
         ),
         2,
-        "streaming_topk expects TWO micro-batches (cross-batch combine "
-        "exercised); ran {n}",
-        [
-            "event_type",
-            F.col("item").cast("bigint").alias("item"),
-            F.col("count").cast("bigint").alias("n"),
-            "as_of_batch",
-        ],
     )
-    return spark.createDataFrame(
-        rows, "event_type string, item bigint, n bigint, as_of_batch bigint"
+    return out.select(
+        "event_type",
+        F.col("item").cast("bigint").alias("item"),
+        F.col("count").cast("bigint").alias("n"),
+        "as_of_batch",
     )
 
 
@@ -7025,9 +6962,9 @@ def q_streaming_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pd_utils_spark.streaming.stateful import streaming_sample_quantiles
 
     ev = _t(spark, sf_dir, "events").select("event_id", "event_type", "value")
-    rows = _run_stream(
+    out = _run_stream(
         spark,
-        "pus_qstream_",
+        "streaming_quantiles",
         lambda base: _file_stream(spark, f"{base}/src", *_event_halves(ev)),
         lambda sdf, base: streaming_sample_quantiles(
             sdf,
@@ -7042,14 +6979,9 @@ def q_streaming_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
             available_now=True,
         ),
         2,
-        "streaming_quantiles expects TWO micro-batches (cross-batch merge "
-        "exercised); ran {n}",
-        ["event_type", "q25", "q50", "q75", "n_sampled", "as_of_batch"],
     )
-    return spark.createDataFrame(
-        rows,
-        "event_type string, q25 double, q50 double, q75 double, "
-        "n_sampled bigint, as_of_batch bigint",
+    return out.select(
+        "event_type", "q25", "q50", "q75", "n_sampled", "as_of_batch"
     )
 
 
@@ -7083,9 +7015,9 @@ def q_streaming_containment_dedup(
             F.col("text"), F.lit(" zq1 zq2 zq3 zq4 zq5 zq6 zq7")
         ).alias("text"),
     )
-    rows = _run_stream(
+    out = _run_stream(
         spark,
-        "pus_cstream_",
+        "streaming_containment_dedup",
         lambda base: _file_stream(
             spark, f"{base}/src", d, trunc.unionByName(salted)
         ),
@@ -7099,11 +7031,8 @@ def q_streaming_containment_dedup(
             available_now=True,
         ),
         2,
-        "streaming_containment_dedup expects TWO ordered micro-batches; "
-        "ran {n}",
-        ["doc_id"],
     )
-    return spark.createDataFrame(rows, "doc_id bigint")
+    return out.select("doc_id")
 
 
 def q_streaming_minhash_dedup(
@@ -7133,9 +7062,9 @@ def q_streaming_minhash_dedup(
         (F.col("doc_id") + 200000).alias("doc_id"),
         F.regexp_replace(F.col("text"), r"(\S+)", r"$1zz").alias("text"),
     )
-    rows = _run_stream(
+    out = _run_stream(
         spark,
-        "pus_mstream_",
+        "streaming_minhash_dedup",
         lambda base: _file_stream(
             spark, f"{base}/src", d, near.unionByName(novel)
         ),
@@ -7151,11 +7080,8 @@ def q_streaming_minhash_dedup(
             available_now=True,
         ),
         2,
-        "streaming_minhash_dedup expects TWO ordered micro-batches; "
-        "ran {n}",
-        ["doc_id"],
     )
-    return spark.createDataFrame(rows, "doc_id bigint")
+    return out.select("doc_id")
 
 
 def q_streaming_weighted_sample(
@@ -7181,9 +7107,9 @@ def q_streaming_weighted_sample(
         "value",
         ((F.col("user_id") % 5) + 1.0).alias("weight"),
     )
-    rows = _run_stream(
+    out = _run_stream(
         spark,
-        "pus_wstream_",
+        "streaming_weighted_sample",
         lambda base: _file_stream(spark, f"{base}/src", *_event_halves(ev)),
         lambda sdf, base: streaming_weighted_sample(
             sdf,
@@ -7198,15 +7124,8 @@ def q_streaming_weighted_sample(
             available_now=True,
         ),
         2,
-        "streaming_weighted_sample expects TWO micro-batches (cross-batch "
-        "merge exercised); ran {n}",
-        ["event_type", "n_sampled", "sum_sampled", "as_of_batch"],
     )
-    return spark.createDataFrame(
-        rows,
-        "event_type string, n_sampled bigint, sum_sampled double, "
-        "as_of_batch bigint",
-    )
+    return out.select("event_type", "n_sampled", "sum_sampled", "as_of_batch")
 
 
 def q_bpe_learn(spark: SparkSession, sf_dir: str) -> DataFrame:

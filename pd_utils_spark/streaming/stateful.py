@@ -148,21 +148,30 @@ def _delete_quietly(spark, state_dir: str, names: list[str]) -> None:
             pass
 
 
-def _start(sdf: DataFrame, process, checkpoint_dir: str, available_now: bool):
+def _start(
+    sdf: DataFrame,
+    process,
+    checkpoint_dir: str,
+    available_now: bool,
+    output_mode: str = "append",
+):
     """Start ``process`` as the ``foreachBatch`` sink of ``sdf``, each
     micro-batch in its own :func:`~pd_utils_spark.utils.query_scope`
     (per-batch pins never accumulate across a long-running stream, and
     never release a caller's frames); ``available_now=True`` drains
     everything currently available and terminates
-    (Trigger.AvailableNow — the batch-backfill mode). Returns the
-    started ``StreamingQuery``."""
+    (Trigger.AvailableNow — the batch-backfill mode). ``output_mode``
+    is the query's output mode (``"append"``, ``"update"`` or
+    ``"complete"``). Returns the started ``StreamingQuery``."""
 
     def scoped(batch_df: DataFrame, batch_id: int) -> None:
         with query_scope():
             process(batch_df, batch_id)
 
-    writer = sdf.writeStream.foreachBatch(scoped).option(
-        "checkpointLocation", checkpoint_dir
+    writer = (
+        sdf.writeStream.foreachBatch(scoped)
+        .outputMode(output_mode)
+        .option("checkpointLocation", checkpoint_dir)
     )
     if available_now:
         writer = writer.trigger(availableNow=True)
