@@ -31,7 +31,7 @@ from pd_utils_spark.extensions import profile as pus_profile
 from pd_utils_spark.extensions import sampling as pus_sample
 from pd_utils_spark.extensions import selection as pus_select
 from pd_utils_spark.extensions import stats as pus_stats
-from pd_utils_spark.utils import materialize, query_scope, quote
+from pd_utils_spark.utils import materialize, query_scope, quote, spread
 
 _ROUND = 6
 
@@ -59,14 +59,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name == "events":
         return _events_ts(spark, lambda: spark.read.parquet(path))
     df = spark.read.parquet(path)
-    if name == "documents":
-        # the test-data corpus is ONE parquet row group, so Spark gets a
-        # single input split and every CPU-heavy text pipeline (shingles,
-        # minhash, n-grams) runs on one core. A real corpus arrives in
-        # thousands of splits; fan the rows out so local throughput
-        # reflects the per-core work, not an artifact of the fixture file.
-        df = df.repartition(spark.sparkContext.defaultParallelism)
-    return df
+    return spread(df) if name == "documents" else df
 
 
 def _stream_t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -1519,17 +1512,7 @@ def q_ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     64-dim vector (16x compression); the fit is a deterministic
     hash-ordered sample, so the counts are reproducible across
     partitionings."""
-    emb = _t(spark, sf_dir, "embeddings")
-    # spread before the normalize map (r12, guide §2.5 "input skew"):
-    # the embeddings parquet is ONE file -> one partition, so the
-    # whole normalize/encode/ADC pipeline otherwise maps on one core
-    # (profiled: a 3.3 s single-task encode stage). Every consumer is
-    # partitioning-independent — pq_fit samples by a hash ORDER,
-    # cosine/ADC scores are per-row expressions, and the oracle pins
-    # the hit counts literally.
-    nrm = emb.repartition(
-        spark.sparkContext.defaultParallelism
-    ).select(
+    nrm = spread(_t(spark, sf_dir, "embeddings")).select(
         "vec_id",
         F.transform(
             "embedding", lambda x: x / pus_sim.norm(F.col("embedding"))
@@ -6208,12 +6191,7 @@ def _entity_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.concat_ws(" ", t[1], t[0], t[2]))
         .alias("name"),
     )
-    # same rationale as _t()'s documents fan-out: the distinct-name
-    # aggregate collapses to 1-2 AQE-coalesced partitions (~80 KB),
-    # which then serializes the downstream normalize-regex + explode
-    # of every linkage consumer onto 1-2 cores (profiled 2.5 s/side in
-    # fuzzy_best_join). Spread the corpus so per-core work reflects the
-    # operators, not the fixture's tiny byte size.
+    # not spread(): behind this AQE-coalesced aggregate .rdd runs stages
     return clean.unionByName(variant).repartition(
         spark.sparkContext.defaultParallelism
     )
@@ -6693,10 +6671,7 @@ def q_kmv_containment_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pd_utils_spark.extensions import sketches as pus_sk
     from pd_utils_spark.extensions.dedup import shingle_sets
 
-    # repartition before the shingle expression: the documents parquet
-    # is one file, and sf0.1's long texts make a serial shingle pass
-    # the bottleneck (measured 10.7 s single-task vs ~1 s spread)
-    u = _docs_boundary(spark, sf_dir).repartition(64)
+    u = _docs_boundary(spark, sf_dir)
     # ONE persisted shingle frame feeds sketches AND the exact side —
     # and the per-doc sketch is bottomk_array, the MAP-ONLY form (a
     # doc's set lives in one row; the exploded groupBy build was

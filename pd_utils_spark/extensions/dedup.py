@@ -828,8 +828,9 @@ def _cap_buckets(
 ) -> DataFrame:
     """Drop rows in (key_cols) buckets larger than ``max_bucket`` —
     the flood guard shared by the whole LSH family. Emits an
-    ``observe`` metric (``<metric>_dropped_rows``) so callers can read
-    how many rows the cap removed from the last action's
+    ``observe`` metric named ``<metric>_<n>`` (``n`` counts the calls
+    in this process) with one field, ``dropped_rows``, so callers can
+    read how many rows the cap removed from the last action's
     ``QueryExecutionListener`` / ``Observation`` stream at zero extra
     compute cost (no separate count job).
 

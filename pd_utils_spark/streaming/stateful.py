@@ -28,76 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from pd_utils_spark.utils import materialize, query_scope, to_list
-
-
-#: Per-task input-byte grain for spreading an under-partitioned
-#: micro-batch (r12). The gates' batch-side work is CPU-heavy text
-#: shingling measured at ~4 µs per input byte single-core (an 8.7 s
-#: single-task stage over a ~2 MB batch, profiled at sf0.1), so the
-#: grain sits far below the scan-split default (128 MB): 64 KiB of
-#: batch input per task ≈ 1 s of shingle work — big enough that
-#: per-task scheduling overhead stays negligible, small enough that a
-#: single-file micro-batch fans out. The driver's r11 scaling run
-#: showed the same batches ~2x FASTER at 8-way than at the blanket
-#: 32-way spread, which this grain reproduces (~600 KB batch -> ~10
-#: tasks).
-_SPREAD_TARGET_BYTES = 64 * 1024
-
-
-def _spread_batch(batch_df: DataFrame) -> DataFrame:
-    """Fan an under-partitioned micro-batch across the executor cores
-    before CPU-heavy gate work (r11, guide §2.5 "input skew"): a file-
-    source micro-batch arrives with one partition per file split, so a
-    single-file trigger under ``maxPartitionBytes`` runs the whole
-    shingle/minhash/explode pipeline of the batch on ONE core —
-    profiled at sf0.1 as three concurrent 14 s single-task stages
-    inside the containment gate.
-
-    The spread is SIZE-AWARE (r12 — the r11 form repartitioned every
-    under-partitioned batch straight to ``defaultParallelism``, and the
-    driver's bench showed both big gates anti-scaling with cores: a
-    KB-scale batch paid a 32-way exchange plus 32-task stages per
-    downstream stage, pure scheduling latency). The target partition
-    count is ``ceil(estimated input bytes / _SPREAD_TARGET_BYTES)``
-    capped at ``defaultParallelism`` — proportional to the work, per
-    guide §2.5 "spread proportional to input, not blindly to core
-    count". The estimate comes from the optimized logical plan's
-    stats (file sizes for a file-source micro-batch — no job, no
-    collect). When the
-    estimate is unavailable or absurd (relations without stats default
-    to Long.MaxValue) the cap keeps the old conservative behavior.
-    At scale this stays a structural no-op: batches bigger than
-    ``_SPREAD_TARGET_BYTES x defaultParallelism`` already arrive in
-    many splits and hit the ``n >= want`` early exit. Round-robin
-    repartition is retry-safe (Spark sorts before round-robin by
-    default) and every gate result is partitioning-independent by
-    construction."""
-    import math
-
-    sc = batch_df.sparkSession.sparkContext
-    try:
-        n = batch_df.rdd.getNumPartitions()
-    except Exception:  # pragma: no cover — defensive; keep the batch
-        return batch_df
-    p = sc.defaultParallelism
-    if n >= p:
-        return batch_df
-    try:
-        est = int(
-            str(
-                batch_df._jdf.queryExecution()
-                .optimizedPlan()
-                .stats()
-                .sizeInBytes()
-            )
-        )
-        want = min(p, max(1, math.ceil(est / _SPREAD_TARGET_BYTES)))
-    except Exception:  # pragma: no cover — stats unavailable: be
-        want = p  # conservative (the r11 behavior)
-    if n < want:
-        return batch_df.repartition(want)
-    return batch_df
+from pd_utils_spark.utils import materialize, query_scope, spread, to_list
 
 
 def _hadoop_fs(spark, path: str):
@@ -578,10 +509,7 @@ def streaming_greedy_band_dedup(
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        # see _spread_batch — a one-file micro-batch otherwise runs the
-        # per-doc shingle+minhash map on ONE core; keys are per-row
-        # deterministic, so the survivor set is unchanged
-        batch_df = _spread_batch(batch_df)
+        batch_df = spread(batch_df)
         work = attach_minhash_band_keys(
             batch_df, textcol, k, rows_per_band, bands, out="__bks__"
         )
@@ -803,7 +731,7 @@ def streaming_containment_dedup(
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         state = _containment_state(batch_df.sparkSession, history_dir)
-        batch_df = _spread_batch(batch_df)
+        batch_df = spread(batch_df)
         # ONE shingle pass per micro-batch (r12, guide §1.2): the
         # within-batch dedup exposes its persisted (__id__,
         # __tok__) frame, and both the history probe and the
@@ -925,13 +853,10 @@ def streaming_sample_quantiles(
 
     byvars_l = to_list(byvars)
     q_names = [f"q{int(round(q * 100))}" for q in qs]
-    # single-file micro-batches otherwise hash/struct every batch row
-    # on ONE core (see _spread_batch; result is partitioning-
-    # independent — deterministic sort-truncate)
     return _fold_stream(
         sdf, sample_dir, checkpoint_dir, available_now,
         sketch=lambda b, _: sample_sketch_by(
-            _spread_batch(b), byvars_l, col, id_cols=id_cols, k=k, out="sk"
+            spread(b), byvars_l, col, id_cols=id_cols, k=k, out="sk"
         ),
         merge=lambda old, new: bottomk_rollup(
             old.unionByName(new), byvars_l, "sk", k=k
@@ -1041,12 +966,10 @@ def streaming_weighted_sample(
     )
 
     byvars_l = to_list(byvars)
-    # see _spread_batch — same single-file micro-batch rationale as
-    # streaming_sample_quantiles; A-ES keys are row-deterministic
     return _fold_stream(
         sdf, sample_dir, checkpoint_dir, available_now,
         sketch=lambda b, _: weighted_sample_sketch_by(
-            _spread_batch(b), byvars_l, col, weight_col, id_cols=id_cols,
+            spread(b), byvars_l, col, weight_col, id_cols=id_cols,
             k=k, out="sk",
         ),
         merge=lambda old, new: bottomk_rollup(
@@ -1237,7 +1160,7 @@ def streaming_minhash_dedup(
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         state = _minhash_state(batch_df.sparkSession, history_dir)
-        batch_df = _spread_batch(batch_df)
+        batch_df = spread(batch_df)
         # ONE tokenize pass and ONE signature aggregation per
         # micro-batch: the within-batch dedup exposes
         # its persisted shingle frame and its uncapped band-key

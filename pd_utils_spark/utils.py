@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import math
 import threading
 from collections.abc import Iterator
 from contextlib import contextmanager
@@ -150,6 +151,62 @@ def reliable_checkpoints(spark, checkpoint_dir: str | None) -> Iterator[None]:
             getattr(sc._jsc.sc(), "checkpointDir_$eq")(old)
         except Exception:
             pass
+
+
+#: Per-task input-byte grain of :func:`spread`. The CPU-heavy text
+#: work behind a spread (shingling, minhash) was measured at ~4 µs
+#: per input byte on one core (an 8.7 s single-task stage over a
+#: ~2 MB sf0.1 micro-batch), so 64 KiB of input is about 1 s of work
+#: per task: large enough that task scheduling stays negligible,
+#: small enough that a one-file input fans out. The scan-split
+#: default (128 MB) is far too coarse for that work.
+_SPREAD_TARGET_BYTES = 64 * 1024
+
+
+def spread(df: DataFrame) -> DataFrame:
+    """The one way the library and the entry module fan out an
+    under-partitioned input before CPU-heavy per-row work. A one-file
+    input below ``maxPartitionBytes`` (a test table, a file-stream
+    micro-batch) arrives as one scan split, so the whole downstream
+    map (shingles, minhash, vector normalize) would run on one core;
+    profiled at sf0.1 as 14 s single-task stages in the containment
+    gate.
+
+    The spread is proportional to the input, not to the core count:
+    ``ceil(estimated bytes / _SPREAD_TARGET_BYTES)`` round-robin
+    partitions, capped at ``defaultParallelism``. A blanket fan to
+    ``defaultParallelism`` made KB-scale inputs pay a full-width
+    exchange plus full-width stages for every downstream stage, and
+    the gates ran slower on 32 cores than on 8. The estimate is the
+    optimized plan's ``sizeInBytes`` (file sizes for a scan); when it
+    is unavailable or unbounded (a relation without stats reports
+    Long.MaxValue), the cap applies. An input that already has
+    ``defaultParallelism`` or more partitions, or at least the wanted
+    count, is returned as is, so at scale this is a no-op. Round-robin
+    repartition is retry-safe (Spark sorts before it by default);
+    callers must not depend on partitioning.
+
+    Precondition: ``df`` is a scan, or maps and filters over one.
+    Reading its partition count then starts no Spark job. Behind a
+    shuffle under AQE, ``.rdd`` runs the upstream stages to learn the
+    coalesced count, and the byte estimate no longer measures the
+    downstream work."""
+    sc = df.sparkSession.sparkContext
+    try:
+        n = df.rdd.getNumPartitions()
+    except Exception:  # pragma: no cover — defensive; keep the input
+        return df
+    p = sc.defaultParallelism
+    if n >= p:
+        return df
+    try:
+        est = int(str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
+        want = min(p, max(1, math.ceil(est / _SPREAD_TARGET_BYTES)))
+    except Exception:  # pragma: no cover — stats unavailable
+        want = p
+    if n < want:
+        return df.repartition(want)
+    return df
 
 
 def observed_metrics(df: DataFrame) -> dict[str, dict]:

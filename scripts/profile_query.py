@@ -6,12 +6,12 @@ jobs is named rather than guessed.
 Usage:
     python scripts/profile_query.py <query> --sf=DIR [--reps=N] [--conf=k=v ...]
 
-``--conf`` sets runtime SQL settings on the session. Each rep runs
-under its own job group and prints one row per job (start offset,
-duration, stages, tasks, executor CPU, GC, shuffle write, spill), then
-the rep's wall time split into the union of its job intervals and the
-driver gap (wall time during which no Spark job ran: Python, plan
-building, Catalyst planning, scheduling).
+``--conf`` sets runtime SQL settings on the session. Each rep prints
+one row per job started inside its wall window, stream-thread jobs
+included (start offset, duration, stages, tasks, executor CPU, GC,
+shuffle write, spill), then the rep's wall time split into the union
+of its job intervals and the driver gap (wall time during which no
+Spark job ran: Python, plan building, Catalyst planning, scheduling).
 """
 
 from __future__ import annotations
@@ -60,25 +60,23 @@ def main() -> None:
 
         reps = []
         for rep in range(args.reps):
-            group = f"{args.query}:{rep}"
-            spark.sparkContext.setJobGroup(group, group)
             t0 = time.time()
             query(spark, args.sf).write.format("noop").mode("overwrite").save()
-            reps.append((group, t0, time.time()))
+            reps.append((f"{args.query}:{rep}", t0, time.time()))
             spark.catalog.clearCache()
         app_id = spark.sparkContext.applicationId
         spark.stop()  # closes the event log under its final name
         log = read_event_log(os.path.join(evlog, app_id))
 
-    for group, t0, t1 in reps:
+    for label, t0, t1 in reps:
         c = spark_counters(log, t0, t1)
         gap = driver_gap_s(log, t0, t1)
-        print(f"\n=== {group}: wall {t1 - t0:.2f}s = jobs {t1 - t0 - gap:.2f}s "
+        print(f"\n=== {label}: wall {t1 - t0:.2f}s = jobs {t1 - t0 - gap:.2f}s "
               f"+ driver gap {gap:.2f}s; {c['jobs']} jobs, {c['tasks']} tasks, "
               f"cpu {c['executor_cpu_s']:.2f}s, gc {c['gc_s']:.2f}s ===")
         print(f"{'job':>5} {'at_s':>7} {'dur_s':>7} {'stg':>4} {'tasks':>6} "
               f"{'cpu_s':>7} {'gc_s':>6} {'shW_mb':>8} {'spill_mb':>8}")
-        for j in sorted(log.in_group(group), key=lambda j: j.start):
+        for j in sorted(log.within(t0, t1), key=lambda j: j.start):
             print(f"{j.id:>5} {j.start - t0:>7.2f} {j.end - j.start:>7.2f} "
                   f"{len(j.stages):>4} {j.tasks:>6} {j.cpu_s:>7.2f} {j.gc_s:>6.2f} "
                   f"{j.shuffle_write / 2**20:>8.2f} {j.spill / 2**20:>8.2f}")

@@ -2458,60 +2458,6 @@ class TestCompactionReappliesFloodCap:
         assert spark.read.parquet(f"{hist}/index/c=1").count() == 6
 
 
-class TestSpreadBatchSizeAware:
-    """r12: _spread_batch spreads proportional to estimated input
-    bytes, not blindly to defaultParallelism — a KB-scale single-file
-    micro-batch must be left alone (the r11 blanket spread made the
-    two big gates anti-scale with cores at the driver), while a batch
-    whose estimated bytes exceed the per-task grain still fans out."""
-
-    def test_tiny_batch_not_spread(self, spark, tmp_path):
-        from pd_utils_spark.streaming.stateful import _spread_batch
-
-        p = str(tmp_path / "tiny")
-        spark.range(100).coalesce(1).write.parquet(p)
-        df = spark.read.parquet(p)
-        n_in = df.rdd.getNumPartitions()
-        out = _spread_batch(df)
-        # a KB-sized batch is far under the 4 MiB/task grain: no spread
-        assert out.rdd.getNumPartitions() == n_in
-
-    def test_large_estimate_spreads_to_parallelism(
-        self, spark, tmp_path, monkeypatch
-    ):
-        from pd_utils_spark.streaming import stateful
-        from pd_utils_spark.streaming.stateful import _spread_batch
-
-        p = str(tmp_path / "grain")
-        spark.range(100).coalesce(1).write.parquet(p)
-        df = spark.read.parquet(p)
-        # 1-byte grain: every batch's estimate exceeds it -> full fan
-        monkeypatch.setattr(stateful, "_SPREAD_TARGET_BYTES", 1)
-        out = _spread_batch(df)
-        assert (
-            out.rdd.getNumPartitions()
-            == spark.sparkContext.defaultParallelism
-        )
-
-    def test_grain_scales_partition_count(self, spark, tmp_path, monkeypatch):
-        from pd_utils_spark.streaming import stateful
-        from pd_utils_spark.streaming.stateful import _spread_batch
-
-        p = str(tmp_path / "mid")
-        spark.range(1000).coalesce(1).write.parquet(p)
-        df = spark.read.parquet(p)
-        est = int(
-            str(
-                df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-            )
-        )
-        assert est > 0
-        # grain = half the estimate -> exactly ceil(est/grain) = 2 parts
-        monkeypatch.setattr(stateful, "_SPREAD_TARGET_BYTES", (est + 1) // 2)
-        out = _spread_batch(df)
-        assert out.rdd.getNumPartitions() == 2
-
-
 class TestRecapValidationAndPolicy:
     """r12 (ADVICE r11): cap values that would wipe the folded state
     fail loudly, recap=False is the explicit lossless override for a
