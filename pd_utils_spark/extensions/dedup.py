@@ -29,16 +29,11 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from pd_utils_spark.extensions.text import _tokens
-from pd_utils_spark.utils import materialize, reliable_checkpoints
+from pd_utils_spark.utils import materialize, quote, reliable_checkpoints
 
 
 def _norm(textcol: Column) -> Column:
     return F.trim(F.regexp_replace(F.lower(textcol), r"\s+", " "))
-
-
-def _q(name: str) -> str:
-    """Backtick-quote a column name for SQL expression text."""
-    return "`" + name.replace("`", "``") + "`"
 
 
 _MERSENNE_P = (1 << 31) - 1
@@ -114,8 +109,8 @@ def shingle_sets(
     same expressions as :func:`_norm` / :func:`_shingles_from_toks`:
     one py4j round trip per projection instead of one per ``Column``
     node — the micro-batch gates build this plan every trigger."""
-    idq = _q(idcol)
-    norm = rf"trim(regexp_replace(lower({_q(textcol)}), '\\s+', ' '))"
+    idq = quote(idcol)
+    norm = rf"trim(regexp_replace(lower({quote(textcol)}), '\\s+', ' '))"
     toked = df.selectExpr(
         idq, f"{norm} AS __norm__", rf"split(trim({norm}), '\\s+') AS __toks__"
     )
@@ -123,7 +118,7 @@ def shingle_sets(
         idq,
         f"array_distinct(CASE WHEN size(__toks__) >= {k} THEN transform("
         f"sequence(1, size(__toks__) - {k - 1}), __i -> concat_ws(' ', "
-        f"slice(__toks__, __i, {k}))) ELSE array(__norm__) END) AS {_q(out)}",
+        f"slice(__toks__, __i, {k}))) ELSE array(__norm__) END) AS {quote(out)}",
     )
 
 
@@ -481,7 +476,7 @@ def _minhash_sig_table(
     )
     return (
         shingles.selectExpr(
-            f"{_q(idcol)} AS __mh_id__", f"explode({_q(shcol)}) AS __s__"
+            f"{quote(idcol)} AS __mh_id__", f"explode({quote(shcol)}) AS __s__"
         )
         .selectExpr(
             "__mh_id__",
@@ -489,7 +484,7 @@ def _minhash_sig_table(
             " & 2147483647 AS __b__",
         )
         .groupBy("__mh_id__")
-        .agg(F.expr(f"array({mins}) AS {_q(out)}"))
+        .agg(F.expr(f"array({mins}) AS {quote(out)}"))
     )
 
 
@@ -806,14 +801,14 @@ def lsh_band_keys(
     One ``selectExpr`` over SQL text (an ``inline`` of the per-band
     structs): one py4j round trip builds the plan, whatever
     ``bands`` is."""
-    sig = _q(sigcol)
+    sig = quote(sigcol)
     rows_per_band = f"CAST(size({sig}) / {bands} AS INT)"  # validated by caller
     banded = (
         f"transform(sequence(0, {bands - 1}), __bi -> named_struct('band', __bi, "
         f"'key', md5(concat_ws('|', slice({sig}, __bi * {rows_per_band} + 1, "
         f"{rows_per_band})))))"
     )
-    return df.selectExpr("*", f"inline({banded}) AS ({_q(out_band)}, {_q(out_key)})")
+    return df.selectExpr("*", f"inline({banded}) AS ({quote(out_band)}, {quote(out_key)})")
 
 
 _CAP_COUNT = [0]
@@ -874,7 +869,7 @@ def _cap_buckets(
             nparts = spark.sparkContext.defaultParallelism
         frame = frame.repartition(nparts, *key_cols)
     _CAP_COUNT[0] += 1
-    keys = ", ".join(_q(c) for c in key_cols)
+    keys = ", ".join(quote(c) for c in key_cols)
     counted = frame.withColumn(
         "__n__", F.expr(f"count(1) OVER (PARTITION BY {keys})")
     ).observe(
@@ -934,7 +929,7 @@ def _band_key_table(
     :func:`~pd_utils_spark.utils.query_scope`."""
     sigs = _minhash_sig_table(shingles, idcol, num_hashes)
     return lsh_band_keys(sigs, bands=bands).selectExpr(
-        f"__mh_id__ AS {_q(idcol)}", "band", "band_key"
+        f"__mh_id__ AS {quote(idcol)}", "band", "band_key"
     )
 
 
@@ -955,7 +950,7 @@ def _lsh_pairs(
     # eager localCheckpoint ran a full job at plan-construction time
     # and its truncated lineage was unrecoverable on executor loss.
     keyed = materialize(keyed)
-    idq = _q(idcol)
+    idq = quote(idcol)
     return (
         keyed.alias("a")
         .join(
@@ -985,7 +980,7 @@ def jaccard_pairs(
     ``shingle_sets`` frame to share shingle construction."""
     if shingles is None:
         shingles = shingle_sets(df, textcol, idcol, k)
-    idq = _q(idcol)
+    idq = quote(idcol)
     return (
         pairs.join(shingles.selectExpr(f"{idq} AS id_a", "shingles AS __sa__"), "id_a")
         .join(shingles.selectExpr(f"{idq} AS id_b", "shingles AS __sb__"), "id_b")
@@ -1098,7 +1093,7 @@ def _dedup_minhash_lsh_parts(
     # persisted (guide §7.2): when ``df`` is a UNION, the left-anti
     # join is pushed through it and each branch re-runs the whole
     # LSH-candidate + Jaccard-verify pipeline; the id frame is tiny
-    losers = materialize(sim.selectExpr(f"id_b AS {_q(idcol)}").distinct())
+    losers = materialize(sim.selectExpr(f"id_b AS {quote(idcol)}").distinct())
     return df.join(losers, idcol, "left_anti"), sh, keys, losers
 
 
@@ -1215,7 +1210,7 @@ def minhash_history_frames(
         )
     return {
         "keys": keys,
-        "shingles": shingles.selectExpr(f"{_q(idcol)} AS __hid__", "shingles"),
+        "shingles": shingles.selectExpr(f"{quote(idcol)} AS __hid__", "shingles"),
     }
 
 
@@ -1273,7 +1268,7 @@ def dedup_minhash_against_index(
         {"k": k, "num_hashes": num_hashes, "bands": bands},
         "minhash_history_frames",
     )
-    idq = _q(idcol)
+    idq = quote(idcol)
     if batch_shingles is None:
         batch_shingles = shingle_sets(df, textcol, idcol, k)
     if batch_keys is None:

@@ -7,7 +7,11 @@ DataFrame transformation; Catalyst plans the shuffles.
 Scale notes (100 TB posture):
 - ``groupby_merge`` uses window aggregates (one shuffle on ``byvars``,
   no join) instead of the reference's groupby+merge (two shuffles).
-- ``left_merge_latest`` keeps the equi keys inside the join condition so
+- The three as-of joins (``left_merge_latest`` backward,
+  ``left_merge_soonest`` forward, ``left_merge_nearest``) share one core,
+  ``_asof``: a distinct-left x right equi join, a direction filter and
+  a ``max_offset`` bound, one rank-1 window over (keys, left date), and
+  one left join back. The equi keys stay inside the join condition so
   the planner picks broadcast/sort-merge on the keys; the date predicate
   is a post-join filter, never a cartesian nested loop.
 """
@@ -504,6 +508,58 @@ def _asof_candidates(df, df2, on, left_datevar, right_datevar):
     return df2, right_datevar, payload_cols, many
 
 
+def _asof(df, df2, on, left_datevar, right_datevar, max_offset, direction):
+    """The one as-of join behind :func:`left_merge_latest`
+    (``direction="backward"``), :func:`left_merge_soonest`
+    (``"forward"``) and :func:`left_merge_nearest` (``"nearest"``).
+
+    Plan shape: distinct left (keys, date) -> equi join on the keys
+    (Catalyst picks broadcast vs sort-merge) -> direction filter
+    (backward ``r <= l``, forward ``r >= l``, nearest none) ->
+    ``max_offset`` bound in the date domain (``l - max_offset <= r`` for
+    backward and nearest, ``r <= l + max_offset`` for forward and
+    nearest) -> one ``rank() == 1`` window over (keys, left date) ->
+    left join onto the input. The window orders by ``r`` descending
+    (backward), ascending (forward), or by distance then side, backward
+    first (nearest), so rank keeps every tied best row. Equi keys always
+    stay in the join condition, so the date predicate never degrades the
+    join to a nested loop; all-null keys never match and the left row
+    is kept with null payload."""
+    on = to_list(on)
+    df2, right_datevar, payload_cols, many = _asof_candidates(
+        df, df2, on, left_datevar, right_datevar
+    )
+    lcol, rcol = F.col(left_datevar), F.col(right_datevar)
+    if direction == "backward":
+        many = many.filter(rcol <= lcol)
+    elif direction == "forward":
+        many = many.filter(rcol >= lcol)
+    if max_offset is not None:
+        if direction != "forward":
+            many = many.filter(rcol >= lcol - F.lit(max_offset))
+        if direction != "backward":
+            many = many.filter(rcol <= lcol + F.lit(max_offset))
+    if direction == "backward":
+        order = [rcol.desc()]
+    elif direction == "forward":
+        order = [rcol]
+    else:
+        ltype = dict(df.dtypes)[left_datevar]
+        if ltype.startswith("timestamp") or ltype == "date":
+            l_num = F.unix_micros(lcol.cast("timestamp"))
+            r_num = F.unix_micros(rcol.cast("timestamp"))
+        else:
+            l_num, r_num = lcol.cast("double"), rcol.cast("double")
+        order = [F.abs(l_num - r_num), F.when(rcol <= lcol, 0).otherwise(1)]
+    w = Window.partitionBy(*on, left_datevar).orderBy(*order)
+    best = many.withColumn("__rk__", F.rank().over(w)).filter(F.col("__rk__") == 1)
+    # reference column order: on, left date, right date, payload
+    ordered = on + [left_datevar, right_datevar] + [
+        c for c in payload_cols if c != right_datevar
+    ]
+    return df.join(best.select(*ordered), on=on + [left_datevar], how="left")
+
+
 def left_merge_soonest(
     df: DataFrame,
     df2: DataFrame,
@@ -525,23 +581,7 @@ def left_merge_soonest(
     shared (keys, left date) partitioning — equi keys stay in the join
     condition, never a nested loop.
     """
-    from pyspark.sql import Window
-
-    on = to_list(on)
-    df2, right_datevar, payload_cols, many = _asof_candidates(
-        df, df2, on, left_datevar, right_datevar
-    )
-    ge = many.filter(F.col(right_datevar) >= F.col(left_datevar))
-    if max_offset is not None:
-        ge = ge.filter(
-            F.col(right_datevar) <= F.col(left_datevar) + F.lit(max_offset)
-        )
-    w = Window.partitionBy(*on, left_datevar).orderBy(F.col(right_datevar))
-    best = ge.withColumn("__rk__", F.rank().over(w)).filter(F.col("__rk__") == 1)
-    ordered = on + [left_datevar, right_datevar] + [
-        c for c in payload_cols if c != right_datevar
-    ]
-    return df.join(best.select(*ordered), on=on + [left_datevar], how="left")
+    return _asof(df, df2, on, left_datevar, right_datevar, max_offset, "forward")
 
 
 def left_merge_nearest(
@@ -556,48 +596,16 @@ def left_merge_nearest(
     closest to the left date in EITHER direction within the equi-key
     ``on``; on a distance tie the BACKWARD row wins (pandas
     ``merge_asof(direction='nearest')`` convention). ``max_offset``
-    bounds the distance both ways. Ties at the same distance and side
-    keep all rows.
+    bounds the distance both ways, in the date domain like the other
+    directions (a number for numeric date columns, a
+    ``datetime.timedelta`` or INTERVAL for timestamps). Ties at the same
+    distance and side keep all rows.
 
     Distance is computed on the raw values for numerics and on
     microsecond epochs for timestamps, so sub-second differences order
     correctly. Same single-window plan shape as the other directions.
     """
-    from pyspark.sql import Window
-
-    on = to_list(on)
-    df2, right_datevar, payload_cols, many = _asof_candidates(
-        df, df2, on, left_datevar, right_datevar
-    )
-    ltype = dict(df.dtypes)[left_datevar]
-    if ltype.startswith("timestamp") or ltype == "date":
-        l_num = F.unix_micros(F.col(left_datevar).cast("timestamp"))
-        r_num = F.unix_micros(F.col(right_datevar).cast("timestamp"))
-    else:
-        l_num = F.col(left_datevar).cast("double")
-        r_num = F.col(right_datevar).cast("double")
-    dist = F.abs(l_num - r_num)
-    scored = many.withColumn("__dist__", dist).withColumn(
-        "__side__", F.when(F.col(right_datevar) <= F.col(left_datevar), 0).otherwise(1)
-    )
-    if max_offset is not None:
-        if isinstance(max_offset, (int, float)):
-            scored = scored.filter(F.col("__dist__") <= F.lit(float(max_offset)))
-        else:  # timedelta / INTERVAL: compare in the date domain
-            scored = scored.filter(
-                (F.col(right_datevar) >= F.col(left_datevar) - F.lit(max_offset))
-                & (F.col(right_datevar) <= F.col(left_datevar) + F.lit(max_offset))
-            )
-    w = Window.partitionBy(*on, left_datevar).orderBy("__dist__", "__side__")
-    best = (
-        scored.withColumn("__rk__", F.rank().over(w))
-        .filter(F.col("__rk__") == 1)
-        .drop("__dist__", "__side__", "__rk__")
-    )
-    ordered = on + [left_datevar, right_datevar] + [
-        c for c in payload_cols if c != right_datevar
-    ]
-    return df.join(best.select(*ordered), on=on + [left_datevar], how="left")
+    return _asof(df, df2, on, left_datevar, right_datevar, max_offset, "nearest")
 
 
 def left_merge_latest(
@@ -625,41 +633,19 @@ def left_merge_latest(
     (duplicating left rows), exactly like the reference's merge-back.
 
     Plan shape: distinct left (keys, date) -> equi join on keys (Catalyst
-    picks broadcast vs sort-merge) -> theta filter -> per-(keys, date)
-    max -> join back for payload -> left join onto the input. The equi
-    keys always stay in the join condition; the date predicate never
-    degrades the join to a nested loop. All-null keys never match and the
-    left row is kept with null payload.
+    picks broadcast vs sort-merge) -> theta filter -> one rank-1 window
+    over (keys, left date), ordered by right date descending -> left
+    join onto the input: two joins, one aggregate (the distinct left
+    keys) and one window, where the reference's per-key max plus
+    merge-back needs a second aggregate and a self-join. The equi keys
+    always stay in the join condition; the date predicate never degrades
+    the join to a nested loop. All-null keys never match and the left
+    row is kept with null payload.
 
     ``backend``/``low_memory`` are accepted for API parity and ignored —
     Spark spills, and there is only one engine.
     """
-    on = to_list(on)
-
-    rename = left_datevar == right_datevar
-    if rename:
-        df2 = df2.withColumnRenamed(right_datevar, right_datevar + "_y")
-        right_datevar = right_datevar + "_y"
-
-    payload_cols = [c for c in df2.columns if c not in on]
-
-    lefts = df.select(*on, left_datevar).distinct()
-    many = lefts.join(df2, on=on, how="inner")
-    lt = many.filter(F.col(left_datevar) >= F.col(right_datevar))
-    if max_offset is not None:
-        if isinstance(max_offset, (int, float)):
-            lo = F.col(left_datevar) - F.lit(max_offset)
-        else:
-            # datetime.timedelta or INTERVAL-like
-            lo = F.col(left_datevar) - F.lit(max_offset)
-        lt = lt.filter(F.col(right_datevar) >= lo)
-
-    maxes = lt.groupBy(*on, left_datevar).agg(F.max(right_datevar).alias(right_datevar))
-    data_rows = maxes.join(lt, on=on + [left_datevar, right_datevar], how="left")
-    # restore reference column order: on, left date, right date, payload
-    ordered = on + [left_datevar, right_datevar] + [c for c in payload_cols if c != right_datevar]
-    data_rows = data_rows.select(*ordered)
-    return df.join(data_rows, on=on + [left_datevar], how="left")
+    return _asof(df, df2, on, left_datevar, right_datevar, max_offset, "backward")
 
 
 def linkage_score(

@@ -96,7 +96,10 @@ def _temp_dirs(name):
         "streaming_running_agg",
     ],
 )
-def test_row_leaves_no_session_state(spark, row):
+def test_row_leaves_no_session_state(spark, row, tmp_path, monkeypatch):
+    # the row's temp dirs go under this test's own dir, so another
+    # process running the same row cannot leave dirs that look like ours
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
     tables = sorted(t.name for t in spark.catalog.listTables())
     active = sorted(q.id for q in spark.streams.active)
     out = entry.queries()[row](spark, SF)

@@ -965,10 +965,17 @@ class TestFlagOutliers:
             pus.flag_outliers(spark.createDataFrame(self.data), method="tukey")
 
 
+ASOF = {
+    "backward": pus.left_merge_latest,
+    "forward": pus.left_merge_soonest,
+    "nearest": pus.left_merge_nearest,
+}
+
+
 class TestAsofDirections:
-    """left_merge_soonest / left_merge_nearest verified directly
-    against pandas merge_asof (the semantics oracle for all three
-    as-of directions)."""
+    """left_merge_latest / left_merge_soonest / left_merge_nearest
+    verified directly against pandas merge_asof (the semantics oracle
+    for all three as-of directions), with and without a bound."""
 
     def _frames(self, spark):
         import numpy as np
@@ -1001,45 +1008,29 @@ class TestAsofDirections:
         )
         return out.sort_values(["id", "t"]).reset_index(drop=True)
 
-    def test_forward_matches_pandas(self, spark):
-        left, right = self._frames(spark)
+    def _check(self, spark, left, right, direction, max_offset=None, tolerance=None):
         got = (
-            pus.left_merge_soonest(
+            ASOF[direction](
                 spark.createDataFrame(left),
                 spark.createDataFrame(right),
-                on="id",
-                left_datevar="t",
-                right_datevar="t",
+                on="id", left_datevar="t", right_datevar="t", max_offset=max_offset,
             )
-            .toPandas()
-            .sort_values(["id", "t"])
-            .reset_index(drop=True)
+            .toPandas().sort_values(["id", "t"]).reset_index(drop=True)
         )
-        expect = self._pandas_asof(left, right, "forward")
+        expect = self._pandas_asof(left, right, direction, tolerance=tolerance)
         pd.testing.assert_frame_equal(
             got[["id", "t", "t_y", "val"]], expect[["id", "t", "t_y", "val"]],
             check_dtype=False,
         )
 
+    def test_backward_matches_pandas(self, spark):
+        self._check(spark, *self._frames(spark), "backward")
+
+    def test_forward_matches_pandas(self, spark):
+        self._check(spark, *self._frames(spark), "forward")
+
     def test_nearest_matches_pandas(self, spark):
-        left, right = self._frames(spark)
-        got = (
-            pus.left_merge_nearest(
-                spark.createDataFrame(left),
-                spark.createDataFrame(right),
-                on="id",
-                left_datevar="t",
-                right_datevar="t",
-            )
-            .toPandas()
-            .sort_values(["id", "t"])
-            .reset_index(drop=True)
-        )
-        expect = self._pandas_asof(left, right, "nearest")
-        pd.testing.assert_frame_equal(
-            got[["id", "t", "t_y", "val"]], expect[["id", "t", "t_y", "val"]],
-            check_dtype=False,
-        )
+        self._check(spark, *self._frames(spark), "nearest")
 
     def test_nearest_tie_prefers_backward(self, spark):
         left = spark.createDataFrame(pd.DataFrame({"id": [1], "t": [10]}))
@@ -1051,31 +1042,22 @@ class TestAsofDirections:
 
     def test_max_offset_bounds_both_directions(self, spark):
         left, right = self._frames(spark)
-        got = (
-            pus.left_merge_soonest(
-                spark.createDataFrame(left),
-                spark.createDataFrame(right),
-                on="id", left_datevar="t", right_datevar="t", max_offset=10,
-            )
-            .toPandas().sort_values(["id", "t"]).reset_index(drop=True)
-        )
-        expect = self._pandas_asof(left, right, "forward", tolerance=10)
-        pd.testing.assert_frame_equal(
-            got[["id", "t", "t_y", "val"]], expect[["id", "t", "t_y", "val"]],
-            check_dtype=False,
-        )
-        gotn = (
-            pus.left_merge_nearest(
-                spark.createDataFrame(left),
-                spark.createDataFrame(right),
-                on="id", left_datevar="t", right_datevar="t", max_offset=10,
-            )
-            .toPandas().sort_values(["id", "t"]).reset_index(drop=True)
-        )
-        expectn = self._pandas_asof(left, right, "nearest", tolerance=10)
-        pd.testing.assert_frame_equal(
-            gotn[["id", "t", "t_y", "val"]], expectn[["id", "t", "t_y", "val"]],
-            check_dtype=False,
+        for direction in sorted(ASOF):
+            self._check(spark, left, right, direction, max_offset=10, tolerance=10)
+
+    @pytest.mark.parametrize("direction", sorted(ASOF))
+    def test_timedelta_max_offset_matches_pandas(self, spark, direction):
+        """Timestamp dates bounded by a ``timedelta``: the date-domain
+        bound of every direction is pandas' ``tolerance``."""
+        import datetime
+
+        left, right = self._frames(spark)
+        epoch = pd.Timestamp("2020-01-01")
+        left["t"] = epoch + pd.to_timedelta(left.t, unit="h")
+        right["t"] = epoch + pd.to_timedelta(right.t, unit="h")
+        self._check(
+            spark, left, right, direction,
+            max_offset=datetime.timedelta(hours=10), tolerance=pd.Timedelta(hours=10),
         )
 
 

@@ -6,8 +6,10 @@ cannot."""
 
 from __future__ import annotations
 
+import collections
 import contextlib
 import io
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -173,16 +175,29 @@ class TestCorrelatedSubquery:
 
 class TestJoinShapes:
     def test_asof_join_keeps_equi_keys(self, spark):
+        """All three as-of directions share one plan: the distinct-left
+        x right equi join, one rank-1 window, one join back."""
         ev = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
         left = ev.select("o_custkey", "o_orderkey")
         right = ev.select("o_custkey", F.col("o_orderkey").alias("rk"), "o_totalprice")
-        out = pus.left_merge_latest(
-            left, right, on="o_custkey", left_datevar="o_orderkey", right_datevar="rk"
-        )
-        plan = plan_of(out)
-        assert "CartesianProduct" not in plan
-        # every join keyed on the equi column
-        assert "o_custkey" in plan
+        for fn in (pus.left_merge_latest, pus.left_merge_soonest, pus.left_merge_nearest):
+            out = fn(
+                left, right, on="o_custkey", left_datevar="o_orderkey", right_datevar="rk"
+            )
+            plan = plan_of(out)
+            assert "CartesianProduct" not in plan
+            # every join keyed on the equi column
+            assert "o_custkey" in plan
+            nodes = collections.Counter(
+                re.findall(
+                    r"^[\s:+|-]*(\w+)",
+                    out._jdf.queryExecution().optimizedPlan().toString(),
+                    re.M,
+                )
+            )
+            # the distinct left keys are the one aggregate
+            shape = {k: nodes[k] for k in ("Join", "Aggregate", "Window")}
+            assert shape == {"Join": 2, "Aggregate": 1, "Window": 1}, (fn.__name__, nodes)
 
     def test_dimension_completion_broadcasts(self, spark, li):
         counts = li.groupBy("l_returnflag", "l_linestatus").agg(

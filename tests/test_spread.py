@@ -77,6 +77,26 @@ def test_spread_of_a_scan_starts_no_job(spark, tmp_path, monkeypatch):
     assert job_ids() > before
 
 
+def test_spread_of_a_one_partition_estimate_skips_the_rdd(
+    spark, tmp_path, monkeypatch
+):
+    """An input whose estimate wants one partition comes back as is,
+    without reading its partition count through ``DataFrame.rdd`` (a
+    Python-RDD conversion that plans the query on the driver)."""
+    from pyspark.sql import DataFrame
+
+    df = _one_file(spark, tmp_path, 100)
+    touched = []
+
+    def no_rdd(self):
+        touched.append(self)
+        raise AssertionError("spread read DataFrame.rdd")
+
+    monkeypatch.setattr(DataFrame, "rdd", property(no_rdd))
+    assert spread(df) is df
+    assert touched == []
+
+
 ALLOWED = {
     ("pd_utils_spark/utils.py", "spread"),
     ("__spark_entry__.py", "_entity_corpus"),
